@@ -7,9 +7,11 @@
 - :class:`ModelContext` — the resolution surface handed to model
   functions: ``ref()`` (with deferral to a state manifest's relations,
   B34), ``source()``, ``is_incremental()`` + ``this`` (B12).
-- :class:`Runner` — topological execution in waves with a thread pool
-  (``threads: 4``, profiles.yml:11; B36) under Spark's FAIR scheduler,
-  pre/post hooks (B37), state:modified selection (B33), and state
+- :class:`Runner` — dependency-driven execution: nodes run from a ready
+  queue on a ``threads``-sized pool (``threads: 4``, profiles.yml:11;
+  B36) under Spark's FAIR scheduler, each starting once its parents (and
+  their tests) finish; ``execution_waves`` only fixes the ledger order.
+  Pre/post hooks (B37), state:modified selection (B33), and state
   manifest publication (B35). ``compile()`` analyzes every model without
   writing (dbt compile, §3.2) — Spark's lazy analysis makes this free.
 """
@@ -18,12 +20,13 @@ from __future__ import annotations
 
 import traceback
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_ci_demo_spark.operators.materialize import Warehouse
+from dbt_ci_demo_spark.operators.materialize import Warehouse, read_relation
 from dbt_ci_demo_spark.operators.quality import run_test_harness
 from dbt_ci_demo_spark.plans.graph import ModelGraph
 from dbt_ci_demo_spark.plans.model import Model
@@ -75,13 +78,16 @@ class ModelContext:
     def ref(self, name: str) -> DataFrame:
         """Resolve an upstream model. Deferral (B34): if the upstream was
         not selected this run and a state manifest records its production
-        relation, read that relation instead of the target namespace."""
+        relation ``<db>.<name>``, read that relation instead of the target
+        namespace — resolved like Warehouse.read, so a DataFrame-defined
+        view parent (a session view) defers too."""
         if (
             self._defer_state is not None
             and name not in self._selected
             and self._defer_state.relation(name)
         ):
-            return self.spark.table(self._defer_state.relation(name))
+            database, _, table = self._defer_state.relation(name).rpartition(".")
+            return read_relation(self.spark, database, table)
         return self._warehouse.read(name)
 
     def is_incremental(self) -> bool:
@@ -128,7 +134,8 @@ class BuildStep:
     # nodes: TABLE rows after the run (a full count of the target — for
     # incremental models that is total state, not this run's delta, and
     # for views it re-executes the view plan; the count only runs in
-    # build-steps mode). tests: failure count from the harness.
+    # build-steps mode, inside the node's queue task, before its tests
+    # and before any child starts). tests: failure count from the harness.
     n_rows: int | None = None
 
 
@@ -174,13 +181,14 @@ class Runner:
         tests: dict[str, list[tuple[str, Callable[[DataFrame], DataFrame]]]] | None = None,
         build_steps: list[BuildStep] | None = None,
     ) -> dict[str, RunResult]:
-        """Run the selected DAG. With ``tests``/``build_steps`` this is
-        ``dbt build`` (see :class:`BuildStep`): each node's tests run
-        immediately after the node materializes (post-wave, wave order),
-        a hard test failure (should_error) SKIPS every downstream node —
-        the behavioral contract distinguishing `dbt build` from
-        `dbt run; dbt test` — and every resource lands as an ordered
-        step with its written-row / failure count.
+        """Run the selected DAG from a ready queue: each node is one task
+        on a ``threads``-sized pool, started once all its selected parents'
+        tasks finish (B36). With ``tests``/``build_steps`` this is ``dbt
+        build`` (see :class:`BuildStep`): the task also counts the node's
+        rows and runs its tests, and a hard test failure (should_error)
+        SKIPS every downstream node — the contract distinguishing `dbt
+        build` from `dbt run; dbt test`. Steps land in ``execution_waves``
+        order whatever the completion order.
 
         ``state_out`` publishes old-state ∪ this run's built nodes. Like
         the reference — which commits manifest.json only from full
@@ -194,8 +202,10 @@ class Runner:
         if tests is not None and build_steps is None:
             build_steps = []  # tests imply build-mode bookkeeping
         results: dict[str, RunResult] = {}
+        node_steps: dict[str, list[tuple]] = {}  # node -> its ledger rows, unnumbered
         test_failed: set[str] = set()
         new_state = StateManifest(dict(state.nodes) if state else {})
+        jsc = self.spark.sparkContext._jsc.sc()
 
         def run_one(name: str) -> RunResult:
             m = self.models[name]
@@ -229,87 +239,83 @@ class Runner:
             except Exception as e:  # noqa: BLE001
                 return RunResult(name, "error", error=f"{e}\n{traceback.format_exc()}")
 
-        def record_wave(wave: list[str]) -> None:
-            """dbt build bookkeeping: ordered steps + tests-after-node."""
-            for name in wave:
-                res = results[name]
-                m = self.models[name]
-                rtype = (
-                    m.config.materialized
-                    if m.config.materialized in ("seed", "snapshot")
-                    else "model"
-                )
-                n_rows = None
-                if res.status == "success":
-                    try:
-                        n_rows = self.warehouse.read(name).count()
-                    except Exception as e:  # noqa: BLE001
-                        # A successfully-materialized relation that cannot
-                        # be read back is a broken node, not a bookkeeping
-                        # detail (r12 review): unguarded, this count
-                        # ABORTED the whole build mid-ledger (later waves,
-                        # remaining steps and the state publication all
-                        # lost). Demote the node to error so downstream
-                        # skips, and keep building.
-                        results[name] = res = RunResult(
-                            name, "error", error=f"post-build read failed: {e}"
-                        )
-                        # run_one already recorded the node into new_state
-                        # (checksum + relation) before this demotion — left
-                        # there, state_out would publish the BROKEN node as
-                        # current, so the next state:modified run treats it
-                        # as unmodified (never rebuilt) and --defer resolves
-                        # refs to the unreadable relation (ADVICE r12).
-                        # Restore the prior manifest entry if one exists
-                        # (defer keeps pointing at the last GOOD relation),
-                        # else drop it so the next run sees the node as new.
-                        if state is not None and name in state.nodes:
-                            new_state.nodes[name] = state.nodes[name]
-                        else:
-                            new_state.nodes.pop(name, None)
-                build_steps.append(
-                    BuildStep(len(build_steps) + 1, name, rtype, res.status, n_rows)
-                )
-                if res.status != "success":
-                    continue
-                for test_name, test_fn in (tests or {}).get(name, []):
-                    try:
-                        _, tr = run_test_harness(test_fn(self.warehouse.read(name)))
-                        status = "fail" if tr.should_error else "pass"
-                        failures = tr.failures
-                        if tr.should_error:
-                            test_failed.add(name)
-                    except Exception:  # noqa: BLE001
-                        # A test that ERRORS (bad column, bad SQL) must not
-                        # abort the build: dbt records an `error` step and
-                        # skips downstream of the tested node, same as a
-                        # hard failure; later waves and the state manifest
-                        # still land. (`error` was documented on BuildStep
-                        # but unreachable before this branch.)
-                        status, failures = "error", None
-                        test_failed.add(name)
-                    build_steps.append(
-                        BuildStep(
-                            len(build_steps) + 1, test_name, "test", status, failures
-                        )
+        def run_node(name: str) -> None:
+            # One queue task: the node, then its dbt build bookkeeping. Every
+            # task inherits the SAME Properties object; copy it so the SQL
+            # execution ids and job tags Spark sets per query stay private.
+            jsc.setLocalProperties(jsc.getLocalProperties().clone())
+            results[name] = res = run_one(name)
+            if build_steps is None:
+                return
+            mat = self.models[name].config.materialized
+            rtype = mat if mat in ("seed", "snapshot") else "model"
+            n_rows = None
+            if res.status == "success":
+                try:
+                    n_rows = self.warehouse.read(name).count()
+                except Exception as e:  # noqa: BLE001
+                    # A materialized relation that cannot be read back is
+                    # a broken node (r12 review): demote it to error so
+                    # downstream skips, and keep building — the ledger
+                    # and the state publication still land.
+                    results[name] = res = RunResult(
+                        name, "error", error=f"post-build read failed: {e}"
                     )
+                    # run_one already recorded the node into new_state
+                    # (checksum + relation) before this demotion — left
+                    # there, state_out would publish the BROKEN node as
+                    # current, so the next state:modified run treats it
+                    # as unmodified (never rebuilt) and --defer resolves
+                    # refs to the unreadable relation (ADVICE r12).
+                    # Restore the prior manifest entry if one exists
+                    # (defer keeps pointing at the last GOOD relation),
+                    # else drop it so the next run sees the node as new.
+                    if state is not None and name in state.nodes:
+                        new_state.nodes[name] = state.nodes[name]
+                    else:
+                        new_state.nodes.pop(name, None)
+            steps = node_steps[name] = [(name, rtype, res.status, n_rows)]
+            if res.status != "success":
+                return
+            for test_name, test_fn in (tests or {}).get(name, []):
+                try:
+                    _, tr = run_test_harness(test_fn(self.warehouse.read(name)))
+                    status = "fail" if tr.should_error else "pass"
+                    failures = tr.failures
+                    if tr.should_error:
+                        test_failed.add(name)
+                except Exception:  # noqa: BLE001
+                    # A test that ERRORS (bad column, bad SQL) records an
+                    # `error` step and skips downstream like a hard
+                    # failure; the rest of the DAG and the manifest land.
+                    status, failures = "error", None
+                    test_failed.add(name)
+                steps.append((test_name, "test", status, failures))
 
-        # Waves: independent models run concurrently on the FAIR scheduler —
-        # the reference's `threads: 4` node-level parallelism (B36).
-        for wave in self.graph.execution_waves(selected):
-            if len(wave) == 1 or self.env.threads <= 1:
-                for name in wave:
-                    results[name] = run_one(name)
-            else:
-                with ThreadPoolExecutor(max_workers=self.env.threads) as pool:
-                    for name, res in zip(wave, pool.map(run_one, wave)):
-                        results[name] = res
-            if build_steps is not None:
-                record_wave(wave)
+        # A child starts after its parents' whole tasks (count and tests
+        # too), so run_one's skip checks see final statuses. The caller's
+        # job group, description and pool are captured here for every node.
+        order = [n for wave in self.graph.execution_waves(selected) for n in wave]
+        waiting = {n: set(self.graph.parent_map[n]) & selected for n in order}
+        task = inheritable_thread_target(self.spark)(run_node)
+        with ThreadPoolExecutor(max_workers=max(1, self.env.threads)) as pool:
+            running = {pool.submit(task, n): n for n in order if not waiting[n]}
+            while running:
+                for fut in wait(running, return_when=FIRST_COMPLETED).done:
+                    fut.result()
+                    parent = running.pop(fut)
+                    for child in self.graph.child_map[parent]:
+                        if child in waiting:
+                            waiting[child].discard(parent)
+                            if not waiting[child]:
+                                running[pool.submit(task, child)] = child
+        for name in order:  # node_steps is empty unless in build-steps mode
+            for step in node_steps.get(name, ()):
+                build_steps.append(BuildStep(len(build_steps) + 1, *step))
         if state_out:
             new_state.save(state_out)
         self._last_state = new_state
-        return results
+        return {name: results[name] for name in order}
 
     def _materialize(self, m: Model, ctx: ModelContext) -> str:
         cfg = m.config

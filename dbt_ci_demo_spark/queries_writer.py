@@ -387,9 +387,9 @@ _DAG_ORACLE = """
 
 @query("wr_dag_topo_run", oracle=_DAG_ORACLE)
 def wr_dag_topo_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B32 DAG build + B36 threaded waves + B31 statement execution: two
-    independent staging models run concurrently (ThreadPoolExecutor over
-    topological waves — the reference's ``threads: 4``,
+    """B32 DAG build + B36 threaded execution + B31 statement execution:
+    two independent staging models run concurrently (a ready queue on a
+    thread pool — the reference's ``threads: 4``,
     test_profiles/profiles.yml:11), then the mart joins them; the final
     relation is read back from the target namespace. Reference: dbt's
     node-level scheduler over parent_map (manifest.json:1 parent_map) —
@@ -1156,7 +1156,7 @@ def wr_build_incremental_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     prod's materialized staging through the deferral seam).
     threads=1 — waves are name-sorted, so the step order is exact.
     (threads=2 was probed in r14 — step order is thread-count-invariant
-    since the runner records steps post-wave in name-sorted order — but
+    since the runner records steps in name-sorted wave order — but
     concurrent wave-1 saveAsTable calls measured 3× SLOWER (3.0 → 8.5 s
     min5): the in-memory catalog serializes DDL and the contended
     commits dwarf the overlapped write time at this table size.)"""

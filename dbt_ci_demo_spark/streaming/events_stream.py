@@ -53,8 +53,13 @@ class _shuffle_partitions_override:
     def __enter__(self):
         if self._n is not None:
             _CONF_OVERRIDE_LOCK.acquire()
-            self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-            self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
+            try:
+                self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
+                self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
+            except BaseException:
+                # __exit__ never runs when __enter__ raises
+                _CONF_OVERRIDE_LOCK.release()
+                raise
         return self
 
     def __exit__(self, *exc):

@@ -1209,6 +1209,38 @@ def test_streaming_state_partitions_concurrent_overrides(spark, sf_dir):
         q.stop()
 
 
+def test_shuffle_partitions_override_releases_lock_when_conf_raises():
+    """A conf that raises inside ``__enter__`` (``get`` or ``set``) must
+    not leave the module lock held: ``__exit__`` never runs for a
+    failed ``__enter__``, so a leaked lock would deadlock every later
+    overridden stream in the process."""
+    from dbt_ci_demo_spark.streaming import events_stream as es
+
+    class RaisingConf:
+        def __init__(self, fail_on):
+            self.fail_on = fail_on
+
+        def get(self, key):
+            if self.fail_on == "get":
+                raise RuntimeError("conf.get failed")
+            return "8"
+
+        def set(self, key, value):
+            if self.fail_on == "set":
+                raise RuntimeError("conf.set failed")
+
+    class FakeSpark:
+        def __init__(self, fail_on):
+            self.conf = RaisingConf(fail_on)
+
+    for fail_on in ("get", "set"):
+        with pytest.raises(RuntimeError, match=f"conf.{fail_on} failed"):
+            with es._shuffle_partitions_override(FakeSpark(fail_on), 4):
+                pass
+        assert es._CONF_OVERRIDE_LOCK.acquire(blocking=False), fail_on
+        es._CONF_OVERRIDE_LOCK.release()
+
+
 @pytest.mark.slow  # ~18s 3-micro-batch streaming pin: round-close tier
 # (r11 fast-tier budget; the stream_late_data_accounting oracle row
 # covers the semantics every gate run)

@@ -728,6 +728,24 @@ def test_swap_in_recovers_from_orphaned_staging_files(spark, tmp_path):
     wh.drop_database()
 
 
+def test_partition_col_partitioned_flat_and_missing(spark, tmp_path):
+    """_partition_col (the layout swap_in preserves) reads one DESCRIBE
+    TABLE: the first partition column of a partitioned table, None for
+    an unpartitioned one, None for a table that does not exist."""
+    from dbt_ci_demo_spark.operators.materialize import Warehouse
+
+    wh = Warehouse(
+        spark, f"wh_{tmp_path.name.lower()}_pcol", location=str(tmp_path / "whpcol")
+    )
+    df = spark.range(6).selectExpr("id", "id % 2 AS ds", "id % 3 AS hr")
+    df.write.partitionBy("ds", "hr").saveAsTable(f"{wh.database}.parted")
+    wh.write_table(df, "flat")
+    assert wh._partition_col("parted") == "ds"
+    assert wh._partition_col("flat") is None
+    assert wh._partition_col("no_such_table") is None
+    wh.drop_database()
+
+
 def test_compact_layout_broadcasts_counts(spark):
     """compact_layout's count table is bounded metadata (one row per
     partition value) and must enter as a BroadcastHashJoin -- a
@@ -1157,5 +1175,263 @@ def test_build_survives_unreadable_relation_in_bookkeeping(spark, sf_dir, env, t
         assert results2["stg_orders"].status == "error"
         published2 = StateManifest.load(str(state_path2))
         assert published2.nodes["stg_orders"] == prior.nodes["stg_orders"]
+    finally:
+        runner.warehouse.drop_database()
+
+
+def test_deferred_ref_resolves_view_parent(spark, sf_dir, env, tmp_path):
+    """--defer to a DataFrame-defined view parent: the manifest records
+    ``<db>.<name>`` but the view lives as the session view
+    ``<db>__view__<name>``, so ref() must resolve the deferred relation
+    the way Warehouse.read does (it used to fail
+    TABLE_OR_VIEW_NOT_FOUND)."""
+    registry: dict[str, Model] = {}
+
+    @model(name="v_orders", sources=["orders"], registry=registry, materialized="view")
+    def v_orders(ctx):
+        return ctx.source("orders").select("o_orderkey").limit(7)
+
+    @model(name="from_view", refs=["v_orders"], registry=registry)
+    def from_view(ctx):
+        return ctx.ref("v_orders")
+
+    prod = make_runner(spark, sf_dir, env, registry, tmp_path)
+    state_path = str(tmp_path / "state_view.json")
+    assert all(r.status == "success" for r in prod.build(state_out=state_path).values())
+    state = StateManifest.load(state_path)
+
+    registry["from_view"].config.cluster_by = ["o_orderkey"]  # modify the child only
+    pr_env = EnvConfig(env="test", pr_number=9, database_prefix=env.database_prefix)
+    pr = make_runner(spark, sf_dir, pr_env, registry, tmp_path / "pr")
+    try:
+        results = pr.build(select="state:modified+", state=state, defer=True)
+        assert set(results) == {"from_view"}
+        assert results["from_view"].status == "success", results["from_view"].error
+        assert not pr.warehouse.exists("v_orders")  # deferred, not rebuilt
+        assert pr.warehouse.read("from_view").count() == 7
+    finally:
+        pr.warehouse.drop_database()
+        prod.warehouse.drop_database()
+
+
+def _ledger(steps):
+    return [(s.seq, s.node, s.resource_type, s.status, s.n_rows) for s in steps]
+
+
+def test_ready_queue_releases_child_before_wave_mate_ends(spark, sf_dir, env, tmp_path):
+    """Release witness for the ready queue: ``slow`` blocks until
+    ``child_of_fast``'s model runs. Under wave barriers the child could
+    not start before its parent's wave-mate ``slow`` ended, so ``slow``
+    would time out and error; the queue starts the child as soon as
+    ``fast`` (and its test) finish."""
+    import threading
+
+    from dbt_ci_demo_spark.operators.quality import test_unique
+
+    released = threading.Event()
+    registry: dict[str, Model] = {}
+
+    @model(name="slow", sources=["orders"], registry=registry)
+    def slow(ctx):
+        if not released.wait(timeout=60):
+            raise TimeoutError("child_of_fast never started while slow ran")
+        return ctx.source("orders").select("o_orderkey").limit(3)
+
+    @model(name="fast", sources=["orders"], registry=registry)
+    def fast(ctx):
+        return ctx.source("orders").select("o_orderkey").limit(5)
+
+    @model(name="child_of_fast", refs=["fast"], registry=registry)
+    def child_of_fast(ctx):
+        released.set()
+        return ctx.ref("fast")
+
+    runner = make_runner(spark, sf_dir, env, registry, tmp_path)
+    try:
+        steps: list = []
+        results = runner.build(
+            tests={"fast": [("unique_fast", lambda df: test_unique(df, "o_orderkey"))]},
+            build_steps=steps,
+        )
+        assert all(r.status == "success" for r in results.values()), results
+        # completion order was fast, unique_fast, child_of_fast, slow; the
+        # ledger keeps wave order, name-sorted within a wave
+        assert _ledger(steps) == [
+            (1, "fast", "model", "success", 5),
+            (2, "unique_fast", "test", "pass", 0),
+            (3, "slow", "model", "success", 3),
+            (4, "child_of_fast", "model", "success", 5),
+        ]
+        assert list(results) == ["fast", "slow", "child_of_fast"]
+    finally:
+        runner.warehouse.drop_database()
+
+
+def test_ledger_independent_of_completion_order_and_threads(spark, sf_dir, env, tmp_path):
+    """The ledger (order, seq, statuses, row counts) and the published
+    manifest are the same whether nodes finish out of name order on four
+    threads or run one at a time on one thread."""
+    import time
+
+    from dbt_ci_demo_spark.operators.quality import test_unique
+
+    def make_registry():
+        registry: dict[str, Model] = {}
+
+        @model(name="a_slow", sources=["orders"], registry=registry)
+        def a_slow(ctx):
+            time.sleep(1.0)  # on 4 threads, b_fast (and usually c_mid) finish first
+            return ctx.source("orders").select("o_orderkey").limit(4)
+
+        @model(name="b_fast", sources=["orders"], registry=registry)
+        def b_fast(ctx):
+            return ctx.source("orders").select("o_orderkey", "o_custkey").limit(6)
+
+        @model(name="c_mid", refs=["b_fast"], registry=registry)
+        def c_mid(ctx):
+            return ctx.ref("b_fast").select("o_custkey")
+
+        @model(name="d_join", refs=["a_slow", "c_mid"], registry=registry)
+        def d_join(ctx):
+            return ctx.ref("a_slow").crossJoin(ctx.ref("c_mid").limit(1))
+
+        @model(name="e_after_fail", refs=["c_mid"], registry=registry)
+        def e_after_fail(ctx):
+            return ctx.ref("c_mid")
+
+        return registry
+
+    tests = {
+        "a_slow": [("unique_a", lambda df: test_unique(df, "o_orderkey"))],
+        "b_fast": [("unique_b", lambda df: test_unique(df, "o_orderkey"))],
+        # duplicate custkeys in a 6-row slice are not guaranteed; a constant
+        # column always fails unique, so the skip path is exercised
+        "c_mid": [("unique_c", lambda df: test_unique(df.select(F.lit(1).alias("k")), "k"))],
+    }
+    ledgers, manifests = [], []
+    for threads in (4, 1):
+        env_t = EnvConfig(
+            env="test", database_prefix=f"{env.database_prefix}_t{threads}", threads=threads
+        )
+        runner = make_runner(spark, sf_dir, env_t, make_registry(), tmp_path / f"t{threads}")
+        try:
+            steps: list = []
+            state_path = tmp_path / f"state_t{threads}.json"
+            runner.build(tests=tests, build_steps=steps, state_out=str(state_path))
+            ledgers.append(_ledger(steps))
+            manifests.append(
+                {n: e["checksum"] for n, e in StateManifest.load(str(state_path)).nodes.items()}
+            )
+        finally:
+            runner.warehouse.drop_database()
+    assert ledgers[0] == ledgers[1]
+    assert manifests[0] == manifests[1]
+    assert ledgers[0] == [
+        (1, "a_slow", "model", "success", 4),
+        (2, "unique_a", "test", "pass", 0),
+        (3, "b_fast", "model", "success", 6),
+        (4, "unique_b", "test", "pass", 0),
+        (5, "c_mid", "model", "success", 6),
+        (6, "unique_c", "test", "fail", 1),
+        (7, "d_join", "model", "skipped", None),
+        (8, "e_after_fail", "model", "skipped", None),
+    ]
+
+
+def test_nodes_inherit_callers_job_group_with_private_properties(
+    spark, sf_dir, env, tmp_path
+):
+    """Every node's thread carries the caller's job group (a single-node
+    wave used to run on the caller's thread and a wider one in a pool
+    without it), and a local property one node sets does not leak into
+    a node running concurrently."""
+    import threading
+
+    sc = spark.sparkContext
+    a_set, b_read = threading.Event(), threading.Event()
+    seen: dict[str, object] = {}
+    registry: dict[str, Model] = {}
+
+    @model(name="a", sources=["orders"], registry=registry)
+    def a(ctx):
+        seen["a"] = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("probe.owner", "a")
+        a_set.set()
+        b_read.wait(timeout=60)
+        return ctx.source("orders").select("o_orderkey").limit(2)
+
+    @model(name="b", sources=["orders"], registry=registry)
+    def b(ctx):
+        seen["b"] = sc.getLocalProperty("spark.jobGroup.id")
+        a_set.wait(timeout=60)
+        seen["b_probe"] = sc.getLocalProperty("probe.owner")
+        b_read.set()
+        return ctx.source("orders").select("o_orderkey").limit(2)
+
+    @model(name="c", refs=["a", "b"], registry=registry)
+    def c(ctx):
+        seen["c"] = sc.getLocalProperty("spark.jobGroup.id")
+        return ctx.ref("a").unionByName(ctx.ref("b"))
+
+    runner = make_runner(spark, sf_dir, env, registry, tmp_path)
+    prev = (sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("spark.job.description"))
+    sc.setJobGroup("runner-job-group", "job group test")
+    try:
+        results = runner.build()
+        assert all(r.status == "success" for r in results.values()), results
+        assert seen["a"] == seen["b"] == seen["c"] == "runner-job-group", seen
+        assert seen["b_probe"] is None, seen
+        assert sc.getLocalProperty("probe.owner") is None  # caller untouched
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev[0])
+        sc.setLocalProperty("spark.job.description", prev[1])
+        runner.warehouse.drop_database()
+
+
+def test_ready_queue_stress_builds_each_node_once(spark, sf_dir, env, tmp_path):
+    """Queue stress: a 3-layer, 24-node DAG of views (each child refs two
+    parents) on more threads than cores, with a shortened switch
+    interval. Every node runs exactly once, after both parents, and the
+    results and the published manifest hold all of them."""
+    import sys
+    from collections import Counter
+
+    calls: list[str] = []
+    registry: dict[str, Model] = {}
+
+    def add(name, refs):
+        @model(name=name, refs=refs, registry=registry, materialized="view")
+        def fn(ctx):
+            calls.append(name)
+            if not refs:
+                return spark.range(1).withColumnRenamed("id", "k")
+            return ctx.ref(refs[0]).unionByName(ctx.ref(refs[1]))
+
+    layers = [[f"l{d}_{i}" for i in range(8)] for d in range(3)]
+    for name in layers[0]:
+        add(name, [])
+    for up, layer in zip(layers, layers[1:]):
+        for i, name in enumerate(layer):
+            add(name, [up[i], up[(i + 1) % 8]])
+
+    env8 = EnvConfig(env="test", database_prefix=env.database_prefix, threads=8)
+    runner = make_runner(spark, sf_dir, env8, registry, tmp_path)
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        state_path = str(tmp_path / "state_stress.json")
+        results = runner.build(state_out=state_path)
+    finally:
+        sys.setswitchinterval(prev)
+    try:
+        order = [n for layer in layers for n in layer]
+        assert list(results) == order
+        assert all(r.status == "success" for r in results.values()), results
+        assert Counter(calls) == Counter(order)
+        for name in order[8:]:  # each child's model ran after both parents'
+            assert calls.index(name) > max(calls.index(p) for p in registry[name].refs)
+        assert set(StateManifest.load(state_path).nodes) == set(order)
+        assert runner.warehouse.read("l2_0").count() == 4
     finally:
         runner.warehouse.drop_database()

@@ -92,39 +92,38 @@ def main() -> None:
             with open(f) as fh:
                 yield from fh
 
-    if True:
-        for line in _lines():
-            ev = json.loads(line)
-            et = ev.get("Event")
-            if et == "SparkListenerJobStart":
-                props = ev.get("Properties") or {}
-                if props.get("spark.jobGroup.id") != "MEASURED":
-                    continue
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "job": jid,
-                    "t0": ev["Submission Time"],
-                    "desc": (props.get("spark.job.description") or "")[:80],
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                }
-            elif et == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["sec"] = round(
-                        (ev["Completion Time"] - jobs[jid].pop("t0")) / 1000.0, 3
-                    )
-            elif et == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                if not any(sid in j.get("stages", []) for j in jobs.values()):
-                    continue
-                sub, comp = si.get("Submission Time"), si.get("Completion Time")
-                stages[sid] = {
-                    "stage": sid,
-                    "name": si.get("Stage Name", "")[:60],
-                    "tasks": si.get("Number of Tasks"),
-                    "sec": round((comp - sub) / 1000.0, 3) if sub and comp else None,
-                }
+    for line in _lines():
+        ev = json.loads(line)
+        et = ev.get("Event")
+        if et == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            if props.get("spark.jobGroup.id") != "MEASURED":
+                continue
+            jid = ev["Job ID"]
+            jobs[jid] = {
+                "job": jid,
+                "t0": ev["Submission Time"],
+                "desc": (props.get("spark.job.description") or "")[:80],
+                "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
+            }
+        elif et == "SparkListenerJobEnd":
+            jid = ev["Job ID"]
+            if jid in jobs:
+                jobs[jid]["sec"] = round(
+                    (ev["Completion Time"] - jobs[jid].pop("t0")) / 1000.0, 3
+                )
+        elif et == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            if not any(sid in j.get("stages", []) for j in jobs.values()):
+                continue
+            sub, comp = si.get("Submission Time"), si.get("Completion Time")
+            stages[sid] = {
+                "stage": sid,
+                "name": si.get("Stage Name", "")[:60],
+                "tasks": si.get("Number of Tasks"),
+                "sec": round((comp - sub) / 1000.0, 3) if sub and comp else None,
+            }
 
     job_list = sorted(jobs.values(), key=lambda j: -j.get("sec", 0.0))
     stage_list = sorted(

@@ -304,8 +304,8 @@ class Runner:
                 for fut in wait(running, return_when=FIRST_COMPLETED).done:
                     fut.result()
                     parent = running.pop(fut)
-                    for child in self.graph.child_map[parent]:
-                        if child in waiting:
+                    for child in self.graph.child_map[parent]:  # may repeat a child
+                        if parent in waiting.get(child, ()):
                             waiting[child].discard(parent)
                             if not waiting[child]:
                                 running[pool.submit(task, child)] = child

@@ -1391,9 +1391,10 @@ def test_nodes_inherit_callers_job_group_with_private_properties(
 
 def test_ready_queue_stress_builds_each_node_once(spark, sf_dir, env, tmp_path):
     """Queue stress: a 3-layer, 24-node DAG of views (each child refs two
-    parents) on more threads than cores, with a shortened switch
-    interval. Every node runs exactly once, after both parents, and the
-    results and the published manifest hold all of them."""
+    parents, plus one node that refs the same parent twice) on more
+    threads than cores, with a shortened switch interval. Every node
+    runs exactly once, after its parents, and the results and the
+    published manifest hold all of them."""
     import sys
     from collections import Counter
 
@@ -1414,6 +1415,7 @@ def test_ready_queue_stress_builds_each_node_once(spark, sf_dir, env, tmp_path):
     for up, layer in zip(layers, layers[1:]):
         for i, name in enumerate(layer):
             add(name, [up[i], up[(i + 1) % 8]])
+    add("twice_same_parent", ["l2_0", "l2_0"])  # a repeated ref releases once
 
     env8 = EnvConfig(env="test", database_prefix=env.database_prefix, threads=8)
     runner = make_runner(spark, sf_dir, env8, registry, tmp_path)
@@ -1425,11 +1427,11 @@ def test_ready_queue_stress_builds_each_node_once(spark, sf_dir, env, tmp_path):
     finally:
         sys.setswitchinterval(prev)
     try:
-        order = [n for layer in layers for n in layer]
+        order = [n for layer in layers for n in layer] + ["twice_same_parent"]
         assert list(results) == order
         assert all(r.status == "success" for r in results.values()), results
         assert Counter(calls) == Counter(order)
-        for name in order[8:]:  # each child's model ran after both parents'
+        for name in order[8:]:  # each child's model ran after its parents'
             assert calls.index(name) > max(calls.index(p) for p in registry[name].refs)
         assert set(StateManifest.load(state_path).nodes) == set(order)
         assert runner.warehouse.read("l2_0").count() == 4

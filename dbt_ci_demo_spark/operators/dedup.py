@@ -22,12 +22,16 @@ Scale design:
   gaps-and-islands window — the distributed stand-in for the
   suffix-array method (Lee et al. 2022); no corpus-sized state, no
   global window.
-- MinHash+LSH: shingle explode → 1 groupBy for signatures (N min-aggs in
-  one pass) → band explode → self-join on (band, band_hash) buckets →
-  exact-Jaccard verification of candidates only. No O(n²) stage; the
-  band join's fan-out is controlled by band width. This is the
-  standard web-scale near-dup pipeline (cf. Broder's shingling/minhash
-  and the GPT-3/C4 dedup recipes; PAPERS.md).
+- MinHash+LSH: each document's distinct shingles are ONE array row
+  (`shingle_sets`), the family's single shingle form. Signatures are a
+  row projection over it (hash each shingle once, then one array_min per
+  affine hash) → band explode → self-join on (band, band_hash) buckets →
+  exact Jaccard of the candidates by array_intersect of the two docs'
+  arrays. The band join is the only shuffle keyed by band, and no stage
+  aggregates shingle rows per document. No O(n²) stage; the band join's
+  fan-out is controlled by band width. This is the standard web-scale
+  near-dup pipeline (cf. Broder's shingling/minhash and the GPT-3/C4
+  dedup recipes; PAPERS.md).
 - SimHash: 32-bit signature via nibble arithmetic; candidate pairs via
   4-block banding (pigeonhole: hamming ≤ 3 ⇒ at least one equal block),
   then exact hamming filter — guaranteed recall at threshold ≤ 3, so
@@ -76,11 +80,12 @@ def dedup_keep_first(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.join(w_min, on=id_col, how="left_semi")
 
 
-def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
-    """Distinct word k-shingles per document: (id, shingle) rows.
+def shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
+    """Distinct word k-shingles per document as ONE array row:
+    (id, shingles) — the MinHash family's shingle representation.
 
     Tokenization is lowercase whitespace-split (engine-portable); documents
-    with fewer than k tokens produce no shingles and are excluded from
+    with fewer than k tokens produce no row and are excluded from
     near-dup detection (standard behavior). The size guard matters:
     Spark's ``sequence(0, n)`` *descends* when n < 0."""
     toks = F.split(F.lower(F.col(text_col)), r"\s+")
@@ -89,9 +94,22 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> Data
         F.sequence(F.lit(0), F.size("__t") - k),
         lambda i: F.concat_ws(" ", F.slice(F.col("__t"), i + 1, k)),
     )
-    return with_toks.select(
-        F.col(id_col), F.explode(F.array_distinct(shingles)).alias("shingle")
-    )
+    return with_toks.select(F.col(id_col), F.array_distinct(shingles).alias("shingles"))
+
+
+def _explode_sets(sets: DataFrame, id_col: str) -> DataFrame:
+    # explode_outer, not explode: for a plain explode of a column Spark
+    # infers a size(shingles) > 0 filter and pushes it below the
+    # projection that builds the array, which then runs twice per row and
+    # ahead of the short-document filter (an ANSI slice error on a doc
+    # with < k tokens). The arrays are never empty, so the rows are equal.
+    return sets.select(F.col(id_col), F.explode_outer("shingles").alias("shingle"))
+
+
+def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
+    """Distinct word k-shingles per document as (id, shingle) rows: the
+    :func:`shingle_sets` arrays exploded (the stored-index row form)."""
+    return _explode_sets(shingle_sets(df, text_col, id_col, k), id_col)
 
 
 _MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
@@ -128,26 +146,32 @@ def _affine_params(n: int, seed: int = 1) -> list[tuple[int, int]]:
 
 
 def minhash_signatures(
-    shingles: DataFrame, id_col: str, n_hashes: int = 32, hash_fn: str = "md5"
+    sets: DataFrame, id_col: str, n_hashes: int = 32, hash_fn: str = "md5"
 ) -> DataFrame:
-    """MinHash signature per document: ONE md5 per shingle → 32-bit integer
-    (first 8 hex chars), then n_hashes affine hashes (a_i*h + b_i) mod P —
-    the classic universal-hash family. One groupBy computes all N mins in
-    one pass with map-side partial aggregation. Versus hashing the shingle
-    text n_hashes times, this cuts per-shingle hashing cost ~n_hashes×,
-    which dominates the pipeline at corpus scale (the shingle table is by
-    far the largest intermediate)."""
-    # Materialize h in a projection ahead of the aggregate: the hash
-    # appears once in the plan instead of inside all n_hashes agg
-    # expressions (subexpression elimination across aggregates is not
-    # guaranteed), so each shingle row is hashed exactly once.
-    hashed = shingles.withColumn("__h", _hash32(F.col("shingle"), hash_fn))
-    h = F.col("__h")
-    aggs = [
-        F.min((F.lit(a) * h + F.lit(b)) % F.lit(_MINHASH_PRIME)).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(_affine_params(n_hashes))
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    """MinHash signature per document from its :func:`shingle_sets` row:
+    ONE 32-bit hash per shingle (:func:`_hash32`), then n_hashes affine
+    hashes (a_i*h + b_i) mod P — the classic universal-hash family — each
+    reduced by ``array_min``. A pure row projection: no shuffle, and the
+    values equal the min-aggregate over exploded shingle rows bit for bit
+    (the DuckDB oracle's form). Versus hashing the shingle text n_hashes
+    times, this cuts per-shingle hashing cost ~n_hashes×."""
+    # The hash array is its own projection: referenced by all n_hashes
+    # transforms, it is not inlined into them, so each shingle is hashed
+    # exactly once.
+    hashed = sets.select(
+        F.col(id_col),
+        F.transform("shingles", lambda s: _hash32(s, hash_fn)).alias("__h"),
+    )
+    # (F.transform calls each lambda at once, so a and b bind per item)
+    return hashed.select(
+        F.col(id_col),
+        *[
+            F.array_min(
+                F.transform("__h", lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MINHASH_PRIME))
+            ).alias(f"sig_{i}")
+            for i, (a, b) in enumerate(_affine_params(n_hashes))
+        ],
+    )
 
 
 def banded_buckets(
@@ -195,12 +219,11 @@ def banded_buckets(
 def lsh_pairs_from_buckets(banded: DataFrame, id_col: str) -> DataFrame:
     """The band-bucket self-join of :func:`lsh_candidate_pairs`, factored
     over an already-built (id, band_id, band_hash) table so callers that
-    hold the band table (a pin, or the stored index artifact) pay the
-    signature aggregation ONCE: the self-join references its input from
-    both sides, and the two subtrees do not share execution (one side
-    plans as a BroadcastExchange — there is no exchange to reuse), so an
-    un-pinned input re-runs the whole shingle→signature→band derivation
-    per side (r14; guide §2.4 duplicated-subtree class)."""
+    hold the band table (a pin, or the stored index artifact) derive it
+    ONCE: the self-join references its input from both sides, and the
+    two subtrees do not share execution (one side plans as a
+    BroadcastExchange — there is no exchange to reuse), so an un-pinned
+    input re-runs the whole shingle→signature→band derivation per side."""
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -217,6 +240,14 @@ def lsh_pairs_from_buckets(banded: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _signed_bands(
+    sets: DataFrame, id_col: str, n_hashes: int, bands: int, hash_fn: str
+) -> DataFrame:
+    return banded_buckets(
+        minhash_signatures(sets, id_col, n_hashes, hash_fn), id_col, n_hashes, bands, hash_fn
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, id_col: str, n_hashes: int = 32, bands: int = 8,
     hash_fn: str = "md5",
@@ -228,45 +259,51 @@ def lsh_candidate_pairs(
     return lsh_pairs_from_buckets(banded, id_col)
 
 
+def set_jaccard_scores(sets: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """Exact Jaccard similarity of candidate pairs from their
+    :func:`shingle_sets` arrays: |A∩B| / (|A|+|B|-|A∩B|) with |A∩B| =
+    size(array_intersect(A, B)). Two id-keyed joins bring each pair its
+    two arrays; the score is a row projection, so no stage aggregates
+    shingle rows. The verifier of every path that holds the arrays
+    (self-dedup, first build, admission without a stored index)."""
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sa"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sb"))
+    n_inter = F.size(F.array_intersect("sa", "sb"))
+    return (
+        pairs.join(sa, on="id_a")
+        .join(sb, on="id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                n_inter.cast("double") / (F.size("sa") + F.size("sb") - n_inter), 6
+            ).alias("jaccard"),
+        )
+    )
+
+
 def jaccard_scores(
-    shingles: DataFrame, id_col: str, pairs: DataFrame,
-    sizes: DataFrame | None = None,
+    shingles: DataFrame, id_col: str, pairs: DataFrame, sizes: DataFrame,
     prefiltered: bool = False,
 ) -> DataFrame:
-    """Exact Jaccard similarity for candidate pairs from their distinct
-    shingle sets: |A∩B| / (|A|+|B|-|A∩B|). Joins are keyed by document id
-    (candidates) and shingle (intersection) — both co-partitioned shuffles.
+    """Exact Jaccard similarity for candidate pairs over the STORED
+    index's row form: (id, shingle) rows plus the per-doc count artifact
+    ``sizes`` (id, n) of :func:`build_minhash_index` — the admission
+    path's verifier (:func:`set_jaccard_scores` is the array-form one).
+    |A∩B| is an equi-join on (id, shingle) counted per pair; the counts
+    come from the artifact, and the shingle table — the corpus-sized
+    index read back from parquet — is semi-joined down to the
+    (broadcast) candidate-id set first. No stage aggregates or shuffles
+    the full corpus.
 
-    Two plans, chosen by whether ``sizes`` is provided:
-
-    - ``sizes=None`` (self-dedup / first build): per-doc counts are
-      aggregated from the full shingle table. That aggregate and the
-      candidate generation are INDEPENDENT subtrees, so their stages run
-      concurrently — serializing them behind a candidate semi-join was
-      measured ~2× slower end-to-end on the minhash bench rows, and the
-      intersection join is already candidate-proportional (``pairs`` is
-      small and broadcasts onto the shingle scan).
-    - ``sizes`` given (the stored per-doc count artifact of
-      :func:`build_minhash_index` — the ADMISSION path): the shingle
-      table is the corpus-sized index read back from parquet, so here
-      the corpus-wide count aggregate would be pure waste; instead the
-      shingle table is semi-joined down to the (broadcast) candidate-id
-      set before the intersection join, and the counts come from the
-      artifact. No stage aggregates or shuffles the full corpus.
-
-    ``prefiltered`` (r15, sizes path only): the caller already restricted
-    ``shingles`` to the candidate-id set (and typically PERSISTED the
-    restricted table), so the semi-join here would be a redundant second
-    derivation of the candidate ids — skip it. Without a caller-side pin
-    the un-persisted semi-join subtree is referenced twice below
-    (``sh_a``/``sh_b``) and the stored shingle index is scanned twice per
-    admission (guide §2.4 duplicated-subtree class)."""
+    ``prefiltered``: the caller already restricted ``shingles`` to the
+    candidate-id set (and typically PERSISTED the restricted table), so
+    the semi-join here would be a redundant second derivation of the
+    candidate ids — skip it. Without a caller-side pin the semi-join
+    subtree is referenced twice below (``sh_a``/``sh_b``) and the stored
+    shingle index is scanned twice per admission."""
     sh = shingles
-    if sizes is None:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    elif prefiltered:
-        pass  # caller restricted (and pinned) the shingle table already
-    else:
+    if not prefiltered:
         ids = (
             pairs.select(F.col("id_a").alias(id_col))
             .unionByName(pairs.select(F.col("id_b").alias(id_col)))
@@ -310,72 +347,62 @@ def minhash_near_duplicates(
     hash_fn: str = "md5",
     materialize: bool = True,
 ) -> DataFrame:
-    """Full MinHash+LSH near-dup pipeline: shingle → signature → banded
-    candidates → exact-Jaccard verification ≥ threshold.
+    """Full MinHash+LSH near-dup pipeline: shingle sets → signatures (a
+    row projection) → banded candidates → exact-Jaccard verification
+    (array_intersect) ≥ threshold.
 
     ``hash_fn="md5"`` (default) is bit-reproducible across engines — the
     oracle-gate path. ``hash_fn="xxhash64"`` is the production path for
     Spark-only corpora: same verified output semantics (Jaccard scoring is
     hash-agnostic), JVM-native hashing at the dominant (per-shingle) stage.
 
-    The shingle table feeds two branches (signatures and the exact-Jaccard
-    verifier); persisting it computes the explode+dedup scan once instead
-    of twice — at corpus scale the shingle table is the dominant
-    intermediate, so this halves the heaviest stage (MEMORY_AND_DISK:
-    spills rather than OOMs on big partitions).
-
     With ``materialize=True`` (default) the result — the near-dup pair
-    list, tiny relative to the shingle table — is eagerly computed and
-    reliable-checkpointed (lineage truncated to the checkpoint files), and
-    the shingle cache is unpersisted before returning: no invocation
-    leaves anything pinned in executor storage. ``materialize=False``
-    returns the lazy plan WITHOUT any persist — composable, nothing to
-    leak, at the cost of recomputing the shingle scan per branch."""
+    list — is eagerly computed and reliable-checkpointed (lineage
+    truncated to the checkpoint files). Two frames are pinned for the
+    call: the sets (read by the signatures and by both verifier joins)
+    and the band table (read from both sides of the bucket self-join).
+    The candidate pairs are not: the verifier reads them once, and a
+    cached copy keeps the distinct's un-coalesced shuffle layout, which
+    the checkpointed result inherits and every consumer then pays for
+    (measured slower end to end with ``duplicate_clusters`` at 550, 5.5k
+    and 22k documents). Both pins are unpersisted before returning: no
+    invocation leaves anything pinned in executor storage.
+    ``materialize=False`` returns the lazy plan WITHOUT any persist —
+    composable, nothing to leak, at the cost of recomputing the shingle
+    sets per branch."""
+    sets = shingle_sets(df, text_col, id_col, k)
     if not materialize:
-        sh = word_shingles(df, text_col, id_col, k)
-        sig = minhash_signatures(sh, id_col, n_hashes, hash_fn)
+        sig = minhash_signatures(sets, id_col, n_hashes, hash_fn)
         cand = lsh_candidate_pairs(sig, id_col, n_hashes, bands, hash_fn)
-        return jaccard_scores(sh, id_col, cand).filter(F.col("jaccard") >= threshold)
+        return set_jaccard_scores(sets, id_col, cand).filter(F.col("jaccard") >= threshold)
     ensure_checkpoint_dir(df.sparkSession)
-    sh = word_shingles(df, text_col, id_col, k).persist()
-    # The candidate-pair table is referenced TWICE inside jaccard_scores
-    # (the intersection join and the final pair join), and Spark's
-    # exchange reuse does not cover the subtree (verified: the executed
-    # plan holds zero ReusedExchange nodes), so un-persisted the
-    # 32-min signature aggregate + band self-join execute twice per
-    # action over the corpus-scale shingle cache. Persisting the tiny
-    # candidate table makes that subtree run once — the index path's
-    # existing precedent. Honest A/B (r11, fresh-JVM min-of-5 at sf0.1,
-    # canary-normalized): local wall ≈ parity (2.54 vs 2.49 — the
-    # duplicated subtree is latency-hidden at this scale); the change is
-    # kept for the STRUCTURAL claim, which is what matters at 100 TB
-    # where a second pass over the dominant intermediate is real cluster
-    # cost. cand is output-proportional, never corpus-sized; unpersisted
-    # in the finally, so nothing outlives the call.
-    cand = None
+    sets.persist()
     banded = None
     try:
-        sig = minhash_signatures(sh, id_col, n_hashes, hash_fn)
-        # Pin the slim band table (≈bands rows per doc of (id, band_id,
-        # band_hash)) before the bucket self-join: the join references it
-        # from BOTH sides and the subtrees share no execution (one side is
-        # a BroadcastExchange — nothing to reuse), so un-pinned the
-        # 32-min signature aggregate over the corpus-scale shingle cache
-        # runs TWICE per candidate materialization (r14; fresh-JVM probes
-        # read −13% on dedup_minhash_lsh, −7% on the xxhash64 row —
-        # latency-hidden locally, but at corpus scale the avoided second
-        # signature pass over the dominant intermediate is real cluster
-        # cost). Same bounded lifetime as cand.
-        banded = banded_buckets(sig, id_col, n_hashes, bands, hash_fn).persist()
-        cand = lsh_pairs_from_buckets(banded, id_col).persist()
-        out = jaccard_scores(sh, id_col, cand).filter(F.col("jaccard") >= threshold)
+        banded = _signed_bands(sets, id_col, n_hashes, bands, hash_fn).persist()
+        cand = lsh_pairs_from_buckets(banded, id_col)
+        out = set_jaccard_scores(sets, id_col, cand).filter(F.col("jaccard") >= threshold)
         return out.checkpoint(eager=True)
     finally:
-        sh.unpersist()
+        sets.unpersist()
         if banded is not None:
             banded.unpersist()
-        if cand is not None:
-            cand.unpersist()
+
+
+def index_artifacts(
+    sets: DataFrame, id_col: str, n_hashes: int = 32, bands: int = 8,
+    hash_fn: str = "md5",
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The stored index's (shingles, bands, sizes) artifacts derived from
+    :func:`shingle_sets` rows: shingles = the exploded arrays, bands from
+    the signatures, sizes = each array's size as ``bigint`` ``n``. All
+    three are per-document projections of ``sets``; pin ``sets`` when
+    more than one artifact is computed."""
+    return (
+        _explode_sets(sets, id_col),
+        _signed_bands(sets, id_col, n_hashes, bands, hash_fn),
+        sets.select(F.col(id_col), F.size("shingles").cast("bigint").alias("n")),
+    )
 
 
 def build_minhash_index(
@@ -400,12 +427,9 @@ def build_minhash_index(
     be rebuilt with the same (k, n_hashes, bands, hash_fn) that the
     admission call uses; the band table keys are meaningless across
     differing parameters."""
-    sh = word_shingles(df, text_col, id_col, k)
-    bd = banded_buckets(
-        minhash_signatures(sh, id_col, n_hashes, hash_fn), id_col, n_hashes, bands, hash_fn
+    return index_artifacts(
+        shingle_sets(df, text_col, id_col, k), id_col, n_hashes, bands, hash_fn
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    return sh, bd, sizes
 
 
 _INDEX_PARTS = ("shingles", "bands", "sizes")
@@ -490,14 +514,14 @@ def write_minhash_index(
     worst outcome of that race into a loud error instead of lost rows.
 
     ``artifacts`` (r15): precomputed (shingles, bands, sizes) frames —
-    :func:`build_minhash_index` output, typically PERSISTED by the
-    caller — written as-is instead of re-deriving them from ``df`` (which
-    may then be ``None``). Caller-managed storage (never persisted or
+    :func:`index_artifacts` output over shingle sets the caller
+    typically PERSISTED — written as-is instead of re-deriving them from
+    ``df`` (which may then be ``None``). Caller-managed storage (never persisted or
     unpersisted here), same contract as ``corpus_index`` on the admission
     path. This is how a flow that admits a batch and then appends it (or
-    rebuilds twice, as the crash-retry witness does) computes the
-    shingle/signature aggregations ONCE instead of once per call — the
-    protocol (staging, scrub, promote, marker) is identical."""
+    rebuilds twice, as the crash-retry witness does) derives the shingle
+    sets and signatures ONCE instead of once per call — the protocol
+    (staging, scrub, promote, marker) is identical."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
     if artifacts is not None and len(artifacts) != len(_INDEX_PARTS):
@@ -553,53 +577,32 @@ def write_minhash_index(
             for st in fs.listStatus(base):
                 if st.getPath().getName().startswith("_staging-"):
                     fs.delete(st.getPath(), True)
-    # The three artifacts all derive from the shingle table, whose
-    # tokenize+explode+distinct is the dominant stage — written naively,
-    # each artifact's write re-derives it (3× the dominant cost per index
-    # build; the lineage re-expansion class). Persist it across the three
-    # writes instead (the module's minhash_near_duplicates precedent):
-    # the shingle write itself populates the cache, the band and size
-    # writes consume it, and nothing outlives the call.
+    # The three artifacts all derive from the shingle sets, whose
+    # tokenize+distinct is the dominant stage — written naively, each
+    # artifact's write re-derives it. Persist the sets across the three
+    # writes instead; nothing outlives the call.
     out_base = staging if staging is not None else base_path
-    sh = None if artifacts is not None else word_shingles(
-        df, text_col, id_col, k
-    ).persist()
+    sets = None
+    if artifacts is None:
+        sets = shingle_sets(df, text_col, id_col, k).persist()
+        artifacts = index_artifacts(sets, id_col, n_hashes, bands, hash_fn)
     try:
-        # The three artifact writes are INDEPENDENT actions over the one
-        # persisted shingle table, so they run CONCURRENTLY from a small
-        # thread pool (guide §2.6: overlap independent jobs — later jobs
-        # back-fill executors freed by the current job's tail). The
-        # shingle cache dedups the shared compute: BlockInfoManager gives
-        # each cached partition a single writer, so whichever job reaches
-        # a block first computes it and the others read it — verified by
-        # row-identical artifacts under the concurrent plan. Measured at
-        # sf0.1: 2.0-2.5 s sequential → 1.1-1.35 s concurrent per corpus
-        # build (r14); at cluster scale the same structure overlaps the
-        # sizes write with the band aggregation's stragglers.
-        if artifacts is not None:
-            artifact = {
-                part: (lambda a=a: a)
-                for part, a in zip(_INDEX_PARTS, artifacts)
-            }
-        else:
-            artifact = {
-                _INDEX_PARTS[0]: lambda: sh,
-                _INDEX_PARTS[1]: lambda: banded_buckets(
-                    minhash_signatures(sh, id_col, n_hashes, hash_fn),
-                    id_col, n_hashes, bands, hash_fn,
-                ),
-                _INDEX_PARTS[2]: lambda: sh.groupBy(id_col).agg(
-                    F.count(F.lit(1)).alias("n")
-                ),
-            }
-
-        def _write(part: str) -> None:
-            artifact[part]().write.mode(write_mode).parquet(
-                os.path.join(out_base, part)
-            )
+        # The three artifact writes are INDEPENDENT actions, so they run
+        # CONCURRENTLY from a small thread pool (guide §2.6: overlap
+        # independent jobs — later jobs back-fill executors freed by the
+        # current job's tail). The sets cache dedups the shared compute:
+        # BlockInfoManager gives each cached partition a single writer, so
+        # whichever job reaches a block first computes it and the others
+        # read it. Measured at sf0.1: 2.0-2.5 s sequential → 1.1-1.35 s
+        # concurrent per corpus build.
+        def _write(part: str, frame: DataFrame) -> None:
+            frame.write.mode(write_mode).parquet(os.path.join(out_base, part))
 
         with ThreadPoolExecutor(max_workers=len(_INDEX_PARTS)) as pool:
-            futures = [pool.submit(_write, part) for part in _INDEX_PARTS]
+            futures = [
+                pool.submit(_write, part, frame)
+                for part, frame in zip(_INDEX_PARTS, artifacts)
+            ]
             # Let every write settle before raising, so a failure can't
             # leave sibling writes racing the caller's cleanup/retry.
             errs = [f.exception() for f in futures]
@@ -607,8 +610,8 @@ def write_minhash_index(
             if err is not None:
                 raise err
     finally:
-        if sh is not None:
-            sh.unpersist()
+        if sets is not None:
+            sets.unpersist()
     if staging is not None:
         # Promote: move each staged data file into its live dir under the
         # token prefix (pure renames — a failure here is repaired by the
@@ -697,18 +700,20 @@ def minhash_near_duplicates_against(
     with bucket collision counts, not |corpus|×|batch|. The full
     self-join pipeline (:func:`minhash_near_duplicates`) is the
     first-build path; this is every day after. Document ids must be
-    unique across the two sides (standard for global doc ids); the
-    Jaccard verifier runs on the union of both sides' shingle tables.
+    unique across the two sides (standard for global doc ids). Without
+    a stored index the verifier is :func:`set_jaccard_scores` over the
+    union of both sides' shingle sets; with one it is
+    :func:`jaccard_scores` over the union of their shingle rows.
 
     Eager by design (same contract as :func:`minhash_near_duplicates`
     with ``materialize=True``): the pair result is reliable-checkpointed
-    and the internally-persisted shingle caches are unpersisted before
+    and the internally-persisted caches are unpersisted before
     returning, so repeated daily admissions leave nothing pinned in
     executor storage.
 
     ``corpus_index`` — the (shingles, bands, sizes) artifacts from
     :func:`build_minhash_index` (a legacy (shingles, bands) pair is also
-    accepted — sizes are then re-counted from the candidates' shingles),
+    accepted — sizes are then counted from the candidates' shingles),
     typically read back from parquet — skips ALL corpus-side
     computation: the corpus scan, shingling, signatures and banding
     never run, which is the true production admission cost (batch-sized
@@ -728,8 +733,8 @@ def minhash_near_duplicates_against(
     back to the planner's shuffle strategy).
 
     ``batch_index`` (r15) — the batch's OWN (shingles, bands[, sizes])
-    artifacts, precomputed by the caller (typically persisted
-    :func:`build_minhash_index` frames that a following
+    artifacts, precomputed by the caller (typically
+    :func:`index_artifacts` over pinned shingle sets, which a following
     :func:`write_minhash_index` append will also write — the
     refresh-cycle flow derives them once instead of once per call).
     Caller-managed storage, same contract as ``corpus_index``: frames are
@@ -739,33 +744,25 @@ def minhash_near_duplicates_against(
     ensure_checkpoint_dir(
         (batch if batch is not None else batch_index[0]).sparkSession
     )
-    sizes_c = None
-    if corpus_index is not None:
-        sh_c, bands_c, *rest = corpus_index
-        sizes_c = rest[0] if rest else None
-        own = []
-    else:
-        sh_c = word_shingles(corpus, text_col, id_col, k).persist()
-        bands_c = banded_buckets(
-            minhash_signatures(sh_c, id_col, n_hashes, hash_fn), id_col, n_hashes, bands, hash_fn
-        )
-        own = [sh_c]
-    sizes_b_pre = bands_b_pre = None
-    if batch_index is not None:
-        sh_b, bands_b_pre, *brest = batch_index
-        sizes_b_pre = brest[0] if brest else None
-    else:
-        sh_b = word_shingles(batch, text_col, id_col, k).persist()
-        own.append(sh_b)
+    own: list[DataFrame] = []
+
+    def own_sets(frame: DataFrame) -> DataFrame:
+        sets = shingle_sets(frame, text_col, id_col, k).persist()
+        own.append(sets)
+        return sets
+
+    def own_index(frame: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+        return index_artifacts(own_sets(frame), id_col, n_hashes, bands, hash_fn)
+
     try:
-        bands_b = (
-            bands_b_pre
-            if batch_index is not None
-            else banded_buckets(
-                minhash_signatures(sh_b, id_col, n_hashes, hash_fn),
-                id_col, n_hashes, bands, hash_fn,
-            )
-        )
+        by_sets = corpus_index is None and batch_index is None
+        if by_sets:
+            sets_c, sets_b = own_sets(corpus), own_sets(batch)
+            bands_c = _signed_bands(sets_c, id_col, n_hashes, bands, hash_fn)
+            bands_b = _signed_bands(sets_b, id_col, n_hashes, bands, hash_fn)
+        else:
+            sh_c, bands_c, *sizes_c = corpus_index or own_index(corpus)
+            sh_b, bands_b, *sizes_b = batch_index or own_index(batch)
         if corpus_index is not None and broadcast_batch_bands:
             # Index path: the corpus band table is the STORED corpus-sized
             # artifact, and the batch side sits behind an aggregation whose
@@ -789,50 +786,38 @@ def minhash_near_duplicates_against(
             .select(
                 F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
             )
-            # jaccard_scores references cand at least twice (index path:
-            # three times) and exchange reuse does not cover the band-join
-            # subtree — persist the tiny output-proportional pair table
-            # rather than re-run signatures + band join per use (r11; same
-            # rationale and bounded lifetime as minhash_near_duplicates).
             .distinct()
-            .persist()
         )
-        own.append(cand)
-        sizes = None
-        if sizes_c is not None:
-            sizes_b = (
-                sizes_b_pre
-                if sizes_b_pre is not None
-                else sh_b.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-            )
-            sizes = sizes_c.select(id_col, "n").unionByName(sizes_b)
-        sh_all = sh_c.unionByName(sh_b)
-        prefiltered = False
-        if sizes is not None:
-            # Index path: restrict the (corpus-index ∪ batch) shingle
-            # union to the candidate-id set ONCE and pin the restricted
-            # table (candidate-proportional, never corpus-sized).
-            # jaccard_scores references its shingle input twice
-            # (sh_a/sh_b); un-pinned, each reference re-runs the
-            # semi-join over the stored shingle index — TWO full index
-            # scans per admission where one suffices (guide §2.4;
-            # measured r15: the two ~0.5 s 64-task index-scan broadcast
-            # builds per admission collapse to one). Same bounded
-            # lifetime as cand.
+        if by_sets:
+            out = set_jaccard_scores(sets_c.unionByName(sets_b), id_col, cand)
+        else:
+            # The row verifier and the id restriction below read cand
+            # several times; pinned, the band join runs once.
+            cand = cand.persist()
+            own.append(cand)
+            # Restrict the (corpus-index ∪ batch) shingle union to the
+            # candidate-id set ONCE and pin the restricted table
+            # (candidate-proportional, never corpus-sized): jaccard_scores
+            # references it twice, and un-pinned each reference re-runs
+            # the semi-join over the stored shingle index (measured: the
+            # two ~0.5 s index-scan broadcast builds per admission
+            # collapse to one).
             ids = (
                 cand.select(F.col("id_a").alias(id_col))
                 .unionByName(cand.select(F.col("id_b").alias(id_col)))
                 .distinct()
             )
-            sh_all = sh_all.join(
+            sh_all = sh_c.unionByName(sh_b).join(
                 F.broadcast(ids), on=id_col, how="left_semi"
             ).persist()
             own.append(sh_all)
-            prefiltered = True
-        out = jaccard_scores(
-            sh_all, id_col, cand, sizes=sizes, prefiltered=prefiltered
-        ).filter(F.col("jaccard") >= threshold)
-        return out.checkpoint(eager=True)
+            sizes = (
+                sizes_c[0].select(id_col, "n").unionByName(sizes_b[0].select(id_col, "n"))
+                if sizes_c and sizes_b
+                else sh_all.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+            )
+            out = jaccard_scores(sh_all, id_col, cand, sizes, prefiltered=True)
+        return out.filter(F.col("jaccard") >= threshold).checkpoint(eager=True)
     finally:
         for cached in own:
             cached.unpersist()
@@ -1040,8 +1025,8 @@ def connected_components_star(
     same for the smaller neighbors over min-oriented edges. Both are
     key-partitioned shuffles; the edge set is reliable-checkpointed per
     round (O(1) lineage, nothing pinned in executor storage — same
-    discipline as the min-label loop). Convergence = the star edge set
-    reaches a fixpoint (two small anti-join counts per round)."""
+    discipline as the min-label loop). Convergence = the round's output
+    is a star forest (one 2-stage aggregate per round; see below)."""
     ensure_checkpoint_dir(pairs.sparkSession)
     edges = (
         pairs.filter(F.col(a_col) != F.col(b_col))

@@ -500,33 +500,28 @@ def _idx_path(sf_dir: str, nonce: str | None = None) -> str:
 
 
 def _pinned_batch_artifacts(
-    batch: DataFrame, k: int, n_hashes: int, bands: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(shingles, bands, sizes) artifacts of one index-flow input with the
-    SHINGLE table pinned, derived once for every consumer (the admission's
-    ``batch_index`` and the append/overwrite's ``artifacts`` — VERDICT r14
-    #4: without this, each call re-runs the input's tokenize + shingle
-    distinct, the dominant stage). Only the shingle table is persisted:
-    bands/sizes are cheap aggregates over the cache, and persisting THEM
-    would freeze their 32-partition cache layout into the written
-    artifacts (AQE cannot re-coalesce cached plan output by default) —
-    tiny-file debris the admission scans would then pay for (guide §6).
-    The caller owns the unpersist (the lone persisted frame is element 0,
-    but unpersisting all three is a safe no-op)."""
-    sh = dd.word_shingles(batch, "text", "doc_id", k).persist()
-    bd = dd.banded_buckets(
-        dd.minhash_signatures(sh, "doc_id", n_hashes), "doc_id", n_hashes, bands
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    return sh, bd, sizes
+    batch: DataFrame, k: int, n_hashes: int, bands: int, hash_fn: str = "md5"
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame, DataFrame]]:
+    """(sets, (shingles, bands, sizes)) of one index-flow input: its
+    shingle sets PINNED, and the index artifacts derived from them once
+    for every consumer (the admission's ``batch_index`` and the
+    append/overwrite's ``artifacts`` — without this, each call re-runs
+    the input's tokenize + shingle distinct, the dominant stage). Only
+    the sets are persisted: the artifacts are cheap projections of the
+    cache, and persisting THEM would freeze their cache layout into the
+    written artifacts (AQE cannot re-coalesce cached plan output by
+    default) — tiny-file debris the admission scans would then pay for
+    (guide §6). The caller owns the sets' unpersist."""
+    sets = dd.shingle_sets(batch, "text", "doc_id", k).persist()
+    return sets, dd.index_artifacts(sets, "doc_id", n_hashes, bands, hash_fn)
 
 
-def _materialize_artifacts(art: tuple[DataFrame, ...]) -> None:
-    """Force the pinned shingle cache (noop sink — full compute, no
-    output): run inside the protocol-overlap pool so artifact derivation
+def _materialize_sets(sets: DataFrame) -> None:
+    """Force a pinned sets cache (noop sink — full compute, no output):
+    run inside the protocol-overlap pool so artifact derivation
     back-fills executors while the corpus index build's write jobs run
     (guide §2.6)."""
-    art[0].write.format("noop").mode("overwrite").save()
+    sets.write.format("noop").mode("overwrite").save()
 
 
 def _run_all_settled(*fns) -> None:
@@ -639,15 +634,15 @@ def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run CONCURRENTLY (guide §2.6: overlap independent jobs); the
     # admissions/append stay strictly sequential — the protocol's
     # read-after-commit contract.
-    art1 = _pinned_batch_artifacts(batch1, **kw)
-    art2 = _pinned_batch_artifacts(batch2, **kw)
+    sets1, art1 = _pinned_batch_artifacts(batch1, **kw)
+    sets2, art2 = _pinned_batch_artifacts(batch2, **kw)
     try:
         _run_all_settled(
             lambda: dd.write_minhash_index(
                 corpus, "text", "doc_id", base, mode="overwrite", **kw
             ),
-            lambda: _materialize_artifacts(art1),
-            lambda: _materialize_artifacts(art2),
+            lambda: _materialize_sets(sets1),
+            lambda: _materialize_sets(sets2),
         )
         # Admission pairs are eagerly checkpointed by the operator, so pairs1
         # is materialized BEFORE the refresh mutates the parquet artifacts.
@@ -668,8 +663,8 @@ def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=_MINHASH_THRESHOLD, **kw,
         )
     finally:
-        for frame in (*art1, *art2):
-            frame.unpersist()
+        for sets in (sets1, sets2):
+            sets.unpersist()
     return (
         pairs1.select(F.lit(1).alias("admission"), "id_a", "id_b", "jaccard")
         .unionByName(pairs2.select(F.lit(2).alias("admission"), "id_a", "id_b", "jaccard"))
@@ -786,9 +781,9 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run concurrently (guide §2.6); every protocol mutation and every
     # admission stays strictly sequential, so the crash/retry/replay
     # on-disk states are byte-identical to the sequential form.
-    artc = _pinned_batch_artifacts(corpus, **kw)
-    art1 = _pinned_batch_artifacts(batch1, **kw)
-    art2 = _pinned_batch_artifacts(batch2, **kw)
+    setsc, artc = _pinned_batch_artifacts(corpus, **kw)
+    sets1, art1 = _pinned_batch_artifacts(batch1, **kw)
+    sets2, art2 = _pinned_batch_artifacts(batch2, **kw)
 
     def admit_b2() -> DataFrame:
         return dd.minhash_near_duplicates_against(
@@ -813,8 +808,8 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # phase 1: append, simulate the mid-promote crash state, retry, admit
         _run_all_settled(
             overwrite_corpus,
-            lambda: _materialize_artifacts(art1),
-            lambda: _materialize_artifacts(art2),
+            lambda: _materialize_sets(sets1),
+            lambda: _materialize_sets(sets2),
         )
         append_b1()
         os.remove(os.path.join(base, "_appends", token))
@@ -828,8 +823,8 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_b1()
         pairs_replay = admit_b2()
     finally:
-        for frame in (*artc, *art1, *art2):
-            frame.unpersist()
+        for sets in (setsc, sets1, sets2):
+            sets.unpersist()
 
     return (
         pairs_retry.select(F.lit(1).alias("phase"), "id_a", "id_b", "jaccard")
@@ -884,14 +879,13 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" x")).alias("text"),
     )
     corpus = sub.unionByName(dups)
-    sh = dd.word_shingles(corpus, "text", "doc_id", k=3)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sets = dd.shingle_sets(corpus, "text", "doc_id", k=3)
     pairs = (
-        sizes.select(F.col("doc_id").alias("id_a"))
-        .crossJoin(sizes.select(F.col("doc_id").alias("id_b")))
+        sets.select(F.col("doc_id").alias("id_a"))
+        .crossJoin(sets.select(F.col("doc_id").alias("id_b")))
         .filter(F.col("id_a") < F.col("id_b"))
     )
-    return dd.jaccard_scores(sh, "doc_id", pairs).filter(F.col("jaccard") >= 0.5)
+    return dd.set_jaccard_scores(sets, "doc_id", pairs).filter(F.col("jaccard") >= 0.5)
 
 
 # ---------------------------------------------------------------------------

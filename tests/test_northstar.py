@@ -173,12 +173,11 @@ def test_minhash_xxhash64_production_path(spark, sf_dir):
     assert all(found[p] == md5_found[p] for p in common)
 
 
-@pytest.mark.slow  # ~5s storage-hygiene pin: round-close tier
 def test_minhash_leaves_no_storage_pinned(spark, sf_dir):
     """VERDICT r03 task 3: the minhash pipelines persist their shingle
-    tables internally; after the call returns, nothing new may remain in
-    executor storage (the result is reliable-checkpointed, caches
-    unpersisted). Delta-based so caches left by other tests don't bleed in."""
+    sets, band table and candidates internally; after each call returns,
+    the persisted-RDD set must equal its value before the call (the
+    result is reliable-checkpointed, caches unpersisted)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
@@ -188,10 +187,122 @@ def test_minhash_leaves_no_storage_pinned(spark, sf_dir):
 
     before = pinned()
     full = dd.minhash_near_duplicates(docs, "text", "doc_id", threshold=0.7)
+    assert pinned() == before, "minhash_near_duplicates changed the pinned set"
     incr = dd.minhash_near_duplicates_against(corpus, batch, "text", "doc_id")
-    assert pinned() - before == set(), "minhash left caches pinned in storage"
+    assert pinned() == before, "minhash_near_duplicates_against changed the pinned set"
     # results stay usable after the caches are gone (lineage was truncated)
     assert full.count() >= 0 and incr.count() >= 0
+
+
+def test_minhash_signatures_over_sets_match_reference(spark):
+    """Signatures projected from shingle arrays equal a pure-Python md5
+    MinHash, and for xxhash64 the min-aggregate over exploded shingle rows
+    (the row form they replaced), on edge documents."""
+    import hashlib
+    import re
+
+    k, n = 3, 32
+    texts = {
+        1: "a b",  # fewer than k tokens: no shingles, no row
+        2: "one two three",  # exactly k tokens: one shingle
+        3: "the cat sat the cat sat the cat sat",  # repeated shingles
+        4: "The  Cat\tsat   on\n\n the MAT",  # whitespace runs, upper case
+        5: " leading space and trailing space ",  # empty edge tokens
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+
+    def ref_shingles(text: str) -> set:
+        t = re.split(r"\s+", text.lower())
+        return {" ".join(t[i:i + k]) for i in range(len(t) - k + 1)}
+
+    def ref_signature(shingles: set) -> tuple:
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles]
+        return tuple(
+            min((a * h + b) % dd._MINHASH_PRIME for h in hs)
+            for a, b in dd._affine_params(n)
+        )
+
+    want_sets = {d: ref_shingles(t) for d, t in texts.items() if ref_shingles(t)}
+    assert set(want_sets) == {2, 3, 4, 5}
+    sets = dd.shingle_sets(docs, "text", "doc_id", k)
+    got_sets = {r.doc_id: r.shingles for r in sets.collect()}
+    assert {d: set(s) for d, s in got_sets.items()} == want_sets
+    assert all(len(s) == len(set(s)) for s in got_sets.values())
+    assert sorted(map(tuple, dd.word_shingles(docs, "text", "doc_id", k).collect())) == sorted(
+        (d, s) for d, ss in want_sets.items() for s in ss
+    )
+
+    got_md5 = {
+        r[0]: tuple(r[1:]) for r in dd.minhash_signatures(sets, "doc_id", n).collect()
+    }
+    assert got_md5 == {d: ref_signature(s) for d, s in want_sets.items()}
+
+    rows = dd.word_shingles(docs, "text", "doc_id", k).withColumn(
+        "__h", dd._hash32(F.col("shingle"), "xxhash64")
+    )
+    row_aggregate = rows.groupBy("doc_id").agg(*[
+        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(dd._MINHASH_PRIME)).alias(f"sig_{i}")
+        for i, (a, b) in enumerate(dd._affine_params(n))
+    ])
+    got_xx = dd.minhash_signatures(sets, "doc_id", n, "xxhash64")
+    assert got_xx.columns == row_aggregate.columns
+    assert sorted(map(tuple, got_xx.collect())) == sorted(map(tuple, row_aggregate.collect()))
+
+
+def test_minhash_queries_match_oracle_on_slice(spark, sf_dir, tmp_path):
+    """On a 100-document slice, the self-dedup MinHash, its batch-vs-corpus
+    form without an index, and the brute-force Jaccard pairs equal their
+    DuckDB oracle SQL — the oracle rows themselves run only in the slow
+    tier."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import dbt_ci_demo_spark.queries  # noqa: F401  (registers every query)
+    from dbt_ci_demo_spark.oracle_check import compare_frames, duckdb_connection
+    from dbt_ci_demo_spark.queries import registry_oracles, registry_queries
+
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(
+        table.filter(pc.less(table["doc_id"], 100)), str(tmp_path / "documents.parquet")
+    )
+    con = duckdb_connection(str(tmp_path), tables=["documents"])
+    try:
+        for name in ("dedup_minhash_lsh", "dedup_incremental_minhash", "dedup_jaccard_pairs"):
+            got = registry_queries()[name](spark, str(tmp_path)).toPandas()
+            want = con.execute(registry_oracles()[name]).fetchdf()
+            res = compare_frames(name, got, want)
+            assert res.ok, f"{name}: {res.detail} {res.mismatches[:3]}"
+            assert len(got), f"{name}: the slice produced no pairs"
+    finally:
+        con.close()
+
+
+def test_pinned_batch_artifacts_follow_hash_fn(spark, sf_dir):
+    """The index flows' pinned artifacts are built with the call's
+    ``hash_fn``: their bands equal build_minhash_index's for xxhash64."""
+    from dbt_ci_demo_spark.queries_northstar import _pinned_batch_artifacts
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(20)
+    sets, (_, bands, _) = _pinned_batch_artifacts(docs, 3, 32, 8, hash_fn="xxhash64")
+    try:
+        want = dd.build_minhash_index(docs, "text", "doc_id", hash_fn="xxhash64")[1]
+        assert sorted(map(tuple, bands.collect())) == sorted(map(tuple, want.collect()))
+    finally:
+        sets.unpersist()
+
+
+def test_minhash_lazy_plan_has_no_per_document_aggregate(spark, sf_dir):
+    """Signatures are a row projection and the verifier intersects
+    arrays, so the lazy plan's only aggregates are the candidate-pair
+    distinct: no ``sig_*`` min aggregate keyed by document id and no
+    ``n_inter`` count."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lazy = dd.minhash_near_duplicates(docs, "text", "doc_id", materialize=False)
+    plan = lazy._jdf.queryExecution().executedPlan().toString()
+    aggs = [line for line in plan.splitlines() if "Aggregate" in line]
+    assert aggs, plan  # the candidate distinct
+    assert all("functions=[]" in line for line in aggs), aggs
+    assert "n_inter" not in plan
 
 
 @pytest.mark.slow  # ~4s lazy-vs-eager equivalence: round-close tier

@@ -1,6 +1,7 @@
 """Dump the physical plan of the minhash candidate-pair band self-join
-(plans/r14 evidence: the signature subtree duplication before/after the
-band-table pin)."""
+over a pinned band table (signatures projected from pinned shingle sets).
+
+Usage: python tools/dump_minhash_plan.py [SF_DIR]"""
 from __future__ import annotations
 
 import os
@@ -22,15 +23,10 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("dump-minhash-plan")
     docs = _docs_dup(spark, sf_dir)
-    sh = dd.word_shingles(docs, "text", "doc_id", _MINHASH_K).persist()
-    sig = dd.minhash_signatures(sh, "doc_id", _MINHASH_N, "md5")
-    if hasattr(dd, "lsh_pairs_from_buckets"):
-        banded = dd.banded_buckets(
-            sig, "doc_id", _MINHASH_N, _MINHASH_BANDS, "md5"
-        ).persist()
-        cand = dd.lsh_pairs_from_buckets(banded, "doc_id")
-    else:
-        cand = dd.lsh_candidate_pairs(sig, "doc_id", _MINHASH_N, _MINHASH_BANDS, "md5")
+    sets = dd.shingle_sets(docs, "text", "doc_id", _MINHASH_K).persist()
+    sig = dd.minhash_signatures(sets, "doc_id", _MINHASH_N, "md5")
+    banded = dd.banded_buckets(sig, "doc_id", _MINHASH_N, _MINHASH_BANDS, "md5").persist()
+    cand = dd.lsh_pairs_from_buckets(banded, "doc_id")
     print("---- candidate pairs (the band self-join) ----")
     print(
         cand._jdf.queryExecution().explainString(

@@ -559,9 +559,8 @@ def allocate_budget(
     # budget·n_rows in decimal(38,0), not long: a 10^9 budget over a
     # 10^12-row stratum is 10^21 ≫ 2^63, and non-ANSI long multiplication
     # wraps SILENTLY — flipping quotas at exactly the 100 TB scale this
-    # plans for (same discipline as the volume-anomaly decision and the
-    # connected-components fixpoint sum). decimal div/mod stay exact;
-    # base ≤ budget fits back in a long.
+    # plans for (same discipline as the volume-anomaly decision).
+    # decimal div/mod stay exact; base ≤ budget fits back in a long.
     with_base = counts.crossJoin(F.broadcast(n_total)).select(
         "stratum",
         "n_rows",
@@ -1221,12 +1220,11 @@ def ntile_exact(
     max_driver_strata: int = DRIVER_STRATA_CEILING,
     pin_registry: list | None = None,
 ) -> DataFrame:
-    """Cardinality-routed exact ntile (VERDICT r09 #5 — the Lloyd
-    assignment-seam precedent, ``_kmeans_assign``'s k-routing applied to
-    the ntile family): ONE cheap distinct-count aggregate over the strata
-    columns picks the right formulation, so callers can't hit
-    :func:`ntile_histogram`'s documented literal-CASE ceiling by passing
-    a high-cardinality strata column.
+    """Cardinality-routed exact ntile (VERDICT r09 #5): ONE cheap
+    distinct-count aggregate over the strata columns picks the right
+    formulation, so callers can't hit :func:`ntile_histogram`'s
+    documented literal-CASE ceiling by passing a high-cardinality strata
+    column.
 
     - strata count ≤ ``max_driver_strata`` (default
       :data:`DRIVER_STRATA_CEILING`) → :func:`ntile_histogram`:

@@ -370,11 +370,13 @@ def emb_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_assign_expr(seed_items: list[tuple[int, list[int]]]):
-    """Nearest-centroid expression over DRIVER-HELD literal centroids
-    (the MLlib design: the quantizer is bounded model state — k×d
-    integers — not corpus data, so it lives on the driver and is embedded
-    into the scan as literals each round). Assignment becomes a pure
+def _kmeans_assign_matrix_expr(seed_items: list[tuple[int, list[int]]]):
+    """Nearest-centroid expression over DRIVER-HELD centroids: the k-means
+    assignment used by every Lloyd round and every assignment query.
+
+    The quantizer is bounded model state (k×d integers, the MLlib
+    design), so it lives on the driver and is embedded into the scan as
+    ONE nested-array literal each round. Assignment is a pure
     projection: no broadcast join, no rank window, no shuffle of any
     corpus row.
 
@@ -384,81 +386,21 @@ def _kmeans_assign_expr(seed_items: list[tuple[int, list[int]]]):
     oracle's ``|q|² − 2·q·s + |s|²``. All terms are exact: products of
     fixed-point components ≤ 2^40, partial sums ≤ 2^53, so the
     double-typed comparison is integer-exact (the module's shared
-    fixed-point invariant). Ties break to the LOWEST cluster_id via lexicographic
-    struct comparison in ``array_min`` — identical to the
-    ``row_number() OVER (ORDER BY dist, cluster_id)`` it replaces.
+    fixed-point invariant). Ties break to the LOWEST cluster_id:
+    seed_items is sorted by cluster_id, so position order equals id
+    order and the (score, pos) struct-min tie-break matches the oracle's
+    ``row_number() OVER (ORDER BY dist, cluster_id)``. The final
+    ``element_at`` maps the winning position back to its cluster_id (ids
+    need not be contiguous).
 
-    SMALL-k PATH ONLY (r07): the tree has k·d literal leaves, so this
-    expression is the right plan for k ≤ _KM_LITERAL_K_MAX (= 100) and a
-    planner-side blow-up beyond it — go through the :func:`_kmeans_assign`
-    seam, which routes large k to :func:`_kmeans_assign_matrix_expr`."""
-    q = F.col("q")
-    structs = []
-    for cid, sv in seed_items:
-        lit_sq = F.array(*[F.lit(int(v)) for v in sv]).cast("array<bigint>")
-        dot = F.aggregate(
-            F.zip_with(q, lit_sq, lambda x, y: x * y),
-            F.lit(0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-        ss = float(sum(int(v) * int(v) for v in sv))
-        structs.append(
-            F.struct(
-                (F.lit(ss) - 2 * dot).alias("score"),
-                F.lit(int(cid)).alias("cluster_id"),
-            )
-        )
-    return F.array_min(F.array(*structs))["cluster_id"]
-
-
-_KM_LITERAL_K_MAX = 0
-"""Routing threshold for the assignment seam (r07, VERDICT r06 #3;
-re-measured r15).
-
-:func:`_kmeans_assign_expr` builds one struct PER CENTROID — k·d literal
-leaves. At k = 10⁴, d = 64 that is a ~10⁶-node plan whose Catalyst
-analysis/codegen cost explodes (and codegen falls back past the 64KB
-method limit) — the planner-side bottleneck the seam was built around.
-r15 measured the assumption that the per-centroid tree is "the best
-plan while k is small": it is not — even at k = 8, d = 64 each Lloyd
-round pays ~512 ``F.lit`` py4j round trips plus analysis of a
-512-leaf tree, and the loop re-plans EVERY round with fresh centroid
-literals, so the row's wall was ~70 % driver time (jobprof: 9 jobs
-summing 1.1 s under a 3.4 s wall). The matrix form
-(:func:`_kmeans_assign_matrix_expr`) builds the centroid matrix as ONE
-F.expr SQL string — a single py4j round trip, ConstantFolding collapses
-it to one Literal shipped inside the task binary — and the executor-
-side difference at small k is noise (a transform over a k-element
-array vs k inlined structs, over the same integer-exact scores).
-Interleaved same-session A/B at k = 8 (warm min-of-3, alternating
-forms): literal 7.15/5.20 s vs matrix 4.17/2.23 s per emb_kmeans
-materialization. The threshold is therefore 0 — every k routes to the
-matrix plan; the literal builder stays as the property-test witness of
-the shared argmin contract (tests/test_northstar.py pins equality of
-the two forms)."""
-
-
-def _kmeans_assign_matrix_expr(seed_items: list[tuple[int, list[int]]]):
-    """Nearest-centroid expression over the centroid MATRIX as one
-    nested-array literal — the large-k half of the assignment seam.
-
-    Same argmin contract as :func:`_kmeans_assign_expr`: scores are
-    ``|s|² − 2·q·s`` (per-row-constant shift of the true squared
-    distance, so argmin and tie structure are preserved), all terms
-    integer-exact in doubles (components ≤ 2^40, sums ≤ 2^53), and ties
-    break to the LOWEST cluster_id — seed_items is sorted by cluster_id,
-    so position order equals id order and the (score, pos) struct-min
-    tie-break is identical. The final ``element_at`` maps the winning
-    position back to its cluster_id (ids need not be contiguous).
-
-    Construction (r10 review finding): the matrix is built as ONE
-    ``F.expr`` SQL string — a single py4j round trip, and Catalyst's
-    ConstantFolding collapses the parsed array-of-arrays to one Literal
-    before codegen. The previous ``F.lit(nested_list)`` looked like "a
-    single literal" but PySpark's ``lit`` recursively expands a list to
-    ``array(*[lit(item) ...])``: k·d driver-side py4j calls (~640k at
-    the k=10⁴, d=64 scale this path exists for) — the exact driver-side
-    blow-up the routing seam is meant to avoid."""
+    Construction: the matrix is built as ONE ``F.expr`` SQL string — a
+    single py4j round trip, and Catalyst's ConstantFolding collapses the
+    parsed array-of-arrays to one Literal shipped inside the task binary.
+    ``F.lit(nested_list)`` would expand recursively to k·d driver-side
+    py4j calls, and a struct per centroid gives a k·d-leaf tree that the
+    loop re-plans every round; at k = 8, d = 64 that form measured
+    7.15/5.20 s vs 4.17/2.23 s for this one per emb_kmeans
+    materialization (r15, interleaved same-session A/B)."""
     q = F.col("q")
     matrix_sql = ",".join(
         "array(" + ",".join(f"{int(v)}L" for v in sv) + ")"
@@ -486,18 +428,6 @@ def _kmeans_assign_matrix_expr(seed_items: list[tuple[int, list[int]]]):
         ),
     )
     return F.element_at(cids, F.array_min(scored)["pos"] + 1)
-
-
-def _kmeans_assign(seed_items: list[tuple[int, list[int]]]):
-    """The assignment seam: literal-per-centroid expression for
-    k ≤ _KM_LITERAL_K_MAX (fastest plan, bounded tree), the single
-    expr-built matrix literal above it (one py4j call, one folded
-    Literal in the optimized plan). Both paths share the exact-integer
-    argmin contract; equality is property-tested at and beyond the
-    threshold."""
-    if len(seed_items) <= _KM_LITERAL_K_MAX:
-        return _kmeans_assign_expr(seed_items)
-    return _kmeans_assign_matrix_expr(seed_items)
 
 
 def _round_half_up(x: float) -> int:
@@ -546,7 +476,7 @@ def _kmeans_loop(spark: SparkSession, sf_dir: str):
 
     Round shape (r06): the quantizer lives on the DRIVER as bounded
     model state (k×d integers — the MLlib k-means design) and each round
-    embeds it into the scan as literals (_kmeans_assign_expr). A round
+    embeds it into the scan as a literal (_kmeans_assign_matrix_expr). A round
     is therefore ONE corpus job — scan → nearest-centroid projection →
     posexplode → map-side-combined (cluster, dim) aggregate — whose only
     exchange carries k·d rows per map partition; the broadcast seed
@@ -575,7 +505,7 @@ def _kmeans_loop(spark: SparkSession, sf_dir: str):
         # before resolution); the projections collapse into one stage.
         cent_plan = (
             base.select(
-                _kmeans_assign(seed_items).alias("cluster_id"), "q"
+                _kmeans_assign_matrix_expr(seed_items).alias("cluster_id"), "q"
             )
             .select("cluster_id", F.posexplode(F.col("q")).alias("dim", "fx"))
             .select("cluster_id", F.col("dim").cast("bigint").alias("dim"), "fx")
@@ -702,7 +632,7 @@ def sim_ivf_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN served from the k-means-trained coarse quantizer: the Lloyd
     loop (emb_kmeans_converged) produces the final quantizer, every
     corpus vector is assigned to its nearest seed by the same
-    literal-centroid projection the training rounds use (zero-shuffle
+    centroid-matrix projection the training rounds use (zero-shuffle
     argmin, exact integer distances), and sim.ivf_topk probes the
     2 nearest trained clusters. This is the production IVF lifecycle —
     train the quantizer, partition the corpus by it, serve probes against
@@ -715,10 +645,10 @@ def sim_ivf_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_id join to attach cluster ids to the serving table. Computing
     # the assignment INLINE on the serving scan (no join at all) measured
     # ~15% SLOWER at sf0.1: ivf_topk consumes the corpus in multiple
-    # subtrees, so the k×d literal-centroid expression re-evaluates per
+    # subtrees, so the k×d centroid-matrix expression re-evaluates per
     # subtree, while the join resolves it once against `base`.
     assigned = base.select(
-        "vec_id", _kmeans_assign(seed_items).alias("cluster_id")
+        "vec_id", _kmeans_assign_matrix_expr(seed_items).alias("cluster_id")
     )
     emb = _t(spark, sf_dir, "embeddings")
     corpus = emb.join(assigned, "vec_id").select("vec_id", "embedding", "cluster_id")
@@ -922,7 +852,7 @@ def sim_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 
 
-_ASSIGN_MATRIX_K = 120  # > _KM_LITERAL_K_MAX: forces the matrix path
+_ASSIGN_MATRIX_K = 120  # k well past the Lloyd loop's _KM_K
 
 
 @query(
@@ -950,16 +880,15 @@ _ASSIGN_MATRIX_K = 120  # > _KM_LITERAL_K_MAX: forces the matrix path
     """,
 )
 def emb_assign_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-k cluster assignment through the r07 broadcast-matrix seam
-    (VERDICT r06 #3): k = {_ASSIGN_MATRIX_K} seed centroids exceed
-    `_KM_LITERAL_K_MAX`, so `_kmeans_assign` routes to the nested-array
-    matrix literal + transform-with-index argmin — O(1) expression nodes
-    in k where the literal-per-centroid tree would carry k·d leaves into
-    Catalyst. Still a pure zero-shuffle projection (no join, no window —
-    the oracle's cross-join + rank formulation is the semantics, not the
-    plan), exact integer distances, lowest-id tie-break. This registers
-    the matrix path for a driver correctness row; the two paths'
-    equality is additionally property-tested."""
+    """Large-k cluster assignment (VERDICT r06 #3): k = {_ASSIGN_MATRIX_K}
+    seed centroids through _kmeans_assign_matrix_expr, the nested-array
+    matrix literal + transform-with-index argmin whose plan has O(1)
+    expression nodes in k. A pure zero-shuffle projection (no join, no
+    window — the oracle's cross-join + rank formulation is the
+    semantics, not the plan), exact integer distances, lowest-id
+    tie-break. This is the assignment's driver correctness row at a k
+    the Lloyd loop does not reach; it is also property-tested against a
+    brute-force argmin."""
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", _kmeans_quant_expr().alias("q"))
     seed_items = _collect_seed_items(
@@ -968,5 +897,5 @@ def emb_assign_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return base.select(
-        "vec_id", _kmeans_assign(seed_items).alias("cluster_id")
+        "vec_id", _kmeans_assign_matrix_expr(seed_items).alias("cluster_id")
     )

@@ -987,29 +987,21 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clustering: connected components over the SimHash near-dup
     pair graph (A~B, B~C ⇒ one cluster even though (A,C) was never
     emitted), with the cluster-minimum as survivor — the step that turns
-    pairwise detections into corpus dedup decisions. Pregel-style
-    min-label propagation (one shuffle per round, lineage truncated per
-    round); the dense banded pair graph converges in a handful of rounds."""
+    pairwise detections into corpus dedup decisions. Runs
+    dd.duplicate_clusters, i.e. star connected components; the dense
+    banded pair graph converges in 3 rounds at sf0.1."""
     pairs = dd.simhash_near_duplicates(_docs_dup(spark, sf_dir), "text", "doc_id", max_hamming=3)
     return dd.duplicate_clusters(pairs)
 
 
 @query("dedup_cluster_star", oracle=_cluster_components_oracle)
 def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering result via the large-star/small-star alternation
-    (operators/dedup.connected_components_star, Kiveris et al. SoCC'14)
-    — the O(log diameter) variant for high-diameter general graphs.
-    Deliberately value-checked against the SAME unrolled min-label
-    oracle as dedup_cluster_components: both algorithms must label every
-    node with its component minimum, so a hash match here certifies the
-    star rewriting end-to-end, not just on toy graphs."""
+    """The same query as dedup_cluster_components, kept as its own
+    registered row. Both run dd.duplicate_clusters (star connected
+    components) and are value-checked against the SAME unrolled min-label
+    DuckDB oracle, an algorithm independent of the one under test."""
     pairs = dd.simhash_near_duplicates(_docs_dup(spark, sf_dir), "text", "doc_id", max_hamming=3)
-    cc = dd.connected_components_star(pairs)
-    return cc.select(
-        F.col("id").alias("doc_id"),
-        F.col("component").alias("cluster_id"),
-        (F.col("id") == F.col("component")).alias("is_survivor"),
-    )
+    return dd.duplicate_clusters(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -1359,13 +1351,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: cluster assignment is the r06 Lloyd path — the k seed
     vectors are driver-held bounded model state, and assignment is a
     pure zero-shuffle projection (no broadcast join, no rank window)
-    via the routed seam `_kmeans_assign`: one struct per centroid while
-    k ≤ `_KM_LITERAL_K_MAX` (= 100; the registered k = 8 plans the
-    literal path), and a single nested-array
-    matrix literal with a transform-with-index argmin above that — the
-    literal-per-centroid tree is k·d expression LEAVES, which at
-    production k in the 10^4+ range is a planner-side blow-up
-    (Catalyst analysis + 64KB codegen limit), not an executor problem.
+    via `_kmeans_assign_matrix_expr`: a single nested-array matrix
+    literal with a transform-with-index argmin, whose plan stays O(1)
+    expression nodes in k up to production k in the 10^4+ range.
     The only exchanges are the equi self-join on cluster_id
     (hash-partitioned; with production k in the 10^4+ range the key
     space is wide and AQE skew-splits outliers) and the final
@@ -1375,7 +1363,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_ci_demo_spark.queries_embed import (
         _FX,
         _collect_seed_items,
-        _kmeans_assign,
+        _kmeans_assign_matrix_expr,
     )
 
     corpus = _emb_dup(spark, sf_dir)
@@ -1392,7 +1380,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     assigned = base.select(
-        "vec_id", "v", _kmeans_assign(seed_items).alias("cluster_id")
+        "vec_id", "v", _kmeans_assign_matrix_expr(seed_items).alias("cluster_id")
     )
     # Per-pair cosine evaluates THREE 64-element folds (dot + both norms);
     # the norms depend only on the row, so they are precomputed once per

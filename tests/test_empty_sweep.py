@@ -73,5 +73,5 @@ def test_layout_family_empty(spark):
 
 def test_graph_empty_already_covered_and_clusters(spark):
     e = spark.createDataFrame([], "id_a bigint, id_b bigint")
-    assert dd.connected_components(e).count() == 0
+    assert dd.connected_components_star(e).count() == 0
     assert dd.duplicate_clusters(e).count() == 0

@@ -37,8 +37,8 @@ def test_minhash_finds_injected_dups(spark, sf_dir):
 def test_connected_components_chain_and_islands(spark):
     """Transitivity across a chain (no direct A-C pair), separate
     components, and survivor marking. Also (r04): the loop leaves nothing
-    pinned in executor storage — labels are reliable-checkpointed (disk),
-    edges unpersisted on exit."""
+    pinned in executor storage — each round's edge set is
+    reliable-checkpointed (disk), never persisted."""
     pairs = spark.createDataFrame(
         # chain 1-2-3-4, island pair 10-11, triangle 20-21-22
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
@@ -47,7 +47,7 @@ def test_connected_components_chain_and_islands(spark):
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     out = {r.doc_id: (r.cluster_id, r.is_survivor) for r in dd.duplicate_clusters(pairs).collect()}
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    assert after - before == set(), "connected_components left caches pinned"
+    assert after - before == set(), "duplicate_clusters left caches pinned"
     assert out == {
         1: (1, True), 2: (1, False), 3: (1, False), 4: (1, False),
         10: (10, True), 11: (10, False),
@@ -55,31 +55,56 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
+def _union_find_components(pairs):
+    """Reference labeling for the CC tests: {node: min node of its
+    component} by plain union-find, independent of the Spark operator."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 @pytest.mark.slow  # ~25s randomized graph sweep: round-close tier
-def test_star_components_match_minlabel_and_beat_diameter(spark):
+def test_star_components_match_union_find_and_beat_diameter(spark):
     """connected_components_star (large-star/small-star alternation) must
-    produce the same (node, component-min) labeling as min-label
-    propagation on arbitrary graphs — and converge on a 64-hop chain,
-    whose diameter exceeds min-label's 25-round budget (the case the
-    SCALE audit reserves this operator for: O(log d) vs O(d) rounds)."""
+    label every node with its component minimum, as a union-find built
+    here does, on a random sparse graph and on a near-duplicate-cluster
+    shape (dense cliques plus a bridge and an isolated self-pair) — and
+    converge on a 64-hop chain, longer than its 50-round bound: rounds
+    grow with log(diameter), not one per hop."""
     import random
 
     rng = random.Random(7)
     nodes = list(range(1, 120))
-    random_pairs = [
+    random_pairs = sorted({
         (min(a, b), max(a, b))
         for a, b in (rng.sample(nodes, 2) for _ in range(90))
-    ]
-    df = spark.createDataFrame(sorted(set(random_pairs)), "id_a bigint, id_b bigint")
-    star = {(r.id, r.component) for r in dd.connected_components_star(df).collect()}
-    minl = {(r.id, r.component) for r in dd.connected_components(df).collect()}
-    assert star == minl
+    })
+    # near-dup clusters from banding are quasi-cliques: three cliques of
+    # 12, 8 and 5 docs, the last two joined by one bridge pair
+    cliques = [range(200, 212), range(300, 308), range(400, 405)]
+    clique_pairs = sorted(
+        {(a, b) for c in cliques for a in c for b in c if a < b}
+        | {(307, 400), (500, 500)}
+    )
+    for pairs in (random_pairs, clique_pairs):
+        df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
+        star = {(r.id, r.component) for r in dd.connected_components_star(df).collect()}
+        assert star == set(_union_find_components(pairs).items())
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 65)], "id_a bigint, id_b bigint"
     )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        dd.connected_components(chain, max_iter=25)
     out = {r.id: r.component for r in dd.connected_components_star(chain).collect()}
     assert out == {i: 1 for i in range(1, 66)}
 
@@ -90,29 +115,22 @@ def test_star_components_match_minlabel_and_beat_diameter(spark):
     assert {tuple(r) for r in dd.connected_components_star(single).collect()} == {(9, 9)}
 
 
-@pytest.mark.slow  # ~10s measured round-count sweep: round-close tier
-def test_star_round_count_logarithmic_vs_minlabel_linear(spark):
-    """VERDICT r04 task 5: MEASURE the round counts, don't assert them
-    from the paper. On a 16-node chain (diameter 15), min-label needs
-    ~diameter rounds (one hop of label travel per round) while
-    large-star/small-star needs O(log d). The measured numbers feed
-    SCALE.md's iterative-operator section."""
+@pytest.mark.slow  # ~5s measured round-count run: round-close tier
+def test_star_round_count_logarithmic(spark):
+    """VERDICT r04 task 5: MEASURE the round count, don't assert it from
+    the paper. On a 16-node chain (diameter 15) large-star/small-star
+    needs O(log d) rounds, where min-label propagation would need ~15.
+    The measured number feeds SCALE.md's iterative-operator section."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 16)], "id_a bigint, id_b bigint"
     )
-    s_min, s_star = {}, {}
-    minl = {
-        (r.id, r.component)
-        for r in dd.connected_components(chain, max_iter=30, stats=s_min).collect()
-    }
+    s_star = {}
     star = {
         (r.id, r.component)
         for r in dd.connected_components_star(chain, stats=s_star).collect()
     }
-    assert star == minl == {(i, 1) for i in range(1, 17)}
-    assert s_min["rounds"] >= 15, s_min  # linear in diameter
+    assert star == {(i, 1) for i in range(1, 17)}
     assert s_star["rounds"] <= 8, s_star  # logarithmic
-    assert s_star["rounds"] * 2 < s_min["rounds"], (s_star, s_min)
 
 
 @pytest.mark.slow  # ~5s synthetic supernode property run: round-close tier
@@ -142,7 +160,7 @@ def test_connected_components_empty_and_bound(spark):
     assert dd.duplicate_clusters(empty).count() == 0
     chain = spark.createDataFrame([(i, i + 1) for i in range(1, 9)], "id_a bigint, id_b bigint")
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        dd.connected_components(chain, max_iter=1)
+        dd.connected_components_star(chain, max_iter=1)
 
 
 @pytest.mark.slow  # ~5s equivalence-vs-md5-path: round-close tier
@@ -1615,12 +1633,12 @@ def test_quantized_codes_roundtrip_parquet(spark, sf_dir, tmp_path):
 
 
 def test_kmeans_assign_expr_matches_bruteforce_argmin(spark):
-    """The literal-centroid assignment expression (r06 Lloyd rewrite) must
-    reproduce the brute-force argmin over full squared distances,
-    including ties — equal-distance vectors go to the LOWEST cluster_id,
-    the same order the rank-window shape it replaced used. Vectors are
-    chosen to force ties (symmetric seeds around the midpoint) and
-    negative components."""
+    """The k-means assignment expression (the centroid-matrix literal the
+    Lloyd loop uses) must reproduce the brute-force argmin over full
+    squared distances, including ties — equal-distance vectors go to the
+    LOWEST cluster_id, the same order the rank-window shape it replaced
+    used. Vectors are chosen to force ties (symmetric seeds around the
+    midpoint), negative components and vectors sitting on a seed."""
     from dbt_ci_demo_spark import queries_embed as qe
 
     seeds = [(0, [0, 0, 0]), (1, [1000, 0, 0]), (2, [-1000, 0, 0]), (3, [0, 1000, -1000])]
@@ -1644,22 +1662,19 @@ def test_kmeans_assign_expr_matches_bruteforce_argmin(spark):
     got = {
         r["vec_id"]: r["cluster_id"]
         for r in df.select(
-            "vec_id", qe._kmeans_assign_expr(seeds).alias("cluster_id")
+            "vec_id", qe._kmeans_assign_matrix_expr(seeds).alias("cluster_id")
         ).collect()
     }
     assert got == {vid: brute(q) for vid, q in vectors}
 
 
-@pytest.mark.slow  # ~8s two-path equivalence: round-close tier (both assignment
-# paths carry their own oracle rows: emb_assign_matrix / emb_kmeans_*)
-def test_kmeans_assign_matrix_path_matches_literal_path(spark):
-    """r07 (VERDICT r06 #3): the broadcast-matrix assignment
+@pytest.mark.slow  # ~5s randomized sweep: round-close tier (the assignment
+# also carries its own oracle rows: emb_assign_matrix / emb_kmeans_*)
+def test_kmeans_assign_matches_bruteforce_argmin_sweep(spark):
+    """r07 (VERDICT r06 #3): the centroid-matrix assignment
     (_kmeans_assign_matrix_expr — one nested-array literal, O(1) plan
-    nodes in k) must agree with the literal-per-centroid path AND the
-    brute-force argmin on every vector, including exact ties and
-    non-contiguous cluster ids; and the _kmeans_assign seam must route
-    by _KM_LITERAL_K_MAX. Randomized property sweep plus the adversarial
-    tie fixtures of the literal-path test."""
+    nodes in k) must agree with the brute-force argmin on every vector
+    at k = 120, including exact ties and non-contiguous cluster ids."""
     import random
 
     from dbt_ci_demo_spark import queries_embed as qe
@@ -1669,7 +1684,7 @@ def test_kmeans_assign_matrix_path_matches_literal_path(spark):
     # non-contiguous ids exercise the element_at position->id mapping
     seeds = sorted(
         (cid, [rng.randint(-1000, 1000) for _ in range(d)])
-        for cid in rng.sample(range(0, 500), 120)  # 120 > _KM_LITERAL_K_MAX
+        for cid in rng.sample(range(0, 500), 120)
     )
     vectors = [(i, [rng.randint(-1500, 1500) for _ in range(d)]) for i in range(200)]
     # force exact ties: vectors at the midpoint of two seed pairs
@@ -1684,26 +1699,13 @@ def test_kmeans_assign_matrix_path_matches_literal_path(spark):
         )[1]
 
     df = spark.createDataFrame(vectors, "vec_id int, q array<bigint>")
-    lit_got = {
-        r["vec_id"]: r["cluster_id"]
-        for r in df.select(
-            "vec_id", qe._kmeans_assign_expr(seeds).alias("cluster_id")
-        ).collect()
-    }
-    mat_got = {
+    got = {
         r["vec_id"]: r["cluster_id"]
         for r in df.select(
             "vec_id", qe._kmeans_assign_matrix_expr(seeds).alias("cluster_id")
         ).collect()
     }
-    expect = {vid: brute(q) for vid, q in vectors}
-    assert lit_got == expect
-    assert mat_got == expect
-    # seam routing: small k -> literal tree (k·d leaves, no element_at);
-    # large k -> matrix literal (element_at present)
-    small = seeds[: qe._KM_LITERAL_K_MAX]
-    assert "element_at" not in str(qe._kmeans_assign(small)._jc)
-    assert "element_at" in str(qe._kmeans_assign(seeds)._jc)
+    assert got == {vid: brute(q) for vid, q in vectors}
 
 
 def test_semdedup_drops_exactly_injected_dups(spark, sf_dir):

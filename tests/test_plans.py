@@ -394,7 +394,9 @@ def test_kmeans_round_is_single_exchange_no_join_no_window(spark, sf_dir):
         )
     )
     cent = (
-        base.select(qe._kmeans_assign_expr(seed_items).alias("cluster_id"), "q")
+        base.select(
+            qe._kmeans_assign_matrix_expr(seed_items).alias("cluster_id"), "q"
+        )
         .select("cluster_id", F.posexplode(F.col("q")).alias("dim", "fx"))
         .groupBy("cluster_id", "dim")
         .agg(F.sum("fx").alias("s"), F.count(F.lit(1)).alias("n"))

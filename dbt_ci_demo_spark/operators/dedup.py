@@ -97,19 +97,17 @@ def shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataF
     return with_toks.select(F.col(id_col), F.array_distinct(shingles).alias("shingles"))
 
 
-def _explode_sets(sets: DataFrame, id_col: str) -> DataFrame:
+def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
+    """Distinct word k-shingles per document as (id, shingle) rows: the
+    :func:`shingle_sets` arrays exploded."""
     # explode_outer, not explode: for a plain explode of a column Spark
     # infers a size(shingles) > 0 filter and pushes it below the
     # projection that builds the array, which then runs twice per row and
     # ahead of the short-document filter (an ANSI slice error on a doc
     # with < k tokens). The arrays are never empty, so the rows are equal.
-    return sets.select(F.col(id_col), F.explode_outer("shingles").alias("shingle"))
-
-
-def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
-    """Distinct word k-shingles per document as (id, shingle) rows: the
-    :func:`shingle_sets` arrays exploded (the stored-index row form)."""
-    return _explode_sets(shingle_sets(df, text_col, id_col, k), id_col)
+    return shingle_sets(df, text_col, id_col, k).select(
+        F.col(id_col), F.explode_outer("shingles").alias("shingle")
+    )
 
 
 _MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
@@ -264,8 +262,8 @@ def set_jaccard_scores(sets: DataFrame, id_col: str, pairs: DataFrame) -> DataFr
     :func:`shingle_sets` arrays: |A∩B| / (|A|+|B|-|A∩B|) with |A∩B| =
     size(array_intersect(A, B)). Two id-keyed joins bring each pair its
     two arrays; the score is a row projection, so no stage aggregates
-    shingle rows. The verifier of every path that holds the arrays
-    (self-dedup, first build, admission without a stored index)."""
+    shingle rows. The family's one verifier: self-dedup and every
+    admission path, with or without a stored index."""
     sa = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sa"))
     sb = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sb"))
     n_inter = F.size(F.array_intersect("sa", "sb"))
@@ -277,60 +275,6 @@ def set_jaccard_scores(sets: DataFrame, id_col: str, pairs: DataFrame) -> DataFr
             "id_b",
             F.round(
                 n_inter.cast("double") / (F.size("sa") + F.size("sb") - n_inter), 6
-            ).alias("jaccard"),
-        )
-    )
-
-
-def jaccard_scores(
-    shingles: DataFrame, id_col: str, pairs: DataFrame, sizes: DataFrame,
-    prefiltered: bool = False,
-) -> DataFrame:
-    """Exact Jaccard similarity for candidate pairs over the STORED
-    index's row form: (id, shingle) rows plus the per-doc count artifact
-    ``sizes`` (id, n) of :func:`build_minhash_index` — the admission
-    path's verifier (:func:`set_jaccard_scores` is the array-form one).
-    |A∩B| is an equi-join on (id, shingle) counted per pair; the counts
-    come from the artifact, and the shingle table — the corpus-sized
-    index read back from parquet — is semi-joined down to the
-    (broadcast) candidate-id set first. No stage aggregates or shuffles
-    the full corpus.
-
-    ``prefiltered``: the caller already restricted ``shingles`` to the
-    candidate-id set (and typically PERSISTED the restricted table), so
-    the semi-join here would be a redundant second derivation of the
-    candidate ids — skip it. Without a caller-side pin the semi-join
-    subtree is referenced twice below (``sh_a``/``sh_b``) and the stored
-    shingle index is scanned twice per admission."""
-    sh = shingles
-    if not prefiltered:
-        ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        sh = shingles.join(F.broadcast(ids), on=id_col, how="left_semi")
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sh_a, on="id_a")
-        .join(sh_b, on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
-    return (
-        pairs.join(inter, on=["id_a", "id_b"], how="left")
-        .join(na, on="id_a")
-        .join(nb, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.coalesce(F.col("n_inter"), F.lit(0)).cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.coalesce(F.col("n_inter"), F.lit(0))),
-                6,
             ).alias("jaccard"),
         )
     )
@@ -392,47 +336,17 @@ def minhash_near_duplicates(
 def index_artifacts(
     sets: DataFrame, id_col: str, n_hashes: int = 32, bands: int = 8,
     hash_fn: str = "md5",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The stored index's (shingles, bands, sizes) artifacts derived from
-    :func:`shingle_sets` rows: shingles = the exploded arrays, bands from
-    the signatures, sizes = each array's size as ``bigint`` ``n``. All
-    three are per-document projections of ``sets``; pin ``sets`` when
-    more than one artifact is computed."""
-    return (
-        _explode_sets(sets, id_col),
-        _signed_bands(sets, id_col, n_hashes, bands, hash_fn),
-        sets.select(F.col(id_col), F.size("shingles").cast("bigint").alias("n")),
-    )
+) -> tuple[DataFrame, DataFrame]:
+    """The stored index's (sets, bands) artifacts: the :func:`shingle_sets`
+    rows themselves and their band table (:func:`banded_buckets` of the
+    signatures). Both are per-document; pin ``sets`` when both are
+    computed. An index must be built with the same (k, n_hashes, bands,
+    hash_fn) as the admission that reads it: band keys are meaningless
+    across differing parameters."""
+    return sets, _signed_bands(sets, id_col, n_hashes, bands, hash_fn)
 
 
-def build_minhash_index(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    n_hashes: int = 32,
-    bands: int = 8,
-    hash_fn: str = "md5",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Precompute the STORABLE near-dup index of a corpus: the distinct
-    shingle table (id, shingle), the banded-bucket table
-    (id, band_id, band_hash), and the per-doc shingle-count table
-    (id, n). All three are plain DataFrames meant to be written to
-    parquet once per corpus build; daily batch admission then reads them
-    back and passes them to :func:`minhash_near_duplicates_against` as
-    ``corpus_index`` — turning the per-batch cost into batch-sized work
-    plus index-reads, with NO recomputation over the corpus: the sizes
-    artifact in particular removes the corpus-wide per-doc count
-    aggregate from the admission path's Jaccard verifier. The index must
-    be rebuilt with the same (k, n_hashes, bands, hash_fn) that the
-    admission call uses; the band table keys are meaningless across
-    differing parameters."""
-    return index_artifacts(
-        shingle_sets(df, text_col, id_col, k), id_col, n_hashes, bands, hash_fn
-    )
-
-
-_INDEX_PARTS = ("shingles", "bands", "sizes")
+_INDEX_PARTS = ("sets", "bands")
 
 
 def _index_fs(spark: SparkSession, base_path: str):
@@ -456,20 +370,21 @@ def write_minhash_index(
     bands: int = 8,
     hash_fn: str = "md5",
     batch_id: str | None = None,
-    artifacts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    artifacts: tuple[DataFrame, DataFrame] | None = None,
 ) -> None:
     """Write (``mode="overwrite"``) or REFRESH (``mode="append"``) the
-    stored near-dup index at ``base_path`` — three parquet tables,
-    ``shingles/``, ``bands/``, ``sizes/`` (the
-    :func:`build_minhash_index` artifacts).
+    stored near-dup index at ``base_path`` — two parquet tables, ``sets/``
+    (id, shingles array: one row per document) and ``bands/``
+    (id, band_id, band_hash) — the :func:`index_artifacts` of the
+    shingle sets of ``df``.
 
     The append mode is the daily-admission refresh: after a batch is
     admitted via :func:`minhash_near_duplicates_against`, appending the
     batch's own per-doc artifacts makes the stored index serve
     corpus ∪ batch for the NEXT admission. The refresh is EXACT, not
-    approximate, because none of the three artifacts aggregates across
-    documents — shingles are per-doc distinct rows, band hashes are
-    per-doc, sizes are per-doc counts — so
+    approximate, because neither artifact aggregates across documents —
+    a sets row is one document's distinct shingles and band hashes are
+    per-doc — so
     index(corpus ∪ batch) = index(corpus) ∪ index(batch) row-for-row,
     and a refresh costs O(|batch|) compute + writes while the corpus
     partitions are never read or rewritten. (This is why the index
@@ -479,7 +394,7 @@ def write_minhash_index(
     (k, n_hashes, bands, hash_fn).
 
     Failure / retry contract (ADVICE r12): an append never writes into
-    the live artifact dirs directly. The three artifacts are staged to
+    the live artifact dirs directly. Both artifacts are staged to
     ``_staging-<token>/`` under ``base_path``, then PROMOTED by per-file
     rename (cheap metadata ops; each promoted file carries the batch
     token as a name prefix), and — when ``batch_id`` is supplied — a
@@ -487,9 +402,9 @@ def write_minhash_index(
     ``batch_id``, the append is idempotent and retry-exact: a repeated
     call whose marker exists is a no-op, and a retry after a mid-promote
     failure first scrubs the exact files its token promoted before
-    re-staging, so no duplicate per-doc rows can survive (duplicate
-    sizes rows would otherwise multiply pairs in jaccard_scores on the
-    admission path). WITHOUT a ``batch_id`` a failed append cannot be
+    re-staging, so no duplicate per-doc rows can survive (a duplicate
+    sets row would otherwise multiply pairs in the admission verifier's
+    id joins). WITHOUT a ``batch_id`` a failed append cannot be
     retried exactly — rebuild with ``mode="overwrite"`` (which is itself
     retry-idempotent: it replaces every artifact, INCLUDING the append
     protocol's byproducts — commit markers under ``_appends/`` and any
@@ -504,7 +419,7 @@ def write_minhash_index(
     disjoint markers), but the protocol is not a snapshot-isolated
     commit — a reader that lists the live dirs DURING a promote can see
     a batch's artifacts partially (e.g. its bands but not yet its
-    sizes), which silently drops that batch's pairs from an admission
+    sets), which silently drops that batch's pairs from an admission
     run. Readers must therefore gate on the batch's commit marker
     (``_appends/<sha256(batch_id)[:16]>``) or serialize reads behind
     the append — the standard single-writer, read-after-commit contract
@@ -513,7 +428,7 @@ def write_minhash_index(
     failed attempt to die); the rename-failure raise below turns the
     worst outcome of that race into a loud error instead of lost rows.
 
-    ``artifacts`` (r15): precomputed (shingles, bands, sizes) frames —
+    ``artifacts`` (r15): precomputed (sets, bands) frames —
     :func:`index_artifacts` output over shingle sets the caller
     typically PERSISTED — written as-is instead of re-deriving them from
     ``df`` (which may then be ``None``). Caller-managed storage (never persisted or
@@ -526,7 +441,7 @@ def write_minhash_index(
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
     if artifacts is not None and len(artifacts) != len(_INDEX_PARTS):
         raise ValueError(
-            f"artifacts must be (shingles, bands, sizes), got {len(artifacts)}"
+            f"artifacts must be (sets, bands), got {len(artifacts)}"
         )
     spark = (df if df is not None else artifacts[0]).sparkSession
     staging: str | None = None
@@ -577,24 +492,24 @@ def write_minhash_index(
             for st in fs.listStatus(base):
                 if st.getPath().getName().startswith("_staging-"):
                     fs.delete(st.getPath(), True)
-    # The three artifacts all derive from the shingle sets, whose
-    # tokenize+distinct is the dominant stage — written naively, each
-    # artifact's write re-derives it. Persist the sets across the three
-    # writes instead; nothing outlives the call.
+    # Both artifacts derive from the shingle sets, whose tokenize+distinct
+    # is the dominant stage — written naively, each artifact's write
+    # re-derives it. Persist the sets across the two writes instead;
+    # nothing outlives the call.
     out_base = staging if staging is not None else base_path
     sets = None
     if artifacts is None:
         sets = shingle_sets(df, text_col, id_col, k).persist()
         artifacts = index_artifacts(sets, id_col, n_hashes, bands, hash_fn)
     try:
-        # The three artifact writes are INDEPENDENT actions, so they run
+        # The artifact writes are INDEPENDENT actions, so they run
         # CONCURRENTLY from a small thread pool (guide §2.6: overlap
         # independent jobs — later jobs back-fill executors freed by the
         # current job's tail). The sets cache dedups the shared compute:
         # BlockInfoManager gives each cached partition a single writer, so
         # whichever job reaches a block first computes it and the others
-        # read it. Measured at sf0.1: 2.0-2.5 s sequential → 1.1-1.35 s
-        # concurrent per corpus build.
+        # read it. Measured at sf0.1 (three-part index): 2.0-2.5 s
+        # sequential → 1.1-1.35 s concurrent per corpus build.
         def _write(part: str, frame: DataFrame) -> None:
             frame.write.mode(write_mode).parquet(os.path.join(out_base, part))
 
@@ -664,14 +579,12 @@ def write_minhash_index(
 
 def read_minhash_index(
     spark: SparkSession, base_path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """Read back the stored index written by :func:`write_minhash_index`,
-    in the (shingles, bands, sizes) order
-    :func:`minhash_near_duplicates_against` expects as ``corpus_index``."""
-    sh, bd, sizes = (
-        spark.read.parquet(os.path.join(base_path, p)) for p in _INDEX_PARTS
-    )
-    return sh, bd, sizes
+    in the (sets, bands) order :func:`minhash_near_duplicates_against`
+    expects as ``corpus_index``."""
+    sets, bd = (spark.read.parquet(os.path.join(base_path, p)) for p in _INDEX_PARTS)
+    return sets, bd
 
 
 def minhash_near_duplicates_against(
@@ -684,9 +597,8 @@ def minhash_near_duplicates_against(
     bands: int = 8,
     threshold: float = 0.7,
     hash_fn: str = "md5",
-    corpus_index: tuple[DataFrame, ...] | None = None,
-    broadcast_batch_bands: bool = True,
-    batch_index: tuple[DataFrame, ...] | None = None,
+    corpus_index: tuple[DataFrame, DataFrame] | None = None,
+    batch_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Incremental near-dup detection: MinHash candidates between a NEW
     batch and an EXISTING corpus only — never corpus×corpus. Returns
@@ -700,10 +612,9 @@ def minhash_near_duplicates_against(
     with bucket collision counts, not |corpus|×|batch|. The full
     self-join pipeline (:func:`minhash_near_duplicates`) is the
     first-build path; this is every day after. Document ids must be
-    unique across the two sides (standard for global doc ids). Without
-    a stored index the verifier is :func:`set_jaccard_scores` over the
-    union of both sides' shingle sets; with one it is
-    :func:`jaccard_scores` over the union of their shingle rows.
+    unique across the two sides (standard for global doc ids). Every
+    path verifies with :func:`set_jaccard_scores` over the union of both
+    sides' shingle sets.
 
     Eager by design (same contract as :func:`minhash_near_duplicates`
     with ``materialize=True``): the pair result is reliable-checkpointed
@@ -711,70 +622,38 @@ def minhash_near_duplicates_against(
     returning, so repeated daily admissions leave nothing pinned in
     executor storage.
 
-    ``corpus_index`` — the (shingles, bands, sizes) artifacts from
-    :func:`build_minhash_index` (a legacy (shingles, bands) pair is also
-    accepted — sizes are then counted from the candidates' shingles),
-    typically read back from parquet — skips ALL corpus-side
-    computation: the corpus scan, shingling, signatures and banding
-    never run, which is the true production admission cost (batch-sized
-    work + index reads). The Jaccard verifier semi-joins the corpus
-    shingle index down to candidate ids before anything else, so no
-    stage on the index path aggregates or shuffles the full corpus.
-    When provided, the corpus-side frames are used as-is (caller-managed
-    storage, not persisted here); they must have been built with the
-    same (k, n_hashes, bands, hash_fn).
-
-    ``broadcast_batch_bands`` (default True, index path only): pin the
-    band join's build side to the BATCH band table so the stored corpus
-    band index is never shuffled — without the hint the batch side sits
-    behind an aggregation whose size the planner cannot estimate, and
-    the scale plan degrades to a sort-merge join over the whole index.
-    Set False for a batch too large to broadcast (the join then falls
-    back to the planner's shuffle strategy).
-
-    ``batch_index`` (r15) — the batch's OWN (shingles, bands[, sizes])
-    artifacts, precomputed by the caller (typically
-    :func:`index_artifacts` over pinned shingle sets, which a following
-    :func:`write_minhash_index` append will also write — the
-    refresh-cycle flow derives them once instead of once per call).
-    Caller-managed storage, same contract as ``corpus_index``: frames are
-    used as-is, never persisted or unpersisted here, and must have been
+    ``corpus_index`` — the corpus's (sets, bands) :func:`index_artifacts`,
+    typically read back by :func:`read_minhash_index` — skips ALL
+    corpus-side computation: the corpus scan, shingling, signatures and
+    banding never run, which is the true production admission cost
+    (batch-sized work + index reads). The batch bands are broadcast into
+    the band join, and the stored sets are semi-joined down to the
+    candidate ids and pinned once — the index path's one pin — so no
+    stage aggregates or shuffles the full corpus. The frames are used
+    as-is (caller-managed storage, not persisted here) and must have been
     built with the same (k, n_hashes, bands, hash_fn).
+
+    ``batch_index`` (r15) — the batch's OWN (sets, bands), precomputed by
+    the caller (typically :func:`index_artifacts` over pinned shingle
+    sets, which a following :func:`write_minhash_index` append also
+    writes — the refresh-cycle flow derives them once instead of once
+    per call). Caller-managed storage, same contract as ``corpus_index``.
     """
     ensure_checkpoint_dir(
         (batch if batch is not None else batch_index[0]).sparkSession
     )
     own: list[DataFrame] = []
 
-    def own_sets(frame: DataFrame) -> DataFrame:
+    def own_index(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
         sets = shingle_sets(frame, text_col, id_col, k).persist()
         own.append(sets)
-        return sets
-
-    def own_index(frame: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-        return index_artifacts(own_sets(frame), id_col, n_hashes, bands, hash_fn)
+        return index_artifacts(sets, id_col, n_hashes, bands, hash_fn)
 
     try:
-        by_sets = corpus_index is None and batch_index is None
-        if by_sets:
-            sets_c, sets_b = own_sets(corpus), own_sets(batch)
-            bands_c = _signed_bands(sets_c, id_col, n_hashes, bands, hash_fn)
-            bands_b = _signed_bands(sets_b, id_col, n_hashes, bands, hash_fn)
-        else:
-            sh_c, bands_c, *sizes_c = corpus_index or own_index(corpus)
-            sh_b, bands_b, *sizes_b = batch_index or own_index(batch)
-        if corpus_index is not None and broadcast_batch_bands:
-            # Index path: the corpus band table is the STORED corpus-sized
-            # artifact, and the batch side sits behind an aggregation whose
-            # size estimate the planner treats as unknown — at scale the
-            # unhinted plan is a sort-merge join that SHUFFLES the whole
-            # corpus index, exactly the cost the stored-index design exists
-            # to avoid (guide §3.1: estimates are badly wrong after
-            # aggregations; hint the side you know is small). Broadcasting
-            # the batch bands keeps the corpus scan shuffle-free at any
-            # corpus size; pass ``broadcast_batch_bands=False`` for a
-            # batch too large to broadcast (the decontaminate_against
-            # escape-hatch precedent).
+        sets_c, bands_c = corpus_index or own_index(corpus)
+        sets_b, bands_b = batch_index or own_index(batch)
+        if corpus_index is not None:
+            # unhinted, the planner may shuffle the stored corpus bands
             bands_b = F.broadcast(bands_b)
         cand = (
             bands_c.alias("l")
@@ -788,35 +667,19 @@ def minhash_near_duplicates_against(
             )
             .distinct()
         )
-        if by_sets:
-            out = set_jaccard_scores(sets_c.unionByName(sets_b), id_col, cand)
-        else:
-            # The row verifier and the id restriction below read cand
-            # several times; pinned, the band join runs once.
-            cand = cand.persist()
-            own.append(cand)
-            # Restrict the (corpus-index ∪ batch) shingle union to the
-            # candidate-id set ONCE and pin the restricted table
-            # (candidate-proportional, never corpus-sized): jaccard_scores
-            # references it twice, and un-pinned each reference re-runs
-            # the semi-join over the stored shingle index (measured: the
-            # two ~0.5 s index-scan broadcast builds per admission
-            # collapse to one).
+        sets = sets_c.unionByName(sets_b)
+        if corpus_index is not None:
+            # The verifier reads the sets twice (once per pair side);
+            # restricted to the candidate ids and pinned, the stored
+            # sets are scanned once and the pin is candidate-sized.
             ids = (
                 cand.select(F.col("id_a").alias(id_col))
                 .unionByName(cand.select(F.col("id_b").alias(id_col)))
                 .distinct()
             )
-            sh_all = sh_c.unionByName(sh_b).join(
-                F.broadcast(ids), on=id_col, how="left_semi"
-            ).persist()
-            own.append(sh_all)
-            sizes = (
-                sizes_c[0].select(id_col, "n").unionByName(sizes_b[0].select(id_col, "n"))
-                if sizes_c and sizes_b
-                else sh_all.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-            )
-            out = jaccard_scores(sh_all, id_col, cand, sizes, prefiltered=True)
+            sets = sets.join(F.broadcast(ids), on=id_col, how="left_semi").persist()
+            own.append(sets)
+        out = set_jaccard_scores(sets, id_col, cand)
         return out.filter(F.col("jaccard") >= threshold).checkpoint(eager=True)
     finally:
         for cached in own:

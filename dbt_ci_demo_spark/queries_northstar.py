@@ -501,19 +501,18 @@ def _idx_path(sf_dir: str, nonce: str | None = None) -> str:
 
 def _pinned_batch_artifacts(
     batch: DataFrame, k: int, n_hashes: int, bands: int, hash_fn: str = "md5"
-) -> tuple[DataFrame, tuple[DataFrame, DataFrame, DataFrame]]:
-    """(sets, (shingles, bands, sizes)) of one index-flow input: its
-    shingle sets PINNED, and the index artifacts derived from them once
+) -> tuple[DataFrame, DataFrame]:
+    """(sets, bands) index artifacts of one index-flow input, derived once
     for every consumer (the admission's ``batch_index`` and the
     append/overwrite's ``artifacts`` — without this, each call re-runs
-    the input's tokenize + shingle distinct, the dominant stage). Only
-    the sets are persisted: the artifacts are cheap projections of the
-    cache, and persisting THEM would freeze their cache layout into the
-    written artifacts (AQE cannot re-coalesce cached plan output by
-    default) — tiny-file debris the admission scans would then pay for
-    (guide §6). The caller owns the sets' unpersist."""
+    the input's tokenize + shingle distinct, the dominant stage). The
+    sets are PINNED and the bands are derived from the pin. The
+    written ``sets/`` is the pinned frame itself, so it keeps the cache's
+    partitioning: the flows repartition each input to the default
+    parallelism first, which measured 4 files per part at sf0.1 on 4
+    cores. The caller owns the sets' unpersist."""
     sets = dd.shingle_sets(batch, "text", "doc_id", k).persist()
-    return sets, dd.index_artifacts(sets, "doc_id", n_hashes, bands, hash_fn)
+    return dd.index_artifacts(sets, "doc_id", n_hashes, bands, hash_fn)
 
 
 def _materialize_sets(sets: DataFrame) -> None:
@@ -634,15 +633,15 @@ def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run CONCURRENTLY (guide §2.6: overlap independent jobs); the
     # admissions/append stay strictly sequential — the protocol's
     # read-after-commit contract.
-    sets1, art1 = _pinned_batch_artifacts(batch1, **kw)
-    sets2, art2 = _pinned_batch_artifacts(batch2, **kw)
+    art1 = _pinned_batch_artifacts(batch1, **kw)
+    art2 = _pinned_batch_artifacts(batch2, **kw)
     try:
         _run_all_settled(
             lambda: dd.write_minhash_index(
                 corpus, "text", "doc_id", base, mode="overwrite", **kw
             ),
-            lambda: _materialize_sets(sets1),
-            lambda: _materialize_sets(sets2),
+            lambda: _materialize_sets(art1[0]),
+            lambda: _materialize_sets(art2[0]),
         )
         # Admission pairs are eagerly checkpointed by the operator, so pairs1
         # is materialized BEFORE the refresh mutates the parquet artifacts.
@@ -663,7 +662,7 @@ def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=_MINHASH_THRESHOLD, **kw,
         )
     finally:
-        for sets in (sets1, sets2):
+        for sets, _ in (art1, art2):
             sets.unpersist()
     return (
         pairs1.select(F.lit(1).alias("admission"), "id_a", "id_b", "jaccard")
@@ -736,7 +735,7 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     renames and the marker write leaves behind (commit marker absent,
     one of the token's promoted files missing), retry the same append,
     and admit batch 2 against the read-back index. A non-exact retry
-    (duplicate per-doc sizes/shingle rows) multiplies admission pairs or
+    (duplicate per-doc sets/bands rows) multiplies admission pairs or
     shifts jaccard; a non-repairing retry loses candidates.
 
     Phase 2 — rebuild-replay: overwrite-rebuild the corpus index (which
@@ -781,9 +780,9 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run concurrently (guide §2.6); every protocol mutation and every
     # admission stays strictly sequential, so the crash/retry/replay
     # on-disk states are byte-identical to the sequential form.
-    setsc, artc = _pinned_batch_artifacts(corpus, **kw)
-    sets1, art1 = _pinned_batch_artifacts(batch1, **kw)
-    sets2, art2 = _pinned_batch_artifacts(batch2, **kw)
+    artc = _pinned_batch_artifacts(corpus, **kw)
+    art1 = _pinned_batch_artifacts(batch1, **kw)
+    art2 = _pinned_batch_artifacts(batch2, **kw)
 
     def admit_b2() -> DataFrame:
         return dd.minhash_near_duplicates_against(
@@ -808,8 +807,8 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # phase 1: append, simulate the mid-promote crash state, retry, admit
         _run_all_settled(
             overwrite_corpus,
-            lambda: _materialize_sets(sets1),
-            lambda: _materialize_sets(sets2),
+            lambda: _materialize_sets(art1[0]),
+            lambda: _materialize_sets(art2[0]),
         )
         append_b1()
         os.remove(os.path.join(base, "_appends", token))
@@ -823,7 +822,7 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_b1()
         pairs_replay = admit_b2()
     finally:
-        for sets in (setsc, sets1, sets2):
+        for sets, _ in (artc, art1, art2):
             sets.unpersist()
 
     return (

@@ -191,11 +191,12 @@ def test_minhash_xxhash64_production_path(spark, sf_dir):
     assert all(found[p] == md5_found[p] for p in common)
 
 
-def test_minhash_leaves_no_storage_pinned(spark, sf_dir):
+def test_minhash_leaves_no_storage_pinned(spark, sf_dir, tmp_path):
     """VERDICT r03 task 3: the minhash pipelines persist their shingle
-    sets, band table and candidates internally; after each call returns,
-    the persisted-RDD set must equal its value before the call (the
-    result is reliable-checkpointed, caches unpersisted)."""
+    sets, band table and candidate-restricted index sets internally;
+    after each call returns, the persisted-RDD set must equal its value
+    before the call (the result is reliable-checkpointed, caches
+    unpersisted) — with and without a read-back stored index."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
@@ -208,8 +209,16 @@ def test_minhash_leaves_no_storage_pinned(spark, sf_dir):
     assert pinned() == before, "minhash_near_duplicates changed the pinned set"
     incr = dd.minhash_near_duplicates_against(corpus, batch, "text", "doc_id")
     assert pinned() == before, "minhash_near_duplicates_against changed the pinned set"
+    base = str(tmp_path / "idx")
+    dd.write_minhash_index(corpus, "text", "doc_id", base)
+    assert pinned() == before, "write_minhash_index changed the pinned set"
+    via_index = dd.minhash_near_duplicates_against(
+        None, batch, "text", "doc_id", corpus_index=dd.read_minhash_index(spark, base)
+    )
+    assert pinned() == before, "index admission changed the pinned set"
     # results stay usable after the caches are gone (lineage was truncated)
     assert full.count() >= 0 and incr.count() >= 0
+    assert {tuple(r) for r in via_index.collect()} == {tuple(r) for r in incr.collect()}
 
 
 def test_minhash_signatures_over_sets_match_reference(spark):
@@ -297,13 +306,15 @@ def test_minhash_queries_match_oracle_on_slice(spark, sf_dir, tmp_path):
 
 def test_pinned_batch_artifacts_follow_hash_fn(spark, sf_dir):
     """The index flows' pinned artifacts are built with the call's
-    ``hash_fn``: their bands equal build_minhash_index's for xxhash64."""
+    ``hash_fn``: their bands equal index_artifacts' for xxhash64."""
     from dbt_ci_demo_spark.queries_northstar import _pinned_batch_artifacts
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(20)
-    sets, (_, bands, _) = _pinned_batch_artifacts(docs, 3, 32, 8, hash_fn="xxhash64")
+    sets, bands = _pinned_batch_artifacts(docs, 3, 32, 8, hash_fn="xxhash64")
     try:
-        want = dd.build_minhash_index(docs, "text", "doc_id", hash_fn="xxhash64")[1]
+        want = dd.index_artifacts(
+            dd.shingle_sets(docs, "text", "doc_id"), "doc_id", hash_fn="xxhash64"
+        )[1]
         assert sorted(map(tuple, bands.collect())) == sorted(map(tuple, want.collect()))
     finally:
         sets.unpersist()
@@ -449,7 +460,7 @@ def test_containment_blind_spot_and_staged_recovery(spark):
 # dedup_index_refresh_cycle oracle row)
 def test_incremental_minhash_index_artifact_roundtrip(spark, sf_dir, tmp_path):
     """The corpus near-dup index is a real storable artifact: build it
-    once, write shingles+bands to parquet, read them back, and admission
+    once, write sets+bands to parquet, read them back, and admission
     via corpus_index must (a) return the exact pairs of the recompute
     path and (b) never touch the corpus DataFrame at all (corpus=None
     proves no corpus-side computation happens)."""
@@ -464,14 +475,12 @@ def test_incremental_minhash_index_artifact_roundtrip(spark, sf_dir, tmp_path):
             corpus, batch, "text", "doc_id"
         ).collect()
     }
-    sh, bd, sizes = dd.build_minhash_index(corpus, "text", "doc_id")
-    sh.write.mode("overwrite").parquet(str(tmp_path / "sh"))
+    sets, bd = dd.index_artifacts(dd.shingle_sets(corpus, "text", "doc_id"), "doc_id")
+    sets.write.mode("overwrite").parquet(str(tmp_path / "sets"))
     bd.write.mode("overwrite").parquet(str(tmp_path / "bd"))
-    sizes.write.mode("overwrite").parquet(str(tmp_path / "sizes"))
     idx = (
-        spark.read.parquet(str(tmp_path / "sh")),
+        spark.read.parquet(str(tmp_path / "sets")),
         spark.read.parquet(str(tmp_path / "bd")),
-        spark.read.parquet(str(tmp_path / "sizes")),
     )
     via_index = {
         tuple(r)
@@ -480,15 +489,6 @@ def test_incremental_minhash_index_artifact_roundtrip(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert via_index == direct
-    # legacy 2-tuple index (no sizes artifact) still works: sizes are
-    # re-counted from the candidates' semi-joined shingles
-    via_legacy = {
-        tuple(r)
-        for r in dd.minhash_near_duplicates_against(
-            None, batch, "text", "doc_id", corpus_index=idx[:2]
-        ).collect()
-    }
-    assert via_legacy == direct
 
 
 @pytest.mark.slow  # ~12s refresh-vs-rebuild equivalence: round-close tier (same
@@ -497,7 +497,7 @@ def test_minhash_index_append_refresh_equals_rebuild(spark, sf_dir, tmp_path):
     """r12 (VERDICT r11 #5): ``write_minhash_index(mode="append")`` after a
     batch admission must serve EXACTLY the index rebuilt from scratch over
     corpus ∪ batch — the refresh is exact because no index artifact
-    aggregates across documents (shingles/bands/sizes are all per-doc row
+    aggregates across documents (sets and bands are both per-doc row
     sets). Admitting a later batch against the refreshed vs the rebuilt
     index must return identical pairs, and the refreshed index must find
     pairs at all (nonempty — the property isn't vacuous)."""
@@ -538,8 +538,8 @@ def test_minhash_index_append_refresh_equals_rebuild(spark, sf_dir, tmp_path):
 @pytest.mark.slow  # ~15s: four index writes; failure modes covered nowhere else
 def test_minhash_index_append_idempotent_and_retry_exact(spark, sf_dir, tmp_path):
     """ADVICE r12: an append with a ``batch_id`` must be (a) a no-op when
-    repeated after commit (duplicate per-doc sizes rows would multiply
-    pairs in jaccard_scores on the admission path), and (b) retry-EXACT
+    repeated after commit (duplicate per-doc sets rows would multiply
+    pairs in the admission verifier's id joins), and (b) retry-EXACT
     after a simulated mid-promote failure — the retry scrubs exactly the
     files its token promoted before re-promoting, leaving the live index
     row-identical to a single clean append. Staging must never leak into
@@ -559,18 +559,17 @@ def test_minhash_index_append_idempotent_and_retry_exact(spark, sf_dir, tmp_path
     )
 
     def snapshot() -> tuple:
-        sh, bd, sizes = dd.read_minhash_index(spark, base)
+        sets, bd = dd.read_minhash_index(spark, base)
         return (
-            frozenset(tuple(r) for r in sh.collect()),
+            frozenset(_set_row(r) for r in sets.collect()),
             frozenset(tuple(r) for r in bd.collect()),
-            frozenset(tuple(r) for r in sizes.collect()),
-            sizes.count(),  # multiset guard: dup per-doc rows change count
-            sh.count(),
+            sets.count(),  # multiset guard: dup per-doc rows change count
+            sets.select("doc_id").distinct().count(),
             bd.count(),
         )
 
     clean = snapshot()
-    assert clean[3] == clean[2].__len__()  # sizes: one row per doc
+    assert clean[2] == clean[3]  # sets: one row per doc
 
     # (a) committed repeat is a no-op
     dd.write_minhash_index(
@@ -626,21 +625,25 @@ def test_minhash_index_overwrite_scrubs_markers_and_staging(spark, sf_dir, tmp_p
     assert not os.path.exists(os.path.join(base, "_appends"))
     assert not _glob.glob(os.path.join(base, "_staging-*"))
 
-    # sizes has one row per SHINGLE-ELIGIBLE doc (docs with < k tokens
-    # produce no shingles and no sizes row)
+    # sets has one row per SHINGLE-ELIGIBLE doc (docs with < k tokens
+    # produce no shingles and no sets row)
     def eligible(d) -> int:
         return dd.word_shingles(d, "text", "doc_id").select("doc_id").distinct().count()
 
+    def indexed_docs() -> int:
+        sets, _ = dd.read_minhash_index(spark, base)
+        n = sets.count()
+        assert n == sets.select("doc_id").distinct().count()  # one row per doc
+        return n
+
     corpus_docs = eligible(corpus)
-    _, _, sizes = dd.read_minhash_index(spark, base)
-    assert sizes.count() == corpus_docs  # rebuilt index is corpus-only
+    assert indexed_docs() == corpus_docs  # rebuilt index is corpus-only
 
     # the replayed batch_id must actually append against the rebuilt index
     dd.write_minhash_index(
         batch, "text", "doc_id", base, mode="append", batch_id="day-1"
     )
-    _, _, sizes = dd.read_minhash_index(spark, base)
-    assert sizes.count() == corpus_docs + eligible(batch)
+    assert indexed_docs() == corpus_docs + eligible(batch)
 
 
 @pytest.mark.slow  # ~10s: failed-promote raise + retry; ADVICE r13 low
@@ -710,11 +713,10 @@ def test_minhash_index_promote_rename_failure_raises_and_retries(
     )
 
     def rows(b: str) -> tuple:
-        sh, bd, sizes = dd.read_minhash_index(spark, b)
+        sets, bd = dd.read_minhash_index(spark, b)
         return (
-            sorted(tuple(r) for r in sh.collect()),
+            sorted(_set_row(r) for r in sets.collect()),
             sorted(tuple(r) for r in bd.collect()),
-            sorted(tuple(r) for r in sizes.collect()),
         )
 
     assert rows(base) == rows(clean_base)
@@ -726,34 +728,59 @@ def _hashlib_sha16(batch_id: str) -> str:
     return _hashlib.sha256(batch_id.encode("utf-8")).hexdigest()[:16]
 
 
-def test_admission_jaccard_plan_uses_index_sizes(spark, sf_dir, tmp_path):
-    """VERDICT r04 task 2: on the index admission path the Jaccard
-    verifier must (a) semi-join the corpus shingle index down to
-    candidate ids before the intersection join and (b) consume the
-    precomputed sizes artifact — the plan must reference the sizes
-    parquet, not re-aggregate per-doc counts over the corpus index."""
+def _set_row(r) -> tuple:
+    """A stored ``sets`` row as a hashable value: (id, sorted shingles)."""
+    return r[0], tuple(sorted(r[1]))
+
+
+def test_admission_restricts_stored_sets_to_candidates(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """On the index admission path the verifier reads the stored ``sets/``
+    restricted to the candidate ids: the frame handed to
+    set_jaccard_scores holds exactly one row per candidate document, is
+    read from the index's sets parquet, and is the one frame the call
+    pins (the batch artifacts here are caller-managed and unpinned)."""
     from dbt_ci_demo_spark.queries_northstar import _docs_dup
 
     docs = _docs_dup(spark, sf_dir).limit(400)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    sh, bd, sizes = dd.build_minhash_index(corpus, "text", "doc_id")
-    sh.write.mode("overwrite").parquet(str(tmp_path / "sh"))
-    sizes.write.mode("overwrite").parquet(str(tmp_path / "sizes"))
-    sh_c = spark.read.parquet(str(tmp_path / "sh"))
-    sizes_c = spark.read.parquet(str(tmp_path / "sizes"))
-    sh_b = dd.word_shingles(batch, "text", "doc_id")
-    sizes_b = sh_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    pairs = spark.createDataFrame([(0, 1)], "id_a bigint, id_b bigint")
-    out = dd.jaccard_scores(
-        sh_c.unionByName(sh_b),
-        "doc_id",
-        pairs,
-        sizes=sizes_c.select("doc_id", "n").unionByName(sizes_b),
+    base = str(tmp_path / "idx")
+    dd.write_minhash_index(corpus, "text", "doc_id", base)
+    batch_index = dd.index_artifacts(dd.shingle_sets(batch, "text", "doc_id"), "doc_id")
+
+    def pinned() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    seen = {}
+    real = dd.set_jaccard_scores
+
+    def spy(sets, id_col, pairs):
+        cand = pairs.collect()
+        seen["cand_ids"] = sorted({r.id_a for r in cand} | {r.id_b for r in cand})
+        seen["set_ids"] = sorted(r[0] for r in sets.select(id_col).collect())
+        seen["plan"] = sets._jdf.queryExecution().executedPlan().toString()
+        seen["new_pins"] = len(pinned() - before)
+        return real(sets, id_col, pairs)
+
+    monkeypatch.setattr(dd, "set_jaccard_scores", spy)
+    before = pinned()
+    out = dd.minhash_near_duplicates_against(
+        None, batch, "text", "doc_id",
+        corpus_index=dd.read_minhash_index(spark, base),
+        batch_index=batch_index,
+        threshold=0.5,
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, "corpus shingles not semi-joined to candidates"
-    assert str(tmp_path / "sizes") in plan, "precomputed sizes artifact unused"
+    assert out.count() > 0
+    assert seen["set_ids"] == seen["cand_ids"], "stored sets not restricted to candidates"
+    assert len(seen["set_ids"]) < docs.count()
+    # a parquet scan of stored shingle arrays: the index's sets/ part
+    assert "ReadSchema: struct<doc_id:bigint,shingles:array<string>>" in seen["plan"]
+    assert seen["new_pins"] == 1, seen["new_pins"]
+    # id-set difference: the async ContextCleaner may drop an earlier
+    # test's pin meanwhile; the contract is that no new pin outlives the call
+    assert pinned() - before == set()
 
 
 @pytest.mark.slow  # ~4s equivalence-vs-bruteforce: round-close tier

@@ -52,7 +52,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dbt_ci_demo_spark.session import ensure_checkpoint_dir
+from dbt_ci_demo_spark.session import checkpoint, pinned
 
 
 def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -319,18 +319,11 @@ def minhash_near_duplicates(
         sig = minhash_signatures(sets, id_col, n_hashes, hash_fn)
         cand = lsh_candidate_pairs(sig, id_col, n_hashes, bands, hash_fn)
         return set_jaccard_scores(sets, id_col, cand).filter(F.col("jaccard") >= threshold)
-    ensure_checkpoint_dir(df.sparkSession)
-    sets.persist()
-    banded = None
-    try:
-        banded = _signed_bands(sets, id_col, n_hashes, bands, hash_fn).persist()
-        cand = lsh_pairs_from_buckets(banded, id_col)
-        out = set_jaccard_scores(sets, id_col, cand).filter(F.col("jaccard") >= threshold)
-        return out.checkpoint(eager=True)
-    finally:
-        sets.unpersist()
-        if banded is not None:
-            banded.unpersist()
+    banded = _signed_bands(sets, id_col, n_hashes, bands, hash_fn)
+    cand = lsh_pairs_from_buckets(banded, id_col)
+    out = set_jaccard_scores(sets, id_col, cand).filter(F.col("jaccard") >= threshold)
+    with pinned(sets, banded):
+        return checkpoint(out)
 
 
 def index_artifacts(
@@ -494,39 +487,36 @@ def write_minhash_index(
                     fs.delete(st.getPath(), True)
     # Both artifacts derive from the shingle sets, whose tokenize+distinct
     # is the dominant stage — written naively, each artifact's write
-    # re-derives it. Persist the sets across the two writes instead;
-    # nothing outlives the call.
+    # re-derives it. Pin the sets across the two writes instead; nothing
+    # outlives the call.
     out_base = staging if staging is not None else base_path
-    sets = None
+    own: list[DataFrame] = []
     if artifacts is None:
-        sets = shingle_sets(df, text_col, id_col, k).persist()
-        artifacts = index_artifacts(sets, id_col, n_hashes, bands, hash_fn)
-    try:
-        # The artifact writes are INDEPENDENT actions, so they run
-        # CONCURRENTLY from a small thread pool (guide §2.6: overlap
-        # independent jobs — later jobs back-fill executors freed by the
-        # current job's tail). The sets cache dedups the shared compute:
-        # BlockInfoManager gives each cached partition a single writer, so
-        # whichever job reaches a block first computes it and the others
-        # read it. Measured at sf0.1 (three-part index): 2.0-2.5 s
-        # sequential → 1.1-1.35 s concurrent per corpus build.
-        def _write(part: str, frame: DataFrame) -> None:
-            frame.write.mode(write_mode).parquet(os.path.join(out_base, part))
+        own.append(shingle_sets(df, text_col, id_col, k))
+        artifacts = index_artifacts(own[0], id_col, n_hashes, bands, hash_fn)
 
-        with ThreadPoolExecutor(max_workers=len(_INDEX_PARTS)) as pool:
-            futures = [
-                pool.submit(_write, part, frame)
-                for part, frame in zip(_INDEX_PARTS, artifacts)
-            ]
-            # Let every write settle before raising, so a failure can't
-            # leave sibling writes racing the caller's cleanup/retry.
-            errs = [f.exception() for f in futures]
-        for err in errs:
-            if err is not None:
-                raise err
-    finally:
-        if sets is not None:
-            sets.unpersist()
+    # The artifact writes are INDEPENDENT actions, so they run
+    # CONCURRENTLY from a small thread pool (guide §2.6: overlap
+    # independent jobs — later jobs back-fill executors freed by the
+    # current job's tail). The sets cache dedups the shared compute:
+    # BlockInfoManager gives each cached partition a single writer, so
+    # whichever job reaches a block first computes it and the others
+    # read it. Measured at sf0.1 (three-part index): 2.0-2.5 s
+    # sequential → 1.1-1.35 s concurrent per corpus build.
+    def _write(part: str, frame: DataFrame) -> None:
+        frame.write.mode(write_mode).parquet(os.path.join(out_base, part))
+
+    with pinned(*own), ThreadPoolExecutor(max_workers=len(_INDEX_PARTS)) as pool:
+        futures = [
+            pool.submit(_write, part, frame)
+            for part, frame in zip(_INDEX_PARTS, artifacts)
+        ]
+        # Let every write settle before raising, so a failure can't
+        # leave sibling writes racing the caller's cleanup/retry.
+        errs = [f.exception() for f in futures]
+    for err in errs:
+        if err is not None:
+            raise err
     if staging is not None:
         # Promote: move each staged data file into its live dir under the
         # token prefix (pure renames — a failure here is repaired by the
@@ -639,51 +629,44 @@ def minhash_near_duplicates_against(
     writes — the refresh-cycle flow derives them once instead of once
     per call). Caller-managed storage, same contract as ``corpus_index``.
     """
-    ensure_checkpoint_dir(
-        (batch if batch is not None else batch_index[0]).sparkSession
-    )
     own: list[DataFrame] = []
 
     def own_index(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
-        sets = shingle_sets(frame, text_col, id_col, k).persist()
-        own.append(sets)
-        return index_artifacts(sets, id_col, n_hashes, bands, hash_fn)
+        own.append(shingle_sets(frame, text_col, id_col, k))
+        return index_artifacts(own[-1], id_col, n_hashes, bands, hash_fn)
 
-    try:
-        sets_c, bands_c = corpus_index or own_index(corpus)
-        sets_b, bands_b = batch_index or own_index(batch)
-        if corpus_index is not None:
-            # unhinted, the planner may shuffle the stored corpus bands
-            bands_b = F.broadcast(bands_b)
-        cand = (
-            bands_c.alias("l")
-            .join(
-                bands_b.alias("r"),
-                (F.col("l.band_id") == F.col("r.band_id"))
-                & (F.col("l.band_hash") == F.col("r.band_hash")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-            )
+    sets_c, bands_c = corpus_index or own_index(corpus)
+    sets_b, bands_b = batch_index or own_index(batch)
+    if corpus_index is not None:
+        # unhinted, the planner may shuffle the stored corpus bands
+        bands_b = F.broadcast(bands_b)
+    cand = (
+        bands_c.alias("l")
+        .join(
+            bands_b.alias("r"),
+            (F.col("l.band_id") == F.col("r.band_id"))
+            & (F.col("l.band_hash") == F.col("r.band_hash")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
+        )
+        .distinct()
+    )
+    sets = sets_c.unionByName(sets_b)
+    if corpus_index is not None:
+        # The verifier reads the sets twice (once per pair side);
+        # restricted to the candidate ids and pinned, the stored
+        # sets are scanned once and the pin is candidate-sized.
+        ids = (
+            cand.select(F.col("id_a").alias(id_col))
+            .unionByName(cand.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
-        sets = sets_c.unionByName(sets_b)
-        if corpus_index is not None:
-            # The verifier reads the sets twice (once per pair side);
-            # restricted to the candidate ids and pinned, the stored
-            # sets are scanned once and the pin is candidate-sized.
-            ids = (
-                cand.select(F.col("id_a").alias(id_col))
-                .unionByName(cand.select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            sets = sets.join(F.broadcast(ids), on=id_col, how="left_semi").persist()
-            own.append(sets)
+        sets = sets.join(F.broadcast(ids), on=id_col, how="left_semi")
+        own.append(sets)
+    with pinned(*own):
         out = set_jaccard_scores(sets, id_col, cand)
-        return out.filter(F.col("jaccard") >= threshold).checkpoint(eager=True)
-    finally:
-        for cached in own:
-            cached.unpersist()
+        return checkpoint(out.filter(F.col("jaccard") >= threshold))
 
 
 def containment_candidates(
@@ -693,7 +676,6 @@ def containment_candidates(
     max_doc_freq: int = 20,
     min_shared: int = 2,
     min_containment: float = 0.3,
-    pin_input: bool = True,
 ) -> DataFrame:
     """Containment/partial-overlap detection from shared winnowing
     fingerprints (the plagiarism-detection half of dedup that MinHash
@@ -727,22 +709,13 @@ def containment_candidates(
     exact-dedup → near-dedup → containment; tests pin both the blind
     spot and the staged recovery.
 
-    ``pin_input`` (default True): this operator references ``fps`` from
-    FIVE subtrees (per-doc sizes, the stop-hash df table, and both
-    self-join sides through the rare filter), so an un-pinned input
-    re-derives its whole lineage — the winnowing shingle/hash CPU pass —
-    once per subtree (the r08 engine-wide lineage audit found 18 leaf
-    scans in the registered query's plan; pinning measured ~25% faster
-    even at sf0.1, and at 100 TB four redundant corpus derivations are
-    the dominant cost). The pin is a lazy localCheckpoint: one
-    materialization inside the first action, every subtree reads the
-    computed rows. Pass False when ``fps`` is already a materialized
-    table (a bare scan is cheaper re-read than copied into executor
-    storage)."""
+    ``fps`` is read by several subtrees (per-doc sizes, the stop-hash df
+    table, both self-join sides), so it is cut once with
+    :func:`~dbt_ci_demo_spark.session.checkpoint` at call time (SCALE.md
+    "Materialization policy")."""
     if max_doc_freq < 2:
         raise ValueError("max_doc_freq must be >= 2 (pairs need 2 docs)")
-    if pin_input:
-        fps = fps.localCheckpoint(eager=False)
+    fps = checkpoint(fps)
     sizes = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     kept_fp = (
         fps.groupBy(fp_col)
@@ -814,18 +787,17 @@ def connected_components_star(
     same for the smaller neighbors over min-oriented edges. Both are
     key-partitioned shuffles; the edge set is reliable-checkpointed per
     round, so lineage stays O(1) and nothing is pinned in executor
-    storage (a local checkpoint's blocks could never be released).
-    Convergence = the round's output is a star forest (one 2-stage
-    aggregate per round; see below)."""
-    ensure_checkpoint_dir(pairs.sparkSession)
-    edges = (
+    storage (a local checkpoint's blocks would stay there until the
+    ContextCleaner frees them after GC; SCALE.md "Materialization
+    policy"). Convergence = the round's output is a star forest (one
+    2-stage aggregate per round; see below)."""
+    edges = checkpoint(
         pairs.filter(F.col(a_col) != F.col(b_col))
         .select(
             F.least(F.col(a_col), F.col(b_col)).alias("a"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
         )
         .distinct()
-        .checkpoint(eager=True)
     )
     isolated = pairs.filter(F.col(a_col) == F.col(b_col)).select(
         F.col(a_col).alias("id")
@@ -903,7 +875,7 @@ def connected_components_star(
     # one 2-stage aggregate per round in place of the per-round count
     # and the final anti-join.
     for rounds in range(1, max_iter + 1):
-        new_edges = small_star(large_star(edges)).checkpoint(eager=True)
+        new_edges = checkpoint(small_star(large_star(edges)))
         stacked = new_edges.select(
             F.col("a").alias("n"), F.lit(0).alias("b_side")
         ).unionByName(
@@ -1059,38 +1031,12 @@ def simhash_near_duplicates(
     ``hash_fn`` is forwarded to :func:`simhash32` (md5 = oracle parity,
     xxhash64 = production).
 
-    Pin discipline (r14, hash-routed like the signature plan itself):
-    the bucket self-join references the block table from BOTH sides and
-    the subtrees share no execution (one side plans as a
-    BroadcastExchange — nothing to reuse; the broadcast build FINISHES
-    before the probe side streams), so the signature derivation runs
-    twice sequentially per materialization. Whether fixing that pays
-    depends on what the duplicated subtree CONTAINS, so the pin is
-    routed by ``hash_fn`` on measurement:
-
-    - ``xxhash64`` (production): the signature is the EXPLODED
-      token→groupBy plan — the duplicate re-runs a corpus token explode
-      plus a doc-keyed aggregation SHUFFLE. Pinning the slim block
-      table (id, simhash, block_id, block_val — 4 rows/doc, no text),
-      eager-checkpointing the pair result and releasing the pin (the
-      minhash_near_duplicates contract) removes the second pass:
-      fresh-JVM min5 2.00 → 1.40 (−30 %), and at 100 TB the avoided
-      pass is a full token shuffle over the corpus.
-    - ``md5`` (oracle parity): the signature is the ZERO-SHUFFLE fused
-      per-row conv battery — duplicating it costs two cheap fully
-      parallel scan stages, while a pin must serialize them behind a
-      cache materialization and pay the checkpoint round-trip.
-      Measured TWICE this round (signature-table pin: +8 %; block-table
-      pin, interleaved stash A/B: 1.95 → 2.72 min5) — the lazy form
-      stays, and the composing CC queries keep fusing the pair plan
-      into their own first checkpoint.
-
-    NOTE the API consequence (ADVICE r14): with ``hash_fn="xxhash64"``
-    this function is EAGER — it runs the full pair computation and
-    writes checkpoint files at call time, so callers that only build or
-    inspect the plan still pay full materialization; the md5 path stays
-    lazy. If a lazy xxhash64 composition is ever needed, compose
-    :func:`simhash32` + the 4-block banding directly."""
+    With ``hash_fn="xxhash64"`` the block table is pinned and the pair
+    result checkpointed, so this function is EAGER (it runs the pair
+    computation at call time); the md5 path stays lazy and unpinned
+    (measured both ways: SCALE.md "SimHash"). For a lazy xxhash64
+    composition, compose :func:`simhash32` + the 4-block banding
+    directly."""
     if max_hamming > 3:
         raise ValueError("4-block banding guarantees recall only for max_hamming <= 3")
     sig = simhash32(df, text_col, id_col, hash_fn=hash_fn)
@@ -1111,35 +1057,30 @@ def simhash_near_duplicates(
             )
         ).alias("b"),
     ).select(id_col, "simhash", "b.block_id", "b.block_val")
-    pin = hash_fn == "xxhash64"
-    if pin:
-        ensure_checkpoint_dir(df.sparkSession)
-        blocks = blocks.persist()
-    try:
-        l, r = blocks.alias("l"), blocks.alias("r")
-        cand = (
-            l.join(
-                r,
-                (F.col("l.block_id") == F.col("r.block_id"))
-                & (F.col("l.block_val") == F.col("r.block_val"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
-                F.col("l.simhash").alias("sim_a"),
-                F.col("r.simhash").alias("sim_b"),
-            )
-            .distinct()
+    l, r = blocks.alias("l"), blocks.alias("r")
+    cand = (
+        l.join(
+            r,
+            (F.col("l.block_id") == F.col("r.block_id"))
+            & (F.col("l.block_val") == F.col("r.block_val"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
         )
-        hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-        out = cand.select(
-            "id_a", "id_b", hamming.cast("int").alias("hamming")
-        ).filter(F.col("hamming") <= max_hamming)
-        return out.checkpoint(eager=True) if pin else out
-    finally:
-        if pin:
-            blocks.unpersist()
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            F.col("l.simhash").alias("sim_a"),
+            F.col("r.simhash").alias("sim_b"),
+        )
+        .distinct()
+    )
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    out = cand.select(
+        "id_a", "id_b", hamming.cast("int").alias("hamming")
+    ).filter(F.col("hamming") <= max_hamming)
+    if hash_fn != "xxhash64":
+        return out
+    with pinned(blocks):
+        return checkpoint(out)
 
 
 def decontaminate_against(

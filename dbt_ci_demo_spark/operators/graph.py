@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_ci_demo_spark.session import ensure_checkpoint_dir
+from dbt_ci_demo_spark.session import checkpoint, pinned
 
 INIT_MASS = 1_000_000_000_000  # 10^12 micro-mass units at round 0
 
@@ -55,7 +55,6 @@ def pagerank(
         raise ValueError("rounds must be >= 1")
     if not 0 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [0, 100]")
-    ensure_checkpoint_dir(edges.sparkSession)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
@@ -65,14 +64,12 @@ def pagerank(
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    out_edges = e.join(deg, on="src").persist()
-    try:
+    out_edges = e.join(deg, on="src")
+    with pinned(out_edges):
         n_nodes = nodes.count()
         base_all = INIT_MASS // max(n_nodes, 1)
         base = (base_all * (100 - damping_pct)) // 100
-        ranks = nodes.withColumn(
-            "rank", F.lit(base_all).cast("long")
-        ).checkpoint(eager=True)
+        ranks = checkpoint(nodes.withColumn("rank", F.lit(base_all).cast("long")))
         for _ in range(rounds):
             contrib = (
                 ranks.join(out_edges, ranks["id"] == out_edges["src"])
@@ -83,9 +80,8 @@ def pagerank(
                 .groupBy("id")
                 .agg(F.sum("c").alias("in_mass"))
             )
-            ranks = (
-                nodes.join(contrib, on="id", how="left")
-                .select(
+            ranks = checkpoint(
+                nodes.join(contrib, on="id", how="left").select(
                     "id",
                     (
                         F.lit(base).cast("long")
@@ -94,8 +90,5 @@ def pagerank(
                         )
                     ).alias("rank"),
                 )
-                .checkpoint(eager=True)
             )
-    finally:
-        out_edges.unpersist()
     return ranks

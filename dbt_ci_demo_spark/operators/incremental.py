@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbt_ci_demo_spark.session import checkpoint
+
 
 def merge_upsert(
     target: DataFrame,
@@ -266,8 +268,8 @@ def cdc_apply_versioned_chain(
     delete_op: str = "D",
 ) -> DataFrame:
     """Apply a SEQUENCE of change batches with :func:`cdc_apply_versioned`,
-    pinning the state between applies (lazy ``localCheckpoint`` — the
-    star-CC / Lloyd per-round precedent).
+    checkpointing the state after each apply (the star-CC per-round
+    precedent; SCALE.md "Materialization policy").
 
     Why this exists: each single apply references ``state`` twice (the
     anti-join/semi-join split) and ``changes`` twice (key set + merge), so
@@ -281,23 +283,22 @@ def cdc_apply_versioned_chain(
     plan read one materialized state plus its own feed — leaf count linear
     in batch count, asserted exactly by `tests/test_plans.py`.
 
-    Cost model: the pin materializes one state copy per apply into
-    executor storage — bounded and batch-proportional, versus exponential
-    recompute without it. A production replication pipeline does the same
-    thing structurally: the streaming foreachBatch sink persists state to
-    a table between micro-batches (`stream_cdc_versioned`), which is the
-    durable form of this pin. Single-shot callers should keep calling
+    Cost model: one state copy written per apply — bounded and
+    batch-proportional, versus exponential recompute without it; the
+    streaming foreachBatch sink (`stream_cdc_versioned`) does the same
+    per micro-batch. Single-shot callers should keep calling
     :func:`cdc_apply_versioned` directly — one apply's double state
-    reference is a constant-factor scan, and pinning there would trade a
-    cheap columnar re-scan for a full state copy in executor storage.
+    reference is a constant-factor scan, cheaper than a state copy.
     Semantics are untouched: this is a fold over the same operator, and
     batch-order invariance (max-seq merge, tombstone retention) holds
     exactly as for manual chaining — equality is property-tested.
     """
     for changes in batches:
-        state = cdc_apply_versioned(
-            state, changes, unique_key, seq_col, op_col=op_col, delete_op=delete_op
-        ).localCheckpoint(eager=False)
+        state = checkpoint(
+            cdc_apply_versioned(
+                state, changes, unique_key, seq_col, op_col=op_col, delete_op=delete_op
+            )
+        )
     return state
 
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_ci_demo_spark.session import checkpoint, pin_small
+
 BUCKETS = 1_000_000
 _HASH_SPACE = 1 << 32  # _key_hash range: first 8 md5 hex chars
 # Stratum-count ceiling for the driver-held literal-CASE ntile design
@@ -43,61 +45,6 @@ def _key_hash(key: Column, seed: str) -> Column:
     """64-bit-safe integer hash of (seed, key): first 8 md5 hex chars."""
     payload = F.concat_ws("|", F.lit(seed), key.cast("string"))
     return F.conv(F.substring(F.md5(payload), 1, 8), 16, 10).cast("long")
-
-
-def _pin_small(df: DataFrame) -> DataFrame:
-    """Materialize a SMALL stratum-level table once (lazy local
-    checkpoint) so every downstream reference reads the same computed
-    RDD instead of re-deriving the table's corpus lineage. Without this,
-    an operator that references a corpus-derived k-row table (quotas,
-    boundary bins, per-stratum stats) from several union branches
-    re-expands the whole derivation per reference — the r08 audit of the
-    quota-threshold sampler found the un-pinned level-2 plan held 244
-    parquet scans of a 60k-row corpus (exchange reuse recovered only a
-    fraction), i.e. exponential corpus passes in recursion depth. The
-    checkpoint is LAZY: no extra driver-blocking job; the k rows
-    materialize inside the first action and are reused by the rest.
-
-    Fault-tolerance posture (ADVICE r09): ``localCheckpoint`` TRUNCATES
-    lineage, so its blocks are NOT recomputable — an executor that held
-    them dying mid-job fails the job (Spark also documents local
-    checkpoints as incompatible with dynamic allocation). That is an
-    acceptable blast radius here and ONLY here because the pinned table
-    is k rows: the failed action is retried at the application level and
-    the k rows re-derive in one cheap job. Never use this for
-    corpus-scale data — that is :func:`_pin_corpus` (persist, lineage
-    kept, executor loss recomputes)."""
-    return df.localCheckpoint(eager=False)
-
-
-def _pin_corpus(df: DataFrame) -> DataFrame:
-    """Pin a CORPUS-SCALE lineage for multi-read reuse, fault-tolerantly:
-    ``persist(MEMORY_AND_DISK)`` keeps the lineage graph, so an executor
-    loss recomputes the lost blocks instead of failing the job, and the
-    pin stays compatible with dynamic allocation — the 100 TB posture a
-    framework-level default must have (ADVICE r09; contrast
-    :func:`_pin_small`, whose lineage-truncating ``localCheckpoint`` is
-    reserved for k-row tables where the blast radius is one cheap retry).
-
-    Like the lazy local checkpoint, ``persist`` adds no driver-blocking
-    job: blocks materialize inside the first action. Lifetime: the cache
-    entry is registered with the session's CacheManager and lives until
-    ``unpersist``/``clearCache`` (it is also subject to LRU eviction
-    under memory pressure, spilling to disk first); identical plan
-    fragments re-use one entry, so repeated calls over the SAME input do
-    not accumulate copies — but calls over DISTINCT inputs each register
-    their own entry, and unlike a local checkpoint's blocks (reclaimed by
-    the ContextCleaner once the DataFrame is garbage-collected) a
-    CacheManager entry is never GC-reclaimed. A long-lived session
-    sweeping many inputs therefore owns the pin lifetime: collect the
-    pinned frames via the operators' ``pin_registry`` parameter and
-    ``unpersist`` when done consuming each result. Callers for whom even
-    one materialized copy is too much (a bare column-pruned scan at true
-    corpus scale) should skip pinning and re-read the scan — see
-    ``pin_input=False`` on :func:`ntile_histogram`."""
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def hash_bucket(key: Column, seed: str = "", buckets: int = BUCKETS) -> Column:
@@ -452,8 +399,8 @@ def stratified_sample_by_quota_threshold(
     h = _key_hash(F.col(key_col), seed)
     # pin the k-row quota table: it is referenced by the corpus join AND
     # by every level's bin-table join — un-pinned, each reference
-    # re-derives its (often corpus-sized) lineage (see _pin_small)
-    quotas = _pin_small(quotas)
+    # re-derives its (often corpus-sized) lineage
+    quotas = pin_small(quotas)
     # __lh = the level-local hash: the full hash at level 1, then the
     # remainder within the chosen boundary bin at each deeper level
     work = (
@@ -487,7 +434,7 @@ def stratified_sample_by_quota_threshold(
         # boundary is k rows but its lineage holds a corpus aggregate —
         # pin it, or the below/slice branches (and every deeper level)
         # re-expand that aggregate per reference
-        boundary = _pin_small(
+        boundary = pin_small(
             bq.filter(F.col("__before") + F.col("__c") >= F.col("quota"))
             .groupBy(*strata_cols)
             .agg(
@@ -596,8 +543,6 @@ def ntile_histogram(
     ascending: bool = True,
     tile_col: str = "__tile",
     heavy_bin_rows: int = 1 << 21,
-    pin_input: bool = True,
-    pin_registry: list | None = None,
 ) -> DataFrame:
     """Exact ``ntile(n_tiles) OVER (PARTITION BY strata ORDER BY score
     [ASC|DESC], id)`` WITHOUT a stratum-sized (or, unpartitioned, a
@@ -645,9 +590,9 @@ def ntile_histogram(
     (``monotonically_increasing_id`` after ``sortWithinPartitions``) plus
     a driver-computed per-(partition, group) offset table, broadcast back,
     reproduce the global row_number bit-for-bit (property-tested against
-    ntile). The heavy branch eagerly ``localCheckpoint``s its (small,
-    boundary-bin-only) input so the offset collect and the final pass see
-    the same partitioning even for non-deterministic upstream lineage.
+    ntile). The heavy branch checkpoints its (boundary-bin-only) input
+    so the offset collect and the final pass see the same partitioning
+    even for non-deterministic upstream lineage.
     Healthy distributions never trigger it and keep the exact prior plan.
 
     Robustness contract (ADVICE r07): the scan-time bin CASE raises
@@ -659,35 +604,15 @@ def ntile_histogram(
     1024×1024 ceilings — tens of MB; lower ``n_bins`` if the driver is
     smaller).
 
-    ``pin_input`` (r09, VERDICT r08 #4; fault-tolerant form ADVICE r09):
-    ``df`` is read FOUR times — the two threshold collects, plus the
-    plain and edge branches of the final union. By default the operator
-    pins it itself via :func:`_pin_corpus` (lazy
-    ``persist(MEMORY_AND_DISK)``: no extra driver job; the input
-    materializes inside the stats collect and every later read hits the
-    cached blocks), so callers can't forget and a non-deterministic
-    input is structurally impossible. The pin keeps lineage — an
-    executor loss recomputes lost blocks instead of failing the job —
-    because this is a framework-level DEFAULT applied to corpus-sized
-    inputs (a lineage-truncating ``localCheckpoint`` here would make
-    every caller inherit an unrecoverable-block failure mode and a
-    dynamic-allocation incompatibility). Pass ``pin_input=False`` when
-    the input is a bare column-pruned scan — re-reading parquet three
-    more times is cheaper than storing a corpus copy in executor
-    storage — and the loud determinism guards below then carry the
-    correctness load. ``pin_registry``: a long-lived session calling
-    this over many DISTINCT inputs accumulates one CacheManager entry
-    per input (see :func:`_pin_corpus` lifetime); pass a list and the
-    pinned frame is appended for the caller to ``unpersist`` once the
-    result is consumed."""
+    ``df`` is read four times (the two threshold collects, then the
+    plain and edge branches), so a caller whose input is expensive to
+    re-derive wraps the call and its consumption in
+    :func:`~dbt_ci_demo_spark.session.pinned` (SCALE.md "Materialization
+    policy")."""
     if n_tiles < 1:
         raise ValueError("n_tiles must be >= 1")
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
-    if pin_input:
-        df = _pin_corpus(df)
-        if pin_registry is not None:
-            pin_registry.append(df)
     strata = list(strata_cols) if strata_cols else []
     s = F.col(score_col)
 
@@ -939,9 +864,9 @@ def ntile_histogram(
         # full ordering key (gid, score, id) — unique ids split even an
         # all-tied score run across tasks — then consecutive in-partition
         # ids + a driver-computed per-(partition, group) offset table
-        # reproduce the global row_number. The eager localCheckpoint pins
-        # one partitioning for both the offset collect and the final
-        # pass (and truncates any non-deterministic upstream lineage).
+        # reproduce the global row_number. The checkpoint fixes one
+        # partitioning for both the offset collect and the final pass
+        # (and truncates any non-deterministic upstream lineage).
         gid_expr = None
         for gid, (key, bb) in enumerate(heavy_groups):
             c = _heavy_cond(key, bb)
@@ -954,7 +879,7 @@ def ntile_histogram(
             "__gid", gid_expr.cast("int")
         )
         okey = [F.col("__gid").asc(), order, F.col(id_col).asc()]
-        ranked0 = (
+        ranked0 = checkpoint(
             hv.repartitionByRange(n_part, *okey)
             .sortWithinPartitions(*okey)
             # __pid is captured explicitly (ADVICE r08): decoding it from
@@ -963,7 +888,6 @@ def ntile_histogram(
             # only for its documented per-partition-consecutive counter.
             .withColumn("__pid", F.spark_partition_id())
             .withColumn("__mid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=True)
         )
         pstats = (
             ranked0.groupBy("__pid", "__gid")
@@ -1074,11 +998,11 @@ def ntile_threshold(
             "equi-width binning; filter or impute first"
         ),
     )
-    # pinned (lazy checkpoint, see _pin_small): stats feeds the binned
+    # pinned (lazy checkpoint): stats feeds the binned
     # corpus join, the tile-target derivation, AND — through bounds —
     # both union branches; un-pinned each reference re-runs the corpus
     # aggregate
-    stats = _pin_small(
+    stats = pin_small(
         base.groupBy("__sk")
         .agg(
             F.count(F.lit(1)).alias("__cnt"),
@@ -1154,7 +1078,7 @@ def ntile_threshold(
     )
     # pinned: bounds is read by both union branches, and its lineage
     # holds the corpus histogram — one computation, two readers
-    bounds = _pin_small(
+    bounds = pin_small(
         bsel.groupBy("__sk").agg(
             F.array_sort(
                 F.collect_list(
@@ -1216,9 +1140,7 @@ def ntile_exact(
     ascending: bool = True,
     tile_col: str = "__tile",
     heavy_bin_rows: int = 1 << 21,
-    pin_input: bool = True,
     max_driver_strata: int = DRIVER_STRATA_CEILING,
-    pin_registry: list | None = None,
 ) -> DataFrame:
     """Cardinality-routed exact ntile (VERDICT r09 #5): ONE cheap
     distinct-count aggregate over the strata columns picks the right
@@ -1242,20 +1164,15 @@ def ntile_exact(
     PLAN only, never the rows (the twins are equality-property-tested
     against each other and against the window formulation).
 
-    Cost: the routing count is one column-pruned distinct aggregate.
-    With ``pin_input=True`` (default) the input is pinned FIRST
-    (:func:`_pin_corpus` — fault-tolerant persist), so the count job
-    doubles as the pin's materializing action and every downstream read
-    (either twin reads the input several times) hits the cache; the
-    histogram twin is then told not to re-pin. Global mode
-    (``strata_cols=None``/empty) skips the count — one stratum, always
-    the histogram path. ``max_driver_strata`` may only LOWER the routing
-    point (a tighter driver-memory bound): raising it past
-    :data:`DRIVER_STRATA_CEILING` would route strata counts the
-    histogram twin's own hard guard rejects, paying the pin + count +
-    stats cost before the inevitable ValueError — so the dispatcher
-    fails fast instead. ``pin_registry`` as on :func:`ntile_histogram`:
-    the caller-owned unpersist hook for long-lived sessions."""
+    Cost: the routing count is one column-pruned distinct aggregate, and
+    either twin reads the input several times — pin an expensive input
+    as on :func:`ntile_histogram`. Global mode (``strata_cols=None``/
+    empty) skips the count — one stratum, always the histogram path.
+    ``max_driver_strata`` may only LOWER the routing point (a tighter
+    driver-memory bound): raising it past :data:`DRIVER_STRATA_CEILING`
+    would route strata counts the histogram twin's own hard guard
+    rejects, paying the count + stats cost before the inevitable
+    ValueError — so the dispatcher fails fast instead."""
     if max_driver_strata > DRIVER_STRATA_CEILING:
         raise ValueError(
             f"ntile_exact: max_driver_strata={max_driver_strata} exceeds "
@@ -1265,10 +1182,6 @@ def ntile_exact(
             "take the distributed ntile_threshold path"
         )
     strata = list(strata_cols) if strata_cols else []
-    if pin_input:
-        df = _pin_corpus(df)
-        if pin_registry is not None:
-            pin_registry.append(df)
     n_strata = df.select(*strata).distinct().count() if strata else 1
     route = _ntile_route(n_strata, max_driver_strata)
     if route == "histogram":
@@ -1282,9 +1195,6 @@ def ntile_exact(
             ascending=ascending,
             tile_col=tile_col,
             heavy_bin_rows=heavy_bin_rows,
-            # already pinned above (or the caller opted out) — never
-            # stack a second storage copy
-            pin_input=False,
         )
     return ntile_threshold(
         df,

@@ -1231,11 +1231,6 @@ def win_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         [],
         ascending=True,
         tile_col="price_quartile",
-        # bare column-pruned parquet scan: re-reading it three more
-        # times is cheaper than storing a corpus copy in executor
-        # storage (the documented pin_input opt-out), and parquet is
-        # deterministic across jobs so the loud guards suffice
-        pin_input=False,
     )
     return t.select("o_orderkey", "price_quartile")
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_ci_demo_spark.queries import _t, query
+from dbt_ci_demo_spark.session import checkpoint
 
 _FX = 1_000_000.0  # fixed-point scale: 6 decimal places
 
@@ -465,14 +466,15 @@ def _kmeans_loop(spark: SparkSession, sf_dir: str):
     (vec_id, q).
 
     Per-round state discipline (r04, tightened r14): the ONLY
-    corpus-sized pinned table is ``base`` (checkpointed once — iterative
-    reuse without re-scanning lineage). The assignment is a transient
-    stage inside the centroid-update job — through r03 every round
-    localCheckpointed a corpus-sized assignment table that Spark cannot
-    release (unpersist on a local checkpoint is a guarded no-op), so a
-    20-round run held 20 corpus-sized tables in executor storage. Since
-    r14 the k×d ``cent`` rows are collected per round (bounded model
-    state, like the seeds) and nothing per-round is pinned at all.
+    corpus-sized materialized table is ``base`` (checkpointed once —
+    iterative reuse without re-scanning lineage). The assignment is a
+    transient stage inside the centroid-update job — through r03 every
+    round localCheckpointed a corpus-sized assignment table, whose blocks
+    stayed in executor storage until the ContextCleaner freed them after
+    GC (SCALE.md "Materialization policy"), so a 20-round run could hold
+    20 corpus-sized tables at once. Since r14 the k×d ``cent`` rows are
+    collected per round (bounded model state, like the seeds) and
+    nothing per-round is materialized at all.
 
     Round shape (r06): the quantizer lives on the DRIVER as bounded
     model state (k×d integers — the MLlib k-means design) and each round
@@ -488,9 +490,7 @@ def _kmeans_loop(spark: SparkSession, sf_dir: str):
     repeated ⟹ cent_t == cent_{t-1} bit-for-bit, so early-stop output
     is unchanged."""
     emb = _t(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _kmeans_quant_expr().alias("q")).localCheckpoint(
-        eager=False
-    )
+    base = checkpoint(emb.select("vec_id", _kmeans_quant_expr().alias("q")))
     seed_items = _collect_seed_items(
         base.filter(F.col("vec_id") < _KM_K).select(
             F.col("vec_id").alias("cluster_id"), F.col("q").alias("sq")

@@ -32,6 +32,7 @@ from dbt_ci_demo_spark.operators import dedup as dd
 from dbt_ci_demo_spark.operators import similarity as sim
 from dbt_ci_demo_spark.operators import text as tx
 from dbt_ci_demo_spark.queries import _t, query
+from dbt_ci_demo_spark.session import checkpoint, pinned
 
 # ---------------------------------------------------------------------------
 # Shared derived fixtures
@@ -499,22 +500,6 @@ def _idx_path(sf_dir: str, nonce: str | None = None) -> str:
     return os.path.join(_IDX_ROOT, key)
 
 
-def _pinned_batch_artifacts(
-    batch: DataFrame, k: int, n_hashes: int, bands: int, hash_fn: str = "md5"
-) -> tuple[DataFrame, DataFrame]:
-    """(sets, bands) index artifacts of one index-flow input, derived once
-    for every consumer (the admission's ``batch_index`` and the
-    append/overwrite's ``artifacts`` — without this, each call re-runs
-    the input's tokenize + shingle distinct, the dominant stage). The
-    sets are PINNED and the bands are derived from the pin. The
-    written ``sets/`` is the pinned frame itself, so it keeps the cache's
-    partitioning: the flows repartition each input to the default
-    parallelism first, which measured 4 files per part at sf0.1 on 4
-    cores. The caller owns the sets' unpersist."""
-    sets = dd.shingle_sets(batch, "text", "doc_id", k).persist()
-    return dd.index_artifacts(sets, "doc_id", n_hashes, bands, hash_fn)
-
-
 def _materialize_sets(sets: DataFrame) -> None:
     """Force a pinned sets cache (noop sink — full compute, no output):
     run inside the protocol-overlap pool so artifact derivation
@@ -628,14 +613,20 @@ def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TWICE — batch 1 by its admission AND the append that refreshes the
     # index; batch 2 by its admission (and its derivation is independent
     # of every protocol phase) — so derive them ONCE, pinned, and thread
-    # them through ``batch_index``/``artifacts``. The corpus index build
-    # and both batches' artifact materializations share no state, so they
-    # run CONCURRENTLY (guide §2.6: overlap independent jobs); the
-    # admissions/append stay strictly sequential — the protocol's
-    # read-after-commit contract.
-    art1 = _pinned_batch_artifacts(batch1, **kw)
-    art2 = _pinned_batch_artifacts(batch2, **kw)
-    try:
+    # them through ``batch_index``/``artifacts``. The written ``sets/`` is
+    # the cached frame and keeps its partitioning (4 files per part at
+    # sf0.1 on 4 cores). The corpus index build and both batches'
+    # artifact materializations share no state, so they run CONCURRENTLY
+    # (guide §2.6: overlap independent jobs); the admissions/append stay
+    # strictly sequential — the protocol's read-after-commit contract.
+    art1, art2 = (
+        dd.index_artifacts(
+            dd.shingle_sets(b, "text", "doc_id", _MINHASH_K), "doc_id",
+            _MINHASH_N, _MINHASH_BANDS,
+        )
+        for b in (batch1, batch2)
+    )
+    with pinned(art1[0], art2[0]):
         _run_all_settled(
             lambda: dd.write_minhash_index(
                 corpus, "text", "doc_id", base, mode="overwrite", **kw
@@ -661,9 +652,6 @@ def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_index=art2,
             threshold=_MINHASH_THRESHOLD, **kw,
         )
-    finally:
-        for sets, _ in (art1, art2):
-            sets.unpersist()
     return (
         pairs1.select(F.lit(1).alias("admission"), "id_a", "id_b", "jaccard")
         .unionByName(pairs2.select(F.lit(2).alias("admission"), "id_a", "id_b", "jaccard"))
@@ -780,9 +768,13 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run concurrently (guide §2.6); every protocol mutation and every
     # admission stays strictly sequential, so the crash/retry/replay
     # on-disk states are byte-identical to the sequential form.
-    artc = _pinned_batch_artifacts(corpus, **kw)
-    art1 = _pinned_batch_artifacts(batch1, **kw)
-    art2 = _pinned_batch_artifacts(batch2, **kw)
+    artc, art1, art2 = (
+        dd.index_artifacts(
+            dd.shingle_sets(b, "text", "doc_id", _MINHASH_K), "doc_id",
+            _MINHASH_N, _MINHASH_BANDS,
+        )
+        for b in (corpus, batch1, batch2)
+    )
 
     def admit_b2() -> DataFrame:
         return dd.minhash_near_duplicates_against(
@@ -803,7 +795,7 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             None, "text", "doc_id", base, mode="overwrite", artifacts=artc, **kw
         )
 
-    try:
+    with pinned(artc[0], art1[0], art2[0]):
         # phase 1: append, simulate the mid-promote crash state, retry, admit
         _run_all_settled(
             overwrite_corpus,
@@ -821,9 +813,6 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         overwrite_corpus()
         append_b1()
         pairs_replay = admit_b2()
-    finally:
-        for sets, _ in (artc, art1, art2):
-            sets.unpersist()
 
     return (
         pairs_retry.select(F.lit(1).alias("phase"), "id_a", "id_b", "jaccard")
@@ -1655,39 +1644,20 @@ def text_unigram_logprob(
     aggregate reusing it, a broadcast 1-row total, a vocab-keyed join
     back, one doc-keyed aggregate — the same shape as TF-IDF.
 
-    ``materialize`` (r14): the plan REFERENCES tf from three subtrees
-    (per_doc, vocab→lp, vocab→tot) and Spark executes the whole
-    tokenize+count derivation once per reference — the physical plan
-    holds THREE `Generate explode(split(text))` scans over the corpus
-    and zero ReusedExchange (guide §2.4 duplicated-subtree class; at
-    100 TB that is three full-text tokenize passes where one suffices).
-    True (default, the registered/bench path) pins the slim tf table
-    (doc_id, tok, c — no text), eager LOCAL-checkpoints the doc-sized
-    result, and unpersists the pin — nothing corpus-sized stays pinned,
-    callers get materialized rows. The materialization is
-    ``localCheckpoint`` rather than a reliable checkpoint (r15, VERDICT
-    r14 #3): the r14 disk checkpoint's write+read round-trip cost more
-    locally than the single-tokenize-pass saved. The checkpoint truncates
-    lineage and the returned frame outlives this call, so on a
-    non-local master an executor loss that takes its blocks makes every
-    later action on the result fail: Spark cannot re-derive them, and
-    the caller must re-run the query. On a local master the executor
-    lives in the application's own JVM, so this cannot happen (contrast
-    the corpus-scale iterative operators, which stay on reliable
-    checkpoints). False returns the lazy composable plan (plan tests;
-    zero persists)."""
+    ``materialize`` (r14): the plan reads tf from three subtrees
+    (per_doc, vocab→lp, vocab→tot), so True (default, the
+    registered/bench path) pins tf for a :func:`checkpoint` of the
+    doc-sized result — one tokenize pass; False returns the lazy
+    composable plan (plan tests). SCALE.md "Materialization policy"."""
     d = _docs(spark, sf_dir)
     toks = d.select(
         "doc_id", F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
     ).filter(F.col("tok") != "")
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    if materialize:
-        tf = tf.persist()
-        try:
-            return _unigram_from_tf(tf).localCheckpoint(eager=True)
-        finally:
-            tf.unpersist()
-    return _unigram_from_tf(tf)
+    if not materialize:
+        return _unigram_from_tf(tf)
+    with pinned(tf):
+        return checkpoint(_unigram_from_tf(tf))
 
 
 def _unigram_from_tf(tf: DataFrame) -> DataFrame:
@@ -2125,35 +2095,16 @@ def text_ccnet_buckets(
     collects still run either way; only the corpus pass stays lazy.)"""
     # Thread materialize through: the eager path gets the scores already
     # checkpointed (one tokenize pass, r14), while the lazy plan-test
-    # path keeps the full scoring lineage visible (the whitelist's
-    # InMemoryRelation-prints-the-BNLJ contract relies on it).
+    # path keeps the full scoring lineage visible.
     scores = text_unigram_logprob(spark, sf_dir, materialize=materialize)
     langs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    scored = scores.join(langs, "doc_id")
     if not materialize:
-        return tercile_buckets(scores.join(langs, "doc_id"))
-    # The scoring pipeline is the expensive subtree and the bucket plan
-    # references it several times (stats, histogram, assignment). The
-    # pin is the fault-tolerant persist(MEMORY_AND_DISK) (r10, ADVICE
-    # r09): the slim 4-column table materializes once — inside the
-    # stats collect — and the histogram job plus both union branches
-    # read the cached blocks. Because this branch MATERIALIZES the
-    # result (eager checkpoint), the pinned input is dead weight
-    # afterwards, so this caller owns the pin and unpersists it —
-    # bounded cache lifetime, unlike the operator-internal default
-    # whose CacheManager entry lives until clearCache (fine for the
-    # lazy/compose path, wasteful after an eager materialization).
-    from dbt_ci_demo_spark.operators.sampling import _pin_corpus
-
-    scored = _pin_corpus(scores.join(langs, "doc_id"))
-    try:
-        # localCheckpoint skips the reliable checkpoint's disk write+read
-        # round-trip (r15). Lineage is truncated: after an executor loss
-        # the result cannot be re-derived (see text_unigram_logprob).
-        return tercile_buckets(scored, pin_input=False).localCheckpoint(
-            eager=True
-        )
-    finally:
-        scored.unpersist()
+        return tercile_buckets(scored)
+    # the bucket plan reads ``scored`` four times (stats, histogram, both
+    # branches): SCALE.md "Materialization policy"
+    with pinned(scored):
+        return checkpoint(tercile_buckets(scored))
 
 
 def tercile_buckets(
@@ -2162,7 +2113,6 @@ def tercile_buckets(
     id_col: str = "doc_id",
     strata_cols: list[str] | None = None,
     n_bins: int = 1024,
-    pin_input: bool = True,
 ) -> DataFrame:
     """Exact ntile(3)-per-stratum bucket assignment ('head'/'middle'/
     'tail') WITHOUT a stratum-sized window — the bounded plan behind
@@ -2190,7 +2140,6 @@ def tercile_buckets(
         n_bins=n_bins,
         ascending=False,
         tile_col="__tile",
-        pin_input=pin_input,
     )
     return t.select(
         *scored.columns,

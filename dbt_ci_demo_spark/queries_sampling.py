@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from dbt_ci_demo_spark.operators import sampling as sp
 from dbt_ci_demo_spark.operators import text as tx
 from dbt_ci_demo_spark.queries import _t, query
+from dbt_ci_demo_spark.session import checkpoint, pinned
 
 # DuckDB twin of sampling._key_hash: first 8 md5 hex chars as an integer.
 _DUCK_HASH = "('0x' || substr(md5('{seed}|' || CAST({key} AS VARCHAR)), 1, 8))::BIGINT"
@@ -257,40 +258,21 @@ def pipe_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fingerprint are inline expressions computed together — no
     self-join to attach scores) materialized as a slim 4-column table,
     then two key-partitioned window shuffles (min-per-fingerprint,
-    per-stratum rank) — nothing quadratic, nothing driver-side.
-
-    The scored projection is pinned and eager-checkpointed before the
-    quality filter (r14, guide §4.4's duplicated-expensive-expression
-    class with built-ins): composed lazily, the optimizer pushes the
-    ``quality_score >= 0.5`` filter below the projection by SUBSTITUTING
-    the scoring expression, so the ~20-regex battery runs once in the
-    pushed filter over every document and AGAIN in the projection for
-    every survivor — and the pushed filter also lands BELOW the
-    spread-the-regex-work repartition, defeating it. The checkpoint is a
-    hard barrier: one battery pass at full parallelism, and the
-    downstream filter reads a materialized double. Same lifetime
-    discipline as pipe_budgeted_curation (pin → eager checkpoint →
-    release)."""
+    per-stratum rank) — nothing quadratic, nothing driver-side. The
+    scored projection is checkpointed before the quality filter so the
+    regex battery runs once (SCALE.md "Materialization policy")."""
     from pyspark.sql import Window
 
-    from dbt_ci_demo_spark.operators.sampling import _pin_corpus
-    from dbt_ci_demo_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     par = spark.sparkContext.defaultParallelism
-    scored = _pin_corpus(
-        d.repartition(par).select(
-            "doc_id",
-            "lang",
-            tx.quality_metrics(F.col("text"))["quality_score"].alias("quality_score"),
-            F.md5(tx.normalized_text(F.col("text"))).alias("fp"),
-        )
+    scored = d.repartition(par).select(
+        "doc_id",
+        "lang",
+        tx.quality_metrics(F.col("text"))["quality_score"].alias("quality_score"),
+        F.md5(tx.normalized_text(F.col("text"))).alias("fp"),
     )
-    try:
-        scored_ck = scored.checkpoint(eager=True)
-    finally:
-        scored.unpersist()
+    with pinned(scored):
+        scored_ck = checkpoint(scored)
     kept = scored_ck.filter(F.col("quality_score") >= 0.5)
     # dedup = first row per fingerprint, as ONE window shuffle (equivalent
     # to min-id group + semi-join back, without the join).
@@ -415,34 +397,17 @@ def samp_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality score — the soft alternative to pipe_curation's hard 0.5
     threshold. The score ladder {{0, .25, .5, .75, 1}} comes from the
     same quality_metrics whose cross-engine parity text_stats already
-    pins, so the oracle checks every keep/drop decision bit-for-bit.
-
-    The scored slim projection is pinned + eager-checkpointed before the
-    sampler's filter (r14; the pipe_curation_end_to_end fix, same
-    duplicated-expression class): lazily composed, the optimizer pushes
-    the sampler's ``hash < floor(score·B)`` predicate below the scoring
-    projection by SUBSTITUTING the expression, so the ~20-regex battery
-    runs twice per document in one scan stage — measured 2.11 s for the
-    row vs ~0.8-1.2 s for one battery pass at sf0.1. Post-fix the
-    battery runs once per document; the sampler filters a materialized
-    3-column table. At 100 TB the trade is one slim (id, lang, double)
-    materialization against a second full-text regex pass."""
-    from dbt_ci_demo_spark.operators.sampling import _pin_corpus
-    from dbt_ci_demo_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
+    pins, so the oracle checks every keep/drop decision bit-for-bit. The
+    scored projection is checkpointed before the sampler's filter so the
+    regex battery runs once (SCALE.md "Materialization policy")."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    scored = _pin_corpus(
-        d.select(
-            "doc_id",
-            "lang",
-            tx.quality_metrics(F.col("text"))["quality_score"].alias("quality_score"),
-        )
+    scored = d.select(
+        "doc_id",
+        "lang",
+        tx.quality_metrics(F.col("text"))["quality_score"].alias("quality_score"),
     )
-    try:
-        scored_ck = scored.checkpoint(eager=True)
-    finally:
-        scored.unpersist()
+    with pinned(scored):
+        scored_ck = checkpoint(scored)
     out = sp.score_weighted_sample(scored_ck, "doc_id", "quality_score", seed="qw")
     return out.select("doc_id", "lang", "quality_score")
 
@@ -591,37 +556,18 @@ def pipe_budgeted_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     quotas sum to exactly the budget, and every kept doc_id is
     oracle-checked. Scale shape: two corpus-sized passes (the quality
     aggregate feeding counts, the rank window on lang), both
-    AQE-managed hash exchanges; everything else is k-row."""
-    from dbt_ci_demo_spark.operators.sampling import _pin_corpus
-    from dbt_ci_demo_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
+    AQE-managed hash exchanges; everything else is k-row. The slim
+    scored projection is checkpointed once, because the chain reads
+    ``kept`` from several subtrees (SCALE.md "Materialization
+    policy"); the downstream plan stays lazily composed."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    # Materialize the SLIM scored projection (doc_id, lang, quality_score
-    # — no text) ONCE: the chain references ``kept`` from several subtrees
-    # (the apportionment counts, the quota join's embedded quota subtree,
-    # the rank window), and un-pinned each one re-derives the full regex
-    # quality scan — measured 4.15 s vs 0.80 s for ONE scoring pass at
-    # sf0.1; materialized the row reads ~1.9 s (r14, guide §5: cache only
-    # what is reused and expensive to recompute). At 100 TB this trades a
-    # 3-column table write against N extra corpus-text regex passes — the
-    # text_ccnet_buckets precedent, with the same owned lifetime: pin,
-    # eager checkpoint (the pin keeps the checkpoint's write job from
-    # recomputing the scan), release the pin. The checkpoint sits on the
-    # INTERMEDIATE, not the returned result, so the downstream plan —
-    # broadcast quota join, map-side WindowGroupLimit rank cap — stays
-    # inspectable and lazily composed (plan-pinned in tests/test_plans.py).
-    scored = _pin_corpus(
-        d.select(
-            "doc_id",
-            "lang",
-            tx.quality_metrics(F.col("text"))["quality_score"].alias("quality_score"),
-        )
+    scored = d.select(
+        "doc_id",
+        "lang",
+        tx.quality_metrics(F.col("text"))["quality_score"].alias("quality_score"),
     )
-    try:
-        scored_ck = scored.checkpoint(eager=True)
-    finally:
-        scored.unpersist()
+    with pinned(scored):
+        scored_ck = checkpoint(scored)
     kept = scored_ck.filter(F.col("quality_score") >= 0.5)
     quotas = sp.allocate_budget(kept, "lang", _CURATION_BUDGET).select(
         F.col("stratum").alias("lang"), "quota"

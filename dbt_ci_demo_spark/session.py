@@ -29,8 +29,10 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -101,14 +103,10 @@ def get_spark(
 def ensure_checkpoint_dir(spark: SparkSession) -> str:
     """Set a reliable-checkpoint directory if the context has none.
 
-    Iterative/cache-heavy operators (dedup.minhash_*) truncate lineage with
-    ``DataFrame.checkpoint(eager=True)`` so their input caches can be
-    unpersisted before returning — reliable checkpoints write to this dir
-    and leave NOTHING pinned in executor storage (unlike localCheckpoint,
-    which holds its blocks for the session's lifetime). Locally this is a
-    temp dir; on a real cluster, point it at HDFS/S3 via an explicit
-    ``sc.setCheckpointDir`` before any query runs (this helper respects a
-    pre-set dir).
+    :func:`checkpoint` writes here. Locally this is a temp dir; on a
+    real cluster, point it at HDFS/S3 via an explicit
+    ``sc.setCheckpointDir`` before any query runs (this helper respects
+    a pre-set dir).
 
     Disk hygiene for long-lived sessions (bench loops, daily admissions):
     the owned temp dir is removed at interpreter exit, and
@@ -139,3 +137,44 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
     sc.setCheckpointDir(path)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+# ---------------------------------------------------------------------------
+# Materialization policy: the package's only persist/checkpoint calls.
+# SCALE.md "Materialization policy" has the rationale and measurements.
+# ---------------------------------------------------------------------------
+
+
+@contextmanager
+def pinned(*dfs: DataFrame) -> Iterator[None]:
+    """Cache ``dfs`` (default storage level, lineage kept) for the block
+    and unpersist them on exit, also when the block raises. Frames are
+    persisted in argument order, so a later frame derived from an
+    earlier one caches over the earlier cache, and released in reverse."""
+    try:
+        for df in dfs:
+            df.persist()
+        yield
+    finally:
+        for df in reversed(dfs):
+            df.unpersist()
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager reliable checkpoint: ``df``'s rows written to the session's
+    checkpoint dir, lineage truncated to those files. The one cut for
+    every corpus-sized frame; it pins nothing in executor storage."""
+    ensure_checkpoint_dir(df.sparkSession)
+    return df.checkpoint(eager=True)
+
+
+def pin_small(df: DataFrame) -> DataFrame:
+    """Lazy local checkpoint of a k-row table: the rows materialize inside
+    the first action and every later reference reads them. A shuffle-free
+    plan runs no job here; under AQE a plan with an exchange runs its
+    shuffle map stages now (finalizing the adaptive plan), and only the
+    final stage waits. The truncated lineage may outlive the call, so this is for
+    k-row tables only: a lost block fails the action, and the retry
+    re-derives k rows. The blocks are freed by the ContextCleaner once
+    the frame is garbage-collected."""
+    return df.localCheckpoint(eager=False)

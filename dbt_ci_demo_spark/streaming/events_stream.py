@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbt_ci_demo_spark.session import checkpoint
+
 # The ``state_partitions`` override mutates SESSION-global conf
 # (spark.sql.shuffle.partitions) around a stream's start/termination.
 # That is correct single-threaded, but two streams started concurrently
@@ -500,17 +502,12 @@ def run_foreach_batch_merge(
     # foreachBatch executes on the driver but inside a CLONED session, so
     # session-scoped temp views set there are invisible outside; hold the
     # accumulated target in a driver-side reference instead, materialized
-    # via RELIABLE checkpoint (files in the session checkpoint dir, which
-    # get cleaned; localCheckpoint blocks pin executor storage and cannot
-    # be unpersisted — the same discipline as the iterative operators).
-    from dbt_ci_demo_spark.session import ensure_checkpoint_dir
-
-    ensure_checkpoint_dir(spark)
+    # via checkpoint (the iterative operators' discipline).
     holder = {"target": spark.createDataFrame([], stream_df.schema)}
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         merged = merge_upsert(holder["target"], batch_df, unique_key)
-        holder["target"] = merged.checkpoint(eager=True)
+        holder["target"] = checkpoint(merged)
 
     # ``state_partitions`` (r14): same knob as run_to_memory — the
     # override covers the streaming aggregate's state stores AND, because
@@ -565,16 +562,14 @@ def run_foreach_batch_cdc(
     shared iterative-operator discipline), bounded by |keys|."""
 
     from dbt_ci_demo_spark.operators.incremental import cdc_apply_versioned
-    from dbt_ci_demo_spark.session import ensure_checkpoint_dir
 
-    ensure_checkpoint_dir(spark)
     holder = {"state": spark.createDataFrame([], stream_df.schema), "batches": 0}
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         merged = cdc_apply_versioned(
             holder["state"], batch_df, unique_key, seq_col, op_col
         )
-        holder["state"] = merged.checkpoint(eager=True)
+        holder["state"] = checkpoint(merged)
         holder["batches"] += 1
 
     # ``state_partitions`` (r14): see run_foreach_batch_merge — sizes the

@@ -7,6 +7,7 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import drain_cleaner, persisted_rdds
 
 from dbt_ci_demo_spark.operators import dedup as dd
 from dbt_ci_demo_spark.operators import multimodal as mm
@@ -44,9 +45,9 @@ def test_connected_components_chain_and_islands(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
         "id_a bigint, id_b bigint",
     )
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    before = drain_cleaner(spark)
     out = {r.doc_id: (r.cluster_id, r.is_survivor) for r in dd.duplicate_clusters(pairs).collect()}
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    after = persisted_rdds(spark)
     assert after - before == set(), "duplicate_clusters left caches pinned"
     assert out == {
         1: (1, True), 2: (1, False), 3: (1, False), 4: (1, False),
@@ -201,21 +202,18 @@ def test_minhash_leaves_no_storage_pinned(spark, sf_dir, tmp_path):
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
 
-    def pinned() -> set:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-    before = pinned()
+    before = drain_cleaner(spark)
     full = dd.minhash_near_duplicates(docs, "text", "doc_id", threshold=0.7)
-    assert pinned() == before, "minhash_near_duplicates changed the pinned set"
+    assert persisted_rdds(spark) == before, "minhash_near_duplicates changed the pinned set"
     incr = dd.minhash_near_duplicates_against(corpus, batch, "text", "doc_id")
-    assert pinned() == before, "minhash_near_duplicates_against changed the pinned set"
+    assert persisted_rdds(spark) == before, "minhash_near_duplicates_against changed the pinned set"
     base = str(tmp_path / "idx")
     dd.write_minhash_index(corpus, "text", "doc_id", base)
-    assert pinned() == before, "write_minhash_index changed the pinned set"
+    assert persisted_rdds(spark) == before, "write_minhash_index changed the pinned set"
     via_index = dd.minhash_near_duplicates_against(
         None, batch, "text", "doc_id", corpus_index=dd.read_minhash_index(spark, base)
     )
-    assert pinned() == before, "index admission changed the pinned set"
+    assert persisted_rdds(spark) == before, "index admission changed the pinned set"
     # results stay usable after the caches are gone (lineage was truncated)
     assert full.count() >= 0 and incr.count() >= 0
     assert {tuple(r) for r in via_index.collect()} == {tuple(r) for r in incr.collect()}
@@ -304,22 +302,6 @@ def test_minhash_queries_match_oracle_on_slice(spark, sf_dir, tmp_path):
         con.close()
 
 
-def test_pinned_batch_artifacts_follow_hash_fn(spark, sf_dir):
-    """The index flows' pinned artifacts are built with the call's
-    ``hash_fn``: their bands equal index_artifacts' for xxhash64."""
-    from dbt_ci_demo_spark.queries_northstar import _pinned_batch_artifacts
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(20)
-    sets, bands = _pinned_batch_artifacts(docs, 3, 32, 8, hash_fn="xxhash64")
-    try:
-        want = dd.index_artifacts(
-            dd.shingle_sets(docs, "text", "doc_id"), "doc_id", hash_fn="xxhash64"
-        )[1]
-        assert sorted(map(tuple, bands.collect())) == sorted(map(tuple, want.collect()))
-    finally:
-        sets.unpersist()
-
-
 def test_minhash_lazy_plan_has_no_per_document_aggregate(spark, sf_dir):
     """Signatures are a row projection and the verifier intersects
     arrays, so the lazy plan's only aggregates are the candidate-pair
@@ -342,17 +324,14 @@ def test_minhash_lazy_mode_composes_without_persist(spark, sf_dir):
 
     docs = _docs_dup(spark, sf_dir).limit(400)
 
-    def pinned() -> set:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-    before = pinned()
+    before = drain_cleaner(spark)
     lazy = dd.minhash_near_duplicates(
         docs, "text", "doc_id", threshold=0.7, materialize=False
     )
-    assert pinned() - before == set()
+    assert persisted_rdds(spark) - before == set()
     eager = dd.minhash_near_duplicates(docs, "text", "doc_id", threshold=0.7)
     assert {tuple(r) for r in lazy.collect()} == {tuple(r) for r in eager.collect()}
-    assert pinned() - before == set()
+    assert persisted_rdds(spark) - before == set()
 
 
 def test_minhash_bad_hash_fn_rejected(spark, sf_dir):
@@ -750,9 +729,6 @@ def test_admission_restricts_stored_sets_to_candidates(
     dd.write_minhash_index(corpus, "text", "doc_id", base)
     batch_index = dd.index_artifacts(dd.shingle_sets(batch, "text", "doc_id"), "doc_id")
 
-    def pinned() -> set:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
     seen = {}
     real = dd.set_jaccard_scores
 
@@ -761,11 +737,11 @@ def test_admission_restricts_stored_sets_to_candidates(
         seen["cand_ids"] = sorted({r.id_a for r in cand} | {r.id_b for r in cand})
         seen["set_ids"] = sorted(r[0] for r in sets.select(id_col).collect())
         seen["plan"] = sets._jdf.queryExecution().executedPlan().toString()
-        seen["new_pins"] = len(pinned() - before)
+        seen["new_pins"] = len(persisted_rdds(spark) - before)
         return real(sets, id_col, pairs)
 
     monkeypatch.setattr(dd, "set_jaccard_scores", spy)
-    before = pinned()
+    before = drain_cleaner(spark)
     out = dd.minhash_near_duplicates_against(
         None, batch, "text", "doc_id",
         corpus_index=dd.read_minhash_index(spark, base),
@@ -780,7 +756,7 @@ def test_admission_restricts_stored_sets_to_candidates(
     assert seen["new_pins"] == 1, seen["new_pins"]
     # id-set difference: the async ContextCleaner may drop an earlier
     # test's pin meanwhile; the contract is that no new pin outlives the call
-    assert pinned() - before == set()
+    assert persisted_rdds(spark) - before == set()
 
 
 @pytest.mark.slow  # ~4s equivalence-vs-bruteforce: round-close tier
@@ -913,9 +889,9 @@ def test_simhash_pin_routing(spark, sf_dir):
     # ContextCleaner can unpersist a GC'd RDD from an earlier test
     # between the two reads, so a size equality is spuriously flaky —
     # the contract is only that THIS call leaves no NEW pin behind.
-    ids_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    ids_before = drain_cleaner(spark)
     out_xx = dd.simhash_near_duplicates(docs, "text", "doc_id", 3, hash_fn="xxhash64")
-    ids_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    ids_after = persisted_rdds(spark)
     assert ids_after - ids_before == set(), ids_after - ids_before
     plan_xx = out_xx._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan_xx, plan_xx

@@ -14,6 +14,7 @@ Checks (plan-only; nothing is executed):
 from __future__ import annotations
 
 import pytest
+from conftest import cached_plans, drain_cleaner
 
 from dbt_ci_demo_spark import queries as q
 
@@ -41,13 +42,7 @@ _CARTESIAN_OK = {
     "q11_important_parts",
     "text_tfidf_topterms",
     "text_unigram_logprob",  # same shape: 1-row (N, V) totals broadcast
-    # text_ccnet_buckets: the unigram-totals 1-row broadcast lives inside
-    # the PINNED scoring lineage. r09's localCheckpoint pin hid it from
-    # the plan text entirely; the r10 fault-tolerant persist pin keeps
-    # the recompute lineage attached, so InMemoryRelation PRINTS it —
-    # the nested-loop stage executes once on cache build (1-row side),
-    # never per corpus read. Same bounded shape as text_unigram_logprob.
-    "text_ccnet_buckets",
+    "text_ccnet_buckets",  # same shape: its scoring lineage is text_unigram_logprob's
     "pipe_mixture_from_quality",  # same shape: 1-row min-clean-tokens broadcast
     "samp_budget_allocation",  # same shape: 1-row N/leftover broadcasts over a k-row table
     "pipe_budgeted_curation",  # same shape: allocate_budget's 1-row broadcasts inside
@@ -182,27 +177,30 @@ def test_window_audit_bounded_plans(spark, sf_dir):
     wlines = [ln for ln in p.splitlines() if "Window [" in ln]
     assert len(wlines) == 1, p
     assert "row_number()" in wlines[0] and "__bin" in wlines[0], p
-    # pin_input (r09, VERDICT r08 #4; fault-tolerant persist ADVICE r09):
-    # the expensive scoring lineage is pinned INSIDE the operator — the
-    # corpus pass reads the cached input exactly twice (plain + edge
-    # union branches) and executes ZERO parquet scans outside the cache.
-    # The pin is persist(MEMORY_AND_DISK), not localCheckpoint: lineage
-    # stays attached (the parquet text visible in the plan is the cached
-    # relation's RECOMPUTE lineage, printed under InMemoryRelation and
-    # executed only on a cache miss), so an executor loss recomputes
-    # instead of failing the job and dynamic allocation stays usable.
+    # The production composition, ``with pinned(scored):
+    # tercile_buckets(scored)``: the corpus pass reads the cached scoring
+    # lineage exactly twice (plain + edge union branches) and executes
+    # ZERO parquet scans outside the cache. The pin keeps lineage (the
+    # parquet text under InMemoryRelation is its recompute lineage,
+    # executed only on a cache miss).
+    from dbt_ci_demo_spark.queries_northstar import (
+        tercile_buckets,
+        text_unigram_logprob,
+    )
+    from dbt_ci_demo_spark.session import pinned
+
+    scored = text_unigram_logprob(spark, sf_dir, materialize=False).join(
+        q._t(spark, sf_dir, "documents").select("doc_id", "lang"), "doc_id"
+    )
+    with pinned(scored):
+        qe = tercile_buckets(scored)._jdf.queryExecution()
+        p = qe.executedPlan().toString()
+        opt = qe.optimizedPlan().toString()
     assert p.count("InMemoryTableScan") == 2, p
     assert "Scan ExistingRDD" not in p, p
     # optimized plan: exactly two leaf relations, both the cached pin —
     # a parquet leaf OUTSIDE the cache (a branch escaping the pin) or a
     # third reference (re-expansion) would change these counts
-    fn = q.registry_queries()["text_ccnet_buckets"]
-    opt = (
-        fn(spark, sf_dir, materialize=False)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
     assert opt.count("Relation [") == 2, opt
     assert opt.count("InMemoryRelation [") == 2, opt
     # Global ntile(4) over raw orders — the unpartitioned-window case of
@@ -218,8 +216,8 @@ def test_window_audit_bounded_plans(spark, sf_dir):
     assert "row_number()" in wlines[0] and "__bin" in wlines[0], p
     assert "Join" not in p, p
     assert p.count("Exchange") == 1, p
-    # the documented pin_input opt-out: a bare column-pruned parquet
-    # scan re-reads (2 visible branches) instead of storing a corpus copy
+    # unpinned: a bare column-pruned parquet scan re-reads (2 visible
+    # branches) instead of storing a corpus copy
     assert p.count("Scan parquet") == 2, p
     assert "Scan ExistingRDD" not in p, p
 
@@ -232,7 +230,7 @@ def test_ntile_threshold_bounded_plan(spark, sf_dir):
     boundary-bin edge rank on (__sk, __bin) — and no ntile window
     function anywhere. The bin-table cumsum windows live inside the
     pinned bounds table's own (k·n_bins-row) lineage, not the corpus
-    pass. Pinning (lazy localCheckpoint, sampling._pin_small) is itself
+    pass. Pinning (lazy localCheckpoint, session.pin_small) is itself
     load-bearing: un-pinned, the union branches re-expanded the k-row
     derivations into 15 corpus scans (r08 audit)."""
     p = _plan(spark, "win_ntile_highcard", sf_dir)
@@ -271,9 +269,9 @@ def test_cdc_chain_pins_state_lineage(spark, sf_dir):
     sequence re-expands the prior state's WHOLE derivation per
     reference — leaf relations grow ~2^batches (the registered 2-apply
     query planned 26 leaf scans, the 3-apply compact query 59). The
-    chain helper pins state between applies (lazy localCheckpoint, the
-    star-CC/Lloyd per-round precedent): each intermediate state
-    materializes ONCE and the final plan reads pinned RDDs only.
+    chain helper checkpoints state between applies (session.checkpoint,
+    the star-CC per-round precedent): each intermediate state
+    materializes ONCE and the final plan reads checkpointed RDDs only.
     Asserts the unpinned counter-case (super-linear growth), the pinned
     shape, and bit-equality of the two results."""
     from dbt_ci_demo_spark.operators import incremental as incr
@@ -472,7 +470,7 @@ def test_leaf_relation_ceiling(spark, sf_dir):
     SF-independent). A new re-expansion now fails pytest instead of
     waiting for a future round's audit. Maintenance: a legitimately
     added table read means regenerating the entry (the docstring of
-    sampling._pin_small explains the pin pattern to try first); wr_*
+    session.pin_small explains the pin pattern to try first); wr_*
     writer queries mutate warehouse state and are excluded (same posture
     as the cartesian sweep). Ceilings, not exact pins: the four
     r08-audited queries keep their exact scan-count pins in the targeted
@@ -526,3 +524,52 @@ def test_remove_spans_plan_is_one_join_no_explode(spark):
     got = {r.doc_id: r for r in out.collect()}
     assert got[1].text_spliced == "a b f g h i" and got[1].n_removed == 3
     assert got[2].text_spliced == "x y" and got[2].n_removed == 0
+
+
+# Registered queries whose code path reaches session.pinned, checkpoint or
+# pin_small (found by recording every persist/checkpoint/localCheckpoint
+# call over the registry at sf0.001). The leak test runs these in the
+# default tier and every other registered query in the slow tier.
+_MATERIALIZING = {
+    "dedup_cluster_components",
+    "dedup_cluster_star",
+    "dedup_containment",
+    "dedup_incremental_minhash",
+    "dedup_index_refresh_cycle",
+    "dedup_index_retry_replay",
+    "dedup_minhash_lsh",
+    "emb_kmeans_converged",
+    "graph_pagerank",
+    "incr_cdc_compact",
+    "incr_cdc_versioned",
+    "pipe_budgeted_curation",
+    "pipe_curation_end_to_end",
+    "samp_quality_weighted",
+    "samp_quota_threshold",
+    "samp_quota_threshold2",
+    "sim_ivf_kmeans_trained",
+    "stream_cdc_versioned",
+    "stream_foreachbatch_merge",
+    "text_ccnet_buckets",
+    "text_unigram_logprob",
+    "win_ntile_highcard",
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        name if name in _MATERIALIZING else pytest.param(name, marks=pytest.mark.slow)
+        for name in sorted(q.registry_queries())
+    ],
+)
+def test_query_leaves_no_storage_behind(spark, sf_dir, name):
+    """Nothing a registered query pins outlives its result: forced (noop
+    write), dropped and drained, the session's persisted RDDs and
+    CacheManager entries equal their pre-query state."""
+    rdds, plans = drain_cleaner(spark), cached_plans(spark)
+    out = q.registry_queries()[name](spark, sf_dir)
+    out.write.format("noop").mode("overwrite").save()
+    del out
+    assert drain_cleaner(spark) == rdds
+    assert cached_plans(spark) == plans

@@ -1,13 +1,20 @@
 """Behavioral tests for deterministic sampling/splitting beyond the oracle
 gate: partition-invariance, append-stability, split disjointness, exact
-stratum caps."""
+stratum caps; and the session's materialization policy (pinned,
+checkpoint, pin_small) that the samplers and the corpus operators use."""
 
 from __future__ import annotations
 
+import ast
+import os
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
+from conftest import cached_plans, drain_cleaner, persisted_rdds
 
 from dbt_ci_demo_spark.operators import sampling as sp
+from dbt_ci_demo_spark.session import checkpoint, pin_small, pinned
 from dbt_ci_demo_spark.sources.catalog import load_table
 
 
@@ -299,23 +306,79 @@ def test_quota_threshold_recursion_matches_window_sampler(spark, sf_dir):
     ).count() == d.count()
 
 
-def test_pin_corpus_keeps_lineage_and_spills(spark):
-    """_pin_corpus (ADVICE r09): the corpus-scale pin must be a
-    MEMORY_AND_DISK persist — lineage stays attached (executor loss
-    recomputes instead of failing; dynamic allocation stays usable) —
-    not a lineage-truncating localCheckpoint, and rows are unchanged."""
+def test_pinned_keeps_lineage_and_releases(spark):
+    """session.pinned: inside the block the frame is a cache that keeps
+    its lineage (executor loss recomputes; no ExistingRDD leaf replaces
+    the source), rows are unchanged, and the block's exit releases it."""
     df = spark.range(100).withColumn("v", F.col("id") * 2)
-    pinned = sp._pin_corpus(df)
-    try:
-        lvl = pinned.storageLevel
+    with pinned(df):
+        lvl = df.storageLevel
         assert lvl.useMemory and lvl.useDisk and not lvl.useOffHeap
-        assert pinned.count() == 100
-        plan = pinned._jdf.queryExecution().executedPlan().toString()
+        assert df.count() == 100
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, plan
-        # lineage is NOT truncated: no ExistingRDD leaf replaces the range
         assert "Scan ExistingRDD" not in plan, plan
+    assert not df.is_cached
+
+
+def test_pinned_releases_when_the_block_raises(spark):
+    plans = cached_plans(spark)
+    a = spark.range(10).withColumn("v", F.col("id") + 1)
+    b = a.filter(F.col("v") > 3)
+    with pytest.raises(RuntimeError, match="boom"):
+        with pinned(a, b):
+            assert b.count() == 7 and a.is_cached and b.is_cached
+            raise RuntimeError("boom")
+    assert not a.is_cached and not b.is_cached
+    assert cached_plans(spark) == plans
+
+
+def test_checkpoint_writes_under_the_checkpoint_dir_and_pins_nothing(spark):
+    root = spark.sparkContext.getCheckpointDir().removeprefix("file:")
+    dirs = set(os.listdir(root))
+    before = drain_cleaner(spark)
+    out = checkpoint(spark.range(50).withColumn("v", F.col("id") % 7))
+    assert persisted_rdds(spark) == before
+    assert set(os.listdir(root)) - dirs, "no checkpoint files written"
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan, plan
+    assert out.count() == 50
+
+
+def test_pin_small_runs_no_job(spark):
+    """pin_small is lazy: a shuffle-free plan runs no job until the first
+    action. (Under AQE a plan with an exchange runs its shuffle map
+    stages at call time — see session.pin_small.)"""
+    sc = spark.sparkContext
+    group = "pin-small-no-job"
+    sc.setJobGroup(group, "pin_small probe")
+    try:
+        small = pin_small(spark.range(5).withColumn("v", F.col("id") * 3))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert sorted(r.v for r in small.collect()) == [0, 3, 6, 9, 12]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)), "probe saw no job"
     finally:
-        pinned.unpersist()
+        sc._jsc.clearJobGroup()
+
+
+def test_only_session_persists_or_checkpoints():
+    """The materialization policy has one owner: no ``.persist(``,
+    ``.unpersist(``, ``.checkpoint(`` or ``.localCheckpoint(`` call in
+    the package outside session.py."""
+    pkg = Path(__file__).resolve().parent.parent / "dbt_ci_demo_spark"
+    banned = {"persist", "unpersist", "checkpoint", "localCheckpoint"}
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "session.py" and path.parent == pkg:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned
+            ):
+                hits.append(f"{path.relative_to(pkg)}:{node.lineno} .{node.func.attr}(")
+    assert not hits, hits
 
 
 def test_pack_token_windows_int64_exact_past_double_floor(spark):

@@ -16,6 +16,7 @@ import random
 import pytest
 
 import pyspark.sql.functions as F
+from conftest import cached_plans
 from pyspark.sql import Window
 
 
@@ -665,13 +666,13 @@ def test_ntile_exact_highcard_fixture(spark):
     assert got == want
 
 
-def test_ntile_exact_rejects_raised_ceiling_and_registers_pin(spark):
-    """r10 review findings: (1) max_driver_strata may only LOWER the
-    routing point — raised past the histogram twin's hard 1024 guard the
-    dispatcher fails FAST (before paying pin + count + stats cost)
-    instead of routing a strata count the twin then rejects; (2) the
-    pin_registry hook hands the caller the pinned frame so a long-lived
-    session can unpersist (the persist pin is never GC-reclaimed)."""
+def test_ntile_exact_rejects_raised_ceiling_and_pins_nothing(spark):
+    """(1) max_driver_strata may only LOWER the routing point — raised
+    past the histogram twin's hard 1024 guard the dispatcher fails FAST
+    (before paying count + stats cost) instead of routing a strata count
+    the twin then rejects; (2) neither operator caches its input: the
+    caller owns any pin (session.pinned), so the CacheManager is
+    unchanged after the result is consumed."""
     from dbt_ci_demo_spark.operators.sampling import (
         DRIVER_STRATA_CEILING,
         ntile_exact,
@@ -686,10 +687,7 @@ def test_ntile_exact_rejects_raised_ceiling_and_registers_pin(spark):
         ntile_exact(
             df, 2, "v", "id", ["g"], max_driver_strata=DRIVER_STRATA_CEILING + 1
         )
+    plans = cached_plans(spark)
     for fn in (ntile_exact, ntile_histogram):
-        pins: list = []
-        out = fn(df, 2, "v", "id", ["g"], tile_col="t", pin_registry=pins)
-        out.count()
-        assert len(pins) == 1 and pins[0].is_cached, fn.__name__
-        pins[0].unpersist()
-        assert not pins[0].is_cached, fn.__name__
+        assert fn(df, 2, "v", "id", ["g"], tile_col="t").count() == 3
+        assert cached_plans(spark) == plans, fn.__name__

@@ -5,7 +5,7 @@ test_leaf_relation_ceiling.
 Run after intentionally adding a table read to a query (or registering a
 new query), then eyeball the diff: a count JUMP on an untouched query is
 the union-branch re-expansion class the ceiling test exists to catch —
-fix the plan (see operators/sampling._pin_small), don't raise the
+fix the plan (see session.pin_small), don't raise the
 ceiling. Logical leaf counts are SF-independent; sf0.001 keeps the sweep
 fast (~6 min).
 

@@ -121,11 +121,15 @@ def _hash32(col: Column, hash_fn: str) -> Column:
     JVM-native seeded xxHash folded into 32 bits — no hex string
     materialization, no conv(), ~3× cheaper per shingle (the per-shingle
     hash dominates MinHash cost at corpus scale) but Spark-specific."""
-    if hash_fn == "md5":
-        return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+    _check_hash_fn(hash_fn)
     if hash_fn == "xxhash64":
         return F.pmod(F.xxhash64(col), F.lit(1 << 32).cast("long"))
-    raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+def _check_hash_fn(hash_fn: str) -> None:
+    if hash_fn not in ("md5", "xxhash64"):
+        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
 
 
 def _affine_params(n: int, seed: int = 1) -> list[tuple[int, int]]:
@@ -186,6 +190,7 @@ def banded_buckets(
     silently drop the trailing signature rows from every band key,
     weakening LSH recall with no visible symptom (the no-silent-caps
     discipline; r11 review)."""
+    _check_hash_fn(hash_fn)
     if bands < 1 or n_hashes % bands != 0:
         raise ValueError(
             f"bands={bands} must be >= 1 and divide n_hashes={n_hashes} "

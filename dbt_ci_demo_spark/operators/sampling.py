@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from dbt_ci_demo_spark.session import checkpoint, pin_small
 
@@ -338,6 +339,98 @@ def stratified_sample_by_quota(
     return ranked.filter(F.col("__rk") <= F.col("quota")).drop("__rk")
 
 
+def _score_stats(base: DataFrame, score_col: str, who: str) -> DataFrame:
+    """Per-stratum ``(__sk, __n, __mn, __mx)`` of ``base``, which carries
+    the ``__sk`` stratum key. NULL scores (engine-specific rank order) and
+    NaN/Inf scores (they defeat equi-width binning) raise in-plan from
+    this k-row table: ``assert_true`` returns NULL on success, so ``__n``
+    stays the plain count."""
+    s = F.col(score_col)
+    bad = s.isNull()
+    if isinstance(base.schema[score_col].dataType, (DoubleType, FloatType)):
+        bad = bad | F.isnan(s) | (F.abs(s) == F.lit(float("inf")))
+    guard = F.assert_true(
+        F.col("__nbad") == 0,
+        F.lit(
+            f"{who}: {score_col} contains NULL/NaN/Inf — NULL rank order is "
+            "engine-specific and non-finite values defeat equi-width "
+            "binning; filter or impute first"
+        ),
+    )
+    return (
+        base.groupBy("__sk")
+        .agg(
+            F.count(F.lit(1)).alias("__cnt"),
+            F.count(F.when(bad, F.lit(1))).alias("__nbad"),
+            F.min(s).cast("double").alias("__mn"),
+            F.max(s).cast("double").alias("__mx"),
+        )
+        .withColumn("__n", F.when(guard.isNull(), F.col("__cnt")))
+        .select("__sk", "__n", "__mn", "__mx")
+    )
+
+
+def _score_bins(
+    base: DataFrame, stats: DataFrame, score_col: str, n_bins: int, ascending: bool
+) -> DataFrame:
+    """``base`` joined to its :func:`_score_stats` plus ``__bin``: the
+    score's equi-width bin in [0, n_bins) numbered in rank order
+    (ascending scores, or descending). Any monotone bucketing is exact
+    for the threshold selection, so the double cast is safe for decimal
+    scores; a constant stratum is bin 0."""
+    s = F.col(score_col).cast("double")
+    pos = (s - F.col("__mn")) if ascending else (F.col("__mx") - s)
+    width = (F.col("__mx") - F.col("__mn")) / F.lit(float(n_bins))
+    bin_c = (
+        F.when(F.col("__mx") == F.col("__mn"), F.lit(0))
+        .otherwise(
+            F.greatest(F.lit(0), F.least(F.lit(n_bins - 1), F.floor(pos / width)))
+        )
+        .cast("int")
+    )
+    return base.join(F.broadcast(stats), "__sk").withColumn("__bin", bin_c)
+
+
+def _boundary_bins(binned: DataFrame, keys: list[str], targets: DataFrame) -> DataFrame:
+    """Histogram threshold selection, the one exact-rank primitive behind
+    :func:`stratified_sample_by_quota_threshold`, :func:`ntile_threshold`
+    and ``queries_olap2.exact_percentiles``.
+
+    ``binned`` holds rows with stratum ``keys`` and an integer ``__bin``
+    whose order agrees with the rank order (bin ``b`` rows all rank
+    before bin ``b+1`` rows). ``targets`` holds ``keys``, a target rank
+    ``__b`` (1-based) and any tag columns. Returns one row per target
+    row: its columns plus the BOUNDARY bin ``__bb`` (the first bin whose
+    cumulative count reaches ``__b``), the rows ranked before that bin
+    ``__bef`` and the rows in it ``__bc`` — so rank ``__b`` is the
+    ``(__b − __bef)``-th row of bin ``__bb``. A target above its
+    stratum's row count gets no row.
+
+    Plan: a per-(stratum, bin) count (map-side combinable, at most
+    strata·bins rows whatever the corpus size), a running sum over each
+    stratum's bin table (window partitions bounded by the bin count, not
+    the data), a broadcast join of the targets, and a ``min_by`` pick.
+    Callers then decide rows below ``__bb`` with a scan-side comparison
+    and rank only the boundary bin's ~stratum/bins rows."""
+    hist = binned.groupBy(*keys, "__bin").agg(F.count(F.lit(1)).alias("__c"))
+    wcum = (
+        Window.partitionBy(*keys)
+        .orderBy("__bin")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    bins = hist.withColumn("__before", F.coalesce(F.sum("__c").over(wcum), F.lit(0)))
+    return (
+        bins.join(F.broadcast(targets), keys)
+        .filter(F.col("__before") + F.col("__c") >= F.col("__b"))
+        .groupBy(*targets.columns)
+        .agg(
+            F.min("__bin").alias("__bb"),
+            F.min_by("__before", "__bin").alias("__bef"),
+            F.min_by("__c", "__bin").alias("__bc"),
+        )
+    )
+
+
 def stratified_sample_by_quota_threshold(
     df: DataFrame,
     strata_cols: list[str],
@@ -347,59 +440,42 @@ def stratified_sample_by_quota_threshold(
     n_hist_buckets: int = 1024,
     n_levels: int = 1,
 ) -> DataFrame:
-    """Window-free quota enforcement — the VERDICT r06 stretch path for
-    budgets too large for a useful ``max_quota`` literal: selects exactly
-    the same rows as :func:`stratified_sample_by_quota` (the quota
-    smallest (hash, key) pairs per stratum) WITHOUT ranking whole strata.
+    """Window-free quota enforcement for budgets too large for a useful
+    ``max_quota`` literal: selects exactly the same rows as
+    :func:`stratified_sample_by_quota` (the quota smallest (hash, key)
+    pairs per stratum) WITHOUT ranking whole strata.
 
-    Plan (histogram threshold selection):
-    1. bucket each row's hash into ``n_hist_buckets`` equi-width bins and
-       count per (stratum, bin) — one map-side-combinable aggregate whose
-       output is k·buckets rows, corpus-size-independent;
-    2. a running sum over each stratum's ≤``n_hist_buckets``-row bin
-       table (bounded window — partition size is the literal bucket
-       count, never data-sized) finds the BOUNDARY bin where the
-       cumulative count crosses the quota, and how many rows of that bin
-       still fit (``remaining``);
-    3. broadcast-join the k-row boundary table back: rows in bins below
-       the boundary keep outright (pure scan-side predicate — at a 1%
-       sampling rate that is ~99.9% of kept rows deciding with NO
-       shuffle); only rows INSIDE each boundary bin are ranked, and that
-       window's partitions hold ~stratum/n_hist_buckets rows — a
-       1024-fold reduce-side bound without any literal cap. The boundary
-       rank still pre-filters to the bin before the window, so the
-       exchange carries bin rows only.
+    Each row's md5 hash is binned into ``n_hist_buckets`` equi-width
+    bins and :func:`_boundary_bins` finds each stratum's boundary bin
+    for its quota. Rows in bins below it keep outright (a scan-side
+    predicate, no shuffle); a stratum whose quota exceeds its rows gets
+    no boundary and keeps every row; only boundary-bin rows
+    (~stratum/n_hist_buckets) are ranked, keeping the quota's
+    ``__remaining`` rows.
 
-    ``n_levels`` RECURSES the histogram (r08, VERDICT r07 task 5b —
-    exercising the same one-more-histogram-level machinery as the
-    heavy-bin routing in :func:`ntile_histogram`): each extra level
-    re-bins ONLY the boundary-bin slice (~stratum/buckets rows) on the
-    hash range inside that bin and repeats the threshold selection with
-    the level's ``remaining`` as its quota, multiplying the reduce-side
-    bound by another factor of ``n_hist_buckets`` — two levels bound the
-    final rank window by ~stratum/1024² (a 10¹²-row stratum ranks ≤ ~10⁶
-    rows per partition). Each level's histogram re-SCANS the corpus to
-    isolate its slice (the bin filter is compute-cheap but the I/O is
-    real), so persist the input when using multiple levels at scale;
+    ``n_levels`` recurses: each extra level re-bins only the
+    boundary-bin slice on the hash remainder inside that bin, with
+    ``__remaining`` as its quota, so two levels bound the final rank
+    window by ~stratum/n_hist_buckets². Each level re-scans the corpus
+    to isolate its slice, so an input that is expensive to re-derive
+    belongs in :func:`~dbt_ci_demo_spark.session.pinned` at scale;
     level 1 is the right default until single-bin slices outgrow a
     reduce task (~10⁹-row strata).
 
-    Decision-identical to the rank formulation because the md5 hash key
-    is a total order with the key tie-break: bucket = hash div width, so
-    (bucket, hash, key) sorts identically to (hash, key) — and the
-    level-ℓ local hash is the (exact, integral) remainder of the level
-    ℓ−1 bin, preserving the order inside each slice. Exactness is
-    oracle-checked (``samp_quota_threshold``, level 1;
-    ``samp_quota_threshold2``, level 2); equality with the window
-    sampler is property-tested at both depths."""
+    Decision-identical to the rank formulation: bucket = hash div width,
+    so (bucket, hash, key) sorts like (hash, key), and the level-ℓ hash
+    is the exact integral remainder inside the level ℓ−1 bin.
+    Oracle-checked (``samp_quota_threshold``, level 1;
+    ``samp_quota_threshold2``, level 2) and property-tested against the
+    window sampler at both depths."""
     if n_hist_buckets < 2:
         raise ValueError("n_hist_buckets must be >= 2")
     if n_levels < 1:
         raise ValueError("n_levels must be >= 1")
     h = _key_hash(F.col(key_col), seed)
     # pin the k-row quota table: it is referenced by the corpus join AND
-    # by every level's bin-table join — un-pinned, each reference
-    # re-derives its (often corpus-sized) lineage
+    # by the level-1 targets — un-pinned, each reference re-derives its
+    # (often corpus-sized) lineage
     quotas = pin_small(quotas)
     # __lh = the level-local hash: the full hash at level 1, then the
     # remainder within the chosen boundary bin at each deeper level
@@ -408,62 +484,38 @@ def stratified_sample_by_quota_threshold(
         .withColumn("__h", h)
         .withColumn("__lh", F.col("__h"))
     )
-    q_tbl = quotas
+    targets = quotas.select(*strata_cols, F.col("quota").alias("__b"))
     space = _HASH_SPACE
     kept: list[DataFrame] = []
-    drop_cols = ["__h", "__lh", "__bin", "__bbin", "__remaining"]
+    drop_cols = ["__h", "__lh", "__bin", "__bb", "__remaining"]
     for level in range(n_levels):
         # integral `div`, not double-divide-then-cast: same exactness
         # discipline as compact_layout's file count (ADVICE r06)
         width = (space + n_hist_buckets - 1) // n_hist_buckets
         w_df = work.withColumn("__bin", F.expr(f"__lh div {width}"))
-        hist = w_df.groupBy(*strata_cols, "__bin").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        wcum = (
-            Window.partitionBy(*strata_cols)
-            .orderBy("__bin")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        bins = hist.withColumn(
-            "__before", F.coalesce(F.sum("__c").over(wcum), F.lit(0))
-        )
-        # boundary = first bin where cumulative count reaches the quota;
-        # join quotas onto the k·buckets table (broadcast — it is tiny)
-        bq = bins.join(F.broadcast(q_tbl), on=strata_cols)
         # boundary is k rows but its lineage holds a corpus aggregate —
         # pin it, or the below/slice branches (and every deeper level)
         # re-expand that aggregate per reference
         boundary = pin_small(
-            bq.filter(F.col("__before") + F.col("__c") >= F.col("quota"))
-            .groupBy(*strata_cols)
-            .agg(
-                F.min("__bin").alias("__bbin"),
-            )
-            .join(bq, [*strata_cols])
-            .filter(F.col("__bin") == F.col("__bbin"))
-            .select(
+            _boundary_bins(w_df, strata_cols, targets).select(
                 *strata_cols,
-                "__bbin",
-                (F.col("quota") - F.col("__before")).alias("__remaining"),
+                "__bb",
+                (F.col("__b") - F.col("__bef")).alias("__remaining"),
             )
         )
         joined = w_df.join(F.broadcast(boundary), on=strata_cols, how="left")
         kept.append(
             joined.filter(
-                F.col("__bbin").isNull() | (F.col("__bin") < F.col("__bbin"))
+                F.col("__bb").isNull() | (F.col("__bin") < F.col("__bb"))
             ).drop(*drop_cols)
         )
-        slice_df = joined.filter(F.col("__bin") == F.col("__bbin"))
+        slice_df = joined.filter(F.col("__bin") == F.col("__bb"))
         if level < n_levels - 1:
-            work = (
-                slice_df.withColumn(
-                    "__lh", F.col("__lh") - F.col("__bbin") * F.lit(width)
-                )
-                .drop("__bin", "__bbin", "__remaining")
-            )
-            q_tbl = boundary.select(
-                *strata_cols, F.col("__remaining").alias("quota")
+            work = slice_df.withColumn(
+                "__lh", F.col("__lh") - F.col("__bb") * F.lit(width)
+            ).drop("__bin", "__bb", "__remaining")
+            targets = boundary.select(
+                *strata_cols, F.col("__remaining").alias("__b")
             )
             space = width
         else:
@@ -941,29 +993,18 @@ def ntile_threshold(
     [1, n_tiles], decision-identical to
     ``ntile(n_tiles) OVER (PARTITION BY strata ORDER BY score, id)``
     (property-tested across tie regimes, >1024-cardinality strata, tiny
-    strata, and both orderings).
+    strata, and both orderings). Zero driver collects: strata keys join
+    null-safely via one struct column (NULL = NULL, like GROUP BY).
 
-    Design — the exact_percentiles shape (broadcast thresholds instead
-    of driver literals; ZERO driver collects, fully declarative):
-    1. per-stratum (n, min, max) aggregate — strata-count rows,
-       broadcast back; NULL/NaN/Inf scores raise IN-PLAN from this k-row
-       table (assert_true — zero corpus cost), because NULL rank order
-       is engine-specific and non-finite values defeat equi-width
-       binning. Strata keys join null-safely via one struct column
-       (NULL = NULL, like GROUP BY).
-    2. per-(stratum, score-bin) histogram over ``n_bins`` equi-width
-       bins; a running sum over each stratum's ≤n_bins-row bin table
-       (window bounded by the literal bin count) locates the BOUNDARY
-       bin of every SQL-standard tile rank ``b_i = i·(n div t) +
-       min(i, n mod t)``, derived in-plan from the same aggregate.
-    3. boundary structs collect to one array per stratum (n_tiles−1
-       entries) and broadcast-join back: rows outside boundary bins
-       compute ``tile = 1 + |{i: bb_i < bin}|`` from the array — a pure
-       scan-side expression — and only boundary-bin rows
-       (~stratum/n_bins) are ranked in a (stratum, bin)-partitioned
-       bounded window, where ``tile = 1 + |{i: b_i < g}|`` with the
-       global rank ``g = bef + in-bin row_number`` reproduces ntile
-       exactly, ties included (equal scores share a bin).
+    The SQL-standard tile boundary ranks ``b_i = i·(n div t) + min(i,
+    n mod t)`` are derived in-plan from the stratum count, and
+    :func:`_boundary_bins` locates each one's bin. The boundaries
+    broadcast back as one array per stratum: rows outside boundary bins
+    take ``tile = 1 + |{i: bb_i < bin}|`` scan-side, and only
+    boundary-bin rows are ranked in a (stratum, bin)-partitioned window,
+    where ``tile = 1 + |{i: b_i < g}|`` with ``g = bef + in-bin
+    row_number`` reproduces ntile exactly, ties included (equal scores
+    share a bin).
 
     Degenerate-distribution posture: a boundary bin holding ≥
     ``heavy_bin_rows`` rows (an all-tied stratum collapses to one bin)
@@ -977,68 +1018,15 @@ def ntile_threshold(
         raise ValueError("n_tiles must be >= 1")
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
-    from pyspark.sql.types import DoubleType, FloatType
-
-    strata = list(strata_cols) if strata_cols else []
-    s = F.col(score_col)
-    sk = F.struct(*[F.col(c) for c in strata]) if strata else F.lit(0)
-    base = df.withColumn("__sk", sk)
     if n_tiles == 1:
         return df.withColumn(tile_col, F.lit(1).cast("int"))
-
-    is_float = isinstance(df.schema[score_col].dataType, (DoubleType, FloatType))
-    bad = s.isNull()
-    if is_float:
-        bad = bad | F.isnan(s) | (F.abs(s) == F.lit(float("inf")))
-    guard = F.assert_true(
-        F.col("__nbad") == 0,
-        F.lit(
-            f"ntile_threshold: {score_col} contains NULL/NaN/Inf — NULL "
-            "rank order is engine-specific and non-finite values defeat "
-            "equi-width binning; filter or impute first"
-        ),
-    )
-    # pinned (lazy checkpoint): stats feeds the binned
-    # corpus join, the tile-target derivation, AND — through bounds —
-    # both union branches; un-pinned each reference re-runs the corpus
-    # aggregate
-    stats = pin_small(
-        base.groupBy("__sk")
-        .agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.count(F.when(bad, F.lit(1))).alias("__nbad"),
-            F.min(s).cast("double").alias("__mn"),
-            F.max(s).cast("double").alias("__mx"),
-        )
-        .withColumn("__n", F.when(guard.isNull(), F.col("__cnt")))
-        .select("__sk", "__n", "__mn", "__mx")
-    )
-    # bin in rank order (ascending scores, or descending per the flag);
-    # the SAME expression feeds the histogram and the final pass — both
-    # read it from this joined plan, so binning is consistent by
-    # construction
-    pos = (s.cast("double") - F.col("__mn")) if ascending else (
-        F.col("__mx") - s.cast("double")
-    )
-    width = (F.col("__mx") - F.col("__mn")) / F.lit(float(n_bins))
-    bin_c = (
-        F.when(F.col("__mx") == F.col("__mn"), F.lit(0))
-        .otherwise(
-            F.greatest(F.lit(0), F.least(F.lit(n_bins - 1), F.floor(pos / width)))
-        )
-        .cast("int")
-    )
-    binned = base.join(F.broadcast(stats), "__sk").withColumn("__bin", bin_c)
-
-    hist = binned.groupBy("__sk", "__bin").agg(F.count(F.lit(1)).alias("__c"))
-    wcum = (
-        Window.partitionBy("__sk")
-        .orderBy("__bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bins = hist.withColumn("__before", F.coalesce(F.sum("__c").over(wcum), F.lit(0)))
-
-    # SQL-standard tile boundary ranks, derived in-plan from n
+    strata = list(strata_cols) if strata_cols else []
+    base = df.withColumn("__sk", F.struct(*strata) if strata else F.lit(0))
+    # pinned: stats feeds the binned corpus join, the tile-target
+    # derivation, AND — through bounds — both union branches; un-pinned
+    # each reference re-runs the corpus aggregate
+    stats = pin_small(_score_stats(base, score_col, "ntile_threshold"))
+    binned = _score_bins(base, stats, score_col, n_bins, ascending)
     tgt = (
         stats.select(
             "__sk",
@@ -1052,7 +1040,6 @@ def ntile_threshold(
         )
         .select("__sk", "__i", "__b")
     )
-    bq = bins.join(F.broadcast(tgt), "__sk")
     # heavy-bin guard: the declarative design has no driver histogram to
     # route around an outsized boundary bin — raise in-plan from this
     # k·(n_tiles−1)-row table instead of silently single-tasking it
@@ -1066,15 +1053,8 @@ def ntile_threshold(
             "distributed rank"
         ),
     )
-    bsel = (
-        bq.filter(F.col("__before") + F.col("__c") >= F.col("__b"))
-        .groupBy("__sk", "__i", "__b")
-        .agg(
-            F.min("__bin").alias("__bb"),
-            F.min_by("__before", "__bin").alias("__bef"),
-            F.min_by("__c", "__bin").alias("__bc"),
-        )
-        .withColumn("__bb", F.when(hguard.isNull(), F.col("__bb")))
+    bsel = _boundary_bins(binned, ["__sk"], tgt).withColumn(
+        "__bb", F.when(hguard.isNull(), F.col("__bb"))
     )
     # pinned: bounds is read by both union branches, and its lineage
     # holds the corpus histogram — one computation, two readers
@@ -1103,6 +1083,7 @@ def ntile_threshold(
         .cast("int")
         .alias(tile_col),
     )
+    s = F.col(score_col)
     order = s.asc() if ascending else s.desc()
     wb = Window.partitionBy("__sk", "__bin").orderBy(order, F.col(id_col).asc())
     bef = F.filter("__bnds", lambda x: x["bb"] == F.col("__bin"))[0]["bef"]

@@ -66,15 +66,10 @@ def add_scd_metadata(
     plus the four SCD2 metadata columns; every row open (valid_to NULL)."""
     ts_type = source.schema[updated_at].dataType.simpleString()
     is_ts = "timestamp" in ts_type
-    scd_id = F.md5(
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col(unique_key).cast("string"), F.lit("")),
-            F.coalesce(_hashable(F.col(updated_at), is_ts), F.lit("")),
-        )
-    )
     return (
-        source.withColumn("dbt_scd_id", scd_id)
+        source.withColumn(
+            "dbt_scd_id", scd_hash(unique_key, _hashable(F.col(updated_at), is_ts))
+        )
         .withColumn("dbt_updated_at", F.col(updated_at))
         .withColumn("dbt_valid_from", F.col(updated_at))
         .withColumn("dbt_valid_to", F.lit(None).cast(source.schema[updated_at].dataType))
@@ -162,12 +157,8 @@ def snapshot_changeset(
     key_eq = F.col(f"src.{unique_key}") == F.col(f"snap.{unique_key}")
     changed = row_changed(src, open_rows)
 
-    new_scd_id = F.md5(
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col(f"src.{unique_key}").cast("string"), F.lit("")),
-            F.coalesce(_hashable(F.col(f"src.{updated_at}"), is_ts), F.lit("")),
-        )
+    new_scd_id = scd_hash(
+        f"src.{unique_key}", _hashable(F.col(f"src.{updated_at}"), is_ts)
     )
     src_cols = [F.col(f"src.{c}") for c in source.columns]
 

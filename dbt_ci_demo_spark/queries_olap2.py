@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_ci_demo_spark.operators.sampling import _boundary_bins, _score_bins, _score_stats
 from dbt_ci_demo_spark.queries import _t, query
 
 
@@ -234,36 +235,13 @@ def stats_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact nearest-rank percentiles (p50/p90/p99 of order value per
     priority) — engine-portable where built-in PERCENTILE/QUANTILE
     aggregates differ in interpolation. The oracle states the semantics
-    as row_number + ceil(p·n); the engine COMPUTES it by histogram
-    threshold selection (the `samp_quota_threshold` pattern), because the
+    as row_number + ceil(p·n); the engine computes it by histogram
+    threshold selection (:func:`exact_percentiles`), because the
     rank-window formulation sorts each whole priority stratum in ONE
     reduce task — an interior-rank pick can never get a
     ``WindowGroupLimit``, so at 100 TB a 5-priority orders table funnels
     ~20% of the corpus per reduce task (found by the r07 second-pass
-    window-skew audit, SCALE.md).
-
-    Plan (three bounded passes, no data-sized window partition):
-    1. per-stratum (n, min, max) aggregate — k rows, broadcast; the three
-       target ranks ceil(p·n) are derived here with the same double
-       arithmetic the oracle uses, so rank choice is bit-identical;
-    2. per-(stratum, value-bin) counts over 1024 equi-width price bins
-       (binning is internal — any deterministic monotone bucketing works,
-       so the double cast is safe even for decimal prices) + a running
-       sum over each stratum's ≤1024-row bin table → the BOUNDARY bin
-       where the cumulative count crosses each target rank;
-    3. boundary-bin rows only, collapsed to DISTINCT prices with counts
-       (map-side combinable — and the adversarial all-one-price stratum
-       collapses to ONE row, so ties make this CHEAPER, not degenerate);
-       a running sum over those ≤bin-sized distinct-price partitions
-       picks the first price whose cumulative count reaches the target.
-       The percentile is a VALUE pick, so no row-level tie-break is ever
-       needed: equal prices share a bin and the answer is their common
-       value, bit-identical to the rank formulation.
-
-    Window partitions are bounded by the literal bin count (pass 2) and
-    by ~stratum/1024 distinct prices (pass 3; recurse the histogram for
-    deeper bounds if ever needed). Everything else is scan-shaped
-    aggregation."""
+    window-skew audit, SCALE.md)."""
     o = _t(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
     return exact_percentiles(
         o,
@@ -284,145 +262,64 @@ def exact_percentiles(
     stratum-sized window — the bounded plan behind
     :func:`stats_exact_percentiles`, factored out so tests pin the
     production code. Returns one row per stratum (``strata_cols=[]`` =
-    one global row) with one column per
-    target tag, each holding the value at rank ``ceil(frac·n)`` under
-    (value, any-total-order) — value-identical to the row_number
-    formulation because equal values share a bin and the answer is their
-    common value (property-tested across tie regimes and bin counts)."""
+    one global row; NULL-keyed strata kept, like GROUP BY) with one
+    column per target tag, each holding the value at rank
+    ``ceil(frac·n)`` under (value, any-total-order).
+
+    The target ranks use the oracle's double arithmetic, and
+    ``operators.sampling._boundary_bins`` locates each one's value bin.
+    The boundary-bin rows then collapse to DISTINCT values with counts
+    (an all-one-value stratum collapses to ONE row, so ties make this
+    cheaper, not degenerate), and a running sum over those picks the
+    first value whose cumulative count reaches the target. The answer is
+    a value, so no row-level tie-break is needed: equal values share a
+    bin and the answer is their common value (property-tested across
+    tie regimes and bin counts)."""
     from pyspark.sql.window import Window
 
-    from pyspark.sql.types import DoubleType, FloatType
-
-    def _j(left, right, broadcast_right=True):
-        # strata join that also supports the GLOBAL (no-strata) case —
-        # PySpark's join(on=[]) raises IndexError, so the single global
-        # group joins as a 1-row cross (bounded by construction).
-        # NULL-SAFE on the strata keys (r08): groupBy keeps NULL-keyed
-        # strata, so the join back must match them too (plain equi-join
-        # silently dropped a NULL stratum's rows — GROUP BY semantics,
-        # like ntile_threshold's struct key)
-        if not strata_cols:
-            r = F.broadcast(right) if broadcast_right else right
-            return left.crossJoin(r)
-        # rename-then-join: dropping a same-named column through a
-        # broadcast wrapper is unreliable (expr-id mismatch → ambiguous
-        # reference downstream), renamed keys are unambiguous
-        rr = right
-        for c in strata_cols:
-            rr = rr.withColumnRenamed(c, f"__r_{c}")
-        rr = F.broadcast(rr) if broadcast_right else rr
-        cond = None
-        for c in strata_cols:
-            e = left[c].eqNullSafe(F.col(f"__r_{c}"))
-            cond = e if cond is None else cond & e
-        return left.join(rr, cond).drop(*[f"__r_{c}" for c in strata_cols])
-
-    # NULL values have no bin and would silently shift the cumulative
-    # rank space (Spark sorts NULLS FIRST, other engines LAST); a NaN
-    # makes max() NaN → bin width NaN → every row clamps into one bin,
-    # silently re-creating the single-task stratum sort. Raise in-plan
-    # from the k-row stats aggregate for both (zero corpus cost; same
-    # discipline as the sketch NULL filter, ADVICE r06). assert_true
-    # returns NULL on success, so __n stays the plain count.
-    is_float = isinstance(df.schema[value_col].dataType, (DoubleType, FloatType))
-    bad_val = F.col(value_col).isNull()
-    if is_float:
-        bad_val = (
-            bad_val
-            | F.isnan(F.col(value_col))
-            | (F.abs(F.col(value_col)) == F.lit(float("inf")))
-        )
-    guard = F.assert_true(
-        F.col("__nbad") == 0,
-        F.lit(
-            f"exact_percentiles: {value_col} contains NULL/NaN/Inf — "
-            "NULL rank order is engine-specific and non-finite values "
-            "defeat equi-width binning; filter or impute first"
-        ),
+    base = df.withColumn(
+        "__sk", F.struct(*strata_cols) if strata_cols else F.lit(0)
     )
-    stats = (
-        df.groupBy(*strata_cols)
-        .agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.count(F.when(bad_val, F.lit(1))).alias("__nbad"),
-            F.min(value_col).alias("__mn"),
-            F.max(value_col).alias("__mx"),
-        )
-        .withColumn("__n", F.when(guard.isNull(), F.col("__cnt")))
-        .drop("__cnt", "__nbad")
-    )
-    # (stratum, tag, need): target ranks with the oracle's double math
+    stats = _score_stats(base, value_col, "exact_percentiles")
+    binned = _score_bins(base, stats, value_col, n_bins, ascending=True)
     tgt = stats.select(
-        *strata_cols,
+        "__sk",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(tag).alias("tag"),
-                        F.ceil(F.lit(p) * F.col("__n")).cast("bigint").alias("need"),
+                        F.ceil(F.lit(p) * F.col("__n")).cast("bigint").alias("__b"),
                     )
                     for tag, p in targets
                 ]
             )
         ).alias("t"),
-    ).select(*strata_cols, "t.tag", "t.need")
-    # p = 0.0 → need = 0: the rank formulation has no rn == 0 row and
+    ).select("__sk", "t.tag", "t.__b")
+    # p = 0.0 → rank 0: the rank formulation has no rn == 0 row and
     # yields NULL — drop the target so the pick aggregate agrees (max
     # over no rows is NULL) instead of returning the min value
-    tgt = tgt.filter(F.col("need") >= 1)
-    mnd, mxd = F.col("__mn").cast("double"), F.col("__mx").cast("double")
-    vd = F.col(value_col).cast("double")
-    width = (mxd - mnd) / F.lit(float(n_bins))
-    binned = _j(df, stats).withColumn(
-        "__bin",
-        F.when(mxd == mnd, F.lit(0))
-        .otherwise(
-            F.greatest(
-                F.lit(0), F.least(F.lit(n_bins - 1), F.floor((vd - mnd) / width))
-            )
-        )
-        .cast("int"),
-    )
-    hist = binned.groupBy(*strata_cols, "__bin").agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    wcum = (
-        Window.partitionBy(*strata_cols)
-        .orderBy("__bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bins = hist.withColumn(
-        "__before", F.coalesce(F.sum("__c").over(wcum), F.lit(0))
-    )
-    boundary = (
-        _j(tgt, bins, broadcast_right=False)
-        .filter(F.col("__before") + F.col("__c") >= F.col("need"))
-        .groupBy(*strata_cols, "tag", "need")
-        .agg(
-            F.min("__bin").alias("__bbin"),
-            F.min_by("__before", "__bin").alias("__before_b"),
-        )
-    )
-    # pass 3: boundary-bin rows → distinct-value counts → threshold pick
+    tgt = tgt.filter(F.col("__b") >= 1)
+    boundary = _boundary_bins(binned, ["__sk"], tgt)
     bin_vals = (
-        _j(binned, boundary)
-        .filter(F.col("__bin") == F.col("__bbin"))
-        .groupBy(*strata_cols, "tag", "need", "__before_b", value_col)
+        binned.join(F.broadcast(boundary), "__sk")
+        .filter(F.col("__bin") == F.col("__bb"))
+        .groupBy("__sk", "tag", "__b", "__bef", value_col)
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
     wval = (
-        Window.partitionBy(*strata_cols, "tag")
+        Window.partitionBy("__sk", "tag")
         .orderBy(value_col)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     picked = (
         bin_vals.withColumn("__cum", F.sum("__cnt").over(wval))
-        .filter(F.col("__before_b") + F.col("__cum") >= F.col("need"))
-        .groupBy(*strata_cols, "tag")
+        .filter(F.col("__bef") + F.col("__cum") >= F.col("__b"))
+        .groupBy("__sk", "tag")
         .agg(F.min(value_col).alias("__val"))
     )
     pick = lambda t: F.max(F.when(F.col("tag") == t, F.col("__val")))  # noqa: E731
-    return picked.groupBy(*strata_cols).agg(
+    return picked.groupBy(*[F.col("__sk")[c].alias(c) for c in strata_cols]).agg(
         *[pick(tag).alias(tag) for tag, _ in targets]
     )
 

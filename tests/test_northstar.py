@@ -338,6 +338,12 @@ def test_minhash_bad_hash_fn_rejected(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(10)
     with pytest.raises(ValueError, match="hash_fn"):
         dd.minhash_near_duplicates(docs, "text", "doc_id", hash_fn="sha1").collect()
+    # the banding entry points take hash_fn too and must not fall back to md5
+    sig = dd.minhash_signatures(dd.shingle_sets(docs, "text", "doc_id"), "doc_id")
+    with pytest.raises(ValueError, match="hash_fn"):
+        dd.banded_buckets(sig, "doc_id", hash_fn="sha1")
+    with pytest.raises(ValueError, match="hash_fn"):
+        dd.lsh_candidate_pairs(sig, "doc_id", hash_fn="sha1")
 
 
 def test_containment_detects_embedded_doc(spark):

@@ -306,6 +306,53 @@ def test_quota_threshold_recursion_matches_window_sampler(spark, sf_dir):
     ).count() == d.count()
 
 
+def _walk(counts: dict[int, int], b: int):
+    """Reference boundary pick: the first bin whose running count reaches
+    rank ``b`` as (bin, rows before it, rows in it); None when b > n."""
+    before = 0
+    for bn in sorted(counts):
+        if before + counts[bn] >= b:
+            return bn, before, counts[bn]
+        before += counts[bn]
+    return None
+
+
+def test_boundary_bins_matches_cumulative_walk(spark):
+    """_boundary_bins against a pure-Python cumulative walk on small random
+    histograms. Every stratum's targets include the last row of its first
+    bin (a target exactly at a bin edge) and the next rank, two ranks
+    inside that first bin (its count is >= 2), n and n + 1 (no row); one
+    stratum is NULL-keyed, joined through the struct key."""
+    import random
+
+    rng = random.Random(11)
+    rows, targets, want = [], [], set()
+    for g in [None, *[f"s{i}" for i in range(12)]]:
+        bins = sorted(rng.sample(range(10), rng.randint(1, 6)))
+        counts = {bn: rng.randint(1, 4) for bn in bins}
+        counts[bins[0]] += 1
+        n = sum(counts.values())
+        edge = counts[bins[0]]
+        ranks = {1, 2, edge, edge + 1, rng.randint(1, n), n, n + 1}
+        rows += [(g, bn) for bn, c in counts.items() for _ in range(c)]
+        for i, b in enumerate(sorted(ranks)):
+            targets.append((g, i, b))
+            hit = _walk(counts, b)
+            if hit is not None:
+                want.add((g, i, b, *hit))
+    key = F.struct("g").alias("__sk")
+    binned = spark.createDataFrame(rows, "g string, __bin int").select(key, "__bin")
+    tgt = spark.createDataFrame(targets, "g string, __i int, __b long").select(
+        key, "__i", "__b"
+    )
+    got = {
+        (r["__sk"]["g"], r["__i"], r["__b"], r["__bb"], r["__bef"], r["__bc"])
+        for r in sp._boundary_bins(binned, ["__sk"], tgt).collect()
+    }
+    assert got == want
+    assert any(w[0] is None for w in want)
+
+
 def test_pinned_keeps_lineage_and_releases(spark):
     """session.pinned: inside the block the frame is a cache that keeps
     its lineage (executor loss recomputes; no ExistingRDD leaf replaces

@@ -358,9 +358,8 @@ def test_ntile_histogram_strata_cardinality_guard(spark):
 
 
 def test_percentiles_global_strata(spark):
-    """strata_cols=[] = ONE global stratum (PySpark join(on=[]) raises
-    IndexError, so the operator routes the k-row tables through a
-    bounded cross join) — the percentile analogue of the global ntile."""
+    """strata_cols=[] = ONE global stratum (a constant stratum key) —
+    the percentile analogue of the global ntile."""
     from dbt_ci_demo_spark.queries_olap2 import exact_percentiles
 
     rows = [(i, float(v)) for i, v in enumerate([5, 1, 9, 3, 7, 2, 8, 4, 6, 10])]
@@ -541,8 +540,8 @@ def test_ntile_threshold_global_null_strata_and_guards(spark):
 def test_percentiles_null_strata_keys_kept(spark):
     """GROUP BY keeps NULL-keyed strata, so exact_percentiles' joins
     back onto the strata must match them too (r08: the plain equi-join
-    silently dropped the NULL stratum's rows — null-safe rename-join
-    now mirrors groupBy semantics). Checked against the rank
+    silently dropped the NULL stratum's rows — the one struct stratum
+    key now mirrors groupBy semantics). Checked against the rank
     formulation including the NULL group, for 1- and 2-column strata."""
     from dbt_ci_demo_spark.queries_olap2 import exact_percentiles
 

@@ -164,13 +164,16 @@ def minhash_signatures(
         F.col(id_col),
         F.transform("shingles", lambda s: _hash32(s, hash_fn)).alias("__h"),
     )
-    # (F.transform calls each lambda at once, so a and b bind per item)
+    # SQL strings with integer constants only: built as Column trees, the
+    # signature and band plans took ~3.5k py4j round trips, as strings ~280
+    # (tests/test_driver_cost.py holds the ceiling).
     return hashed.select(
         F.col(id_col),
         *[
-            F.array_min(
-                F.transform("__h", lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MINHASH_PRIME))
-            ).alias(f"sig_{i}")
+            F.expr(
+                f"array_min(transform(__h, h -> ({a} * h + {b}) % {_MINHASH_PRIME}))"
+                f" AS sig_{i}"
+            )
             for i, (a, b) in enumerate(_affine_params(n_hashes))
         ],
     )
@@ -199,23 +202,19 @@ def banded_buckets(
         )
     rows = n_hashes // bands
 
-    def band_hash(cols: list[Column]) -> Column:
+    def band_hash(b: int) -> str:
+        cols = ", ".join(f"sig_{b * rows + r}" for r in range(rows))
         if hash_fn == "xxhash64":
             # Native multi-arg hash: no string concat materialized at all.
-            return F.xxhash64(*cols).cast("string")
-        return F.md5(F.concat_ws("|", *cols))
+            return f"cast(xxhash64({cols}) AS string)"
+        return f"md5(concat_ws('|', {cols}))"
 
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            band_hash([F.col(f"sig_{b * rows + r}") for r in range(rows)]).alias(
-                "band_hash"
-            ),
-        )
-        for b in range(bands)
-    ]
+    # one SQL string for the whole band array, as in minhash_signatures
+    band_array = ", ".join(
+        f"struct({b} AS band_id, {band_hash(b)} AS band_hash)" for b in range(bands)
+    )
     return signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("b")
+        F.col(id_col), F.explode(F.expr(f"array({band_array})")).alias("b")
     ).select(id_col, "b.band_id", "b.band_hash")
 
 

@@ -21,6 +21,23 @@ concurrency/timeout/priority (test_profiles/profiles.yml:11-13). Here Spark
   through unchanged.
 - Session timezone pinned to UTC so timestamp semantics are reproducible
   and oracle-comparable.
+- ``spark.sql.codegen.cache.maxEntries=2000`` (static, set when the
+  session is created). Whole-stage codegen keeps its compiled classes in
+  one JVM-wide LRU of 100 entries by default, below the engine's working
+  set: one process of the benchmark's ``corpus_curation`` workload
+  compiles 149 distinct classes, ``ci_slim`` 144 (set-up, warm-up and
+  two cycles with their verification). At 100, every warm op recompiled
+  its classes on the driver: ``minhash_clusters`` 64-69 per call,
+  ``cc_star_chain`` 49, ``kmeans`` 15, ``nightly_job`` 17-44. At 2000
+  they compile none. A tier-1 run, which builds most plans once,
+  compiles 3,215 classes at 100 and 2,262 at 2000. SCALE.md "Codegen
+  cache" has the measurements.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: otherwise
+  pyspark walks the Python stack and sends the call site over py4j on
+  every Column/DataFrame call, about half of a corpus op's round trips.
+  The cost: a runtime error's DataFrame context no longer names the
+  Python line that built the failing expression. Measured with the cache
+  sizing in SCALE.md "Codegen cache".
 """
 
 from __future__ import annotations
@@ -67,6 +84,7 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -77,11 +95,12 @@ def get_spark(
     if active is None:
         builder = builder.master(master or default_master())
         # Local mode runs driver+executors in one JVM; the 1g default heap
-        # causes constant GC under the hash/shuffle-heavy operators. Only
-        # effective at JVM launch, so set it only when creating the session.
+        # causes constant GC under the hash/shuffle-heavy operators. Both
+        # confs are static (read once per JVM), so they are set only when
+        # creating the session.
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        )
+        ).config("spark.sql.codegen.cache.maxEntries", "2000")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

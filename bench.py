@@ -210,7 +210,7 @@ def _bench_only():
     from dbt_ci_demo_spark.operators.dedup import simhash_near_duplicates
     from dbt_ci_demo_spark.sources.catalog import load_table
 
-    from dbt_ci_demo_spark.operators.dedup import minhash_near_duplicates
+    from dbt_ci_demo_spark.operators.dedup import MinHashSpec, minhash_near_duplicates
 
     def simhash_xxh(spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -220,7 +220,7 @@ def _bench_only():
 
     def minhash_xxh(spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        return minhash_near_duplicates(docs, "text", "doc_id", hash_fn="xxhash64")
+        return minhash_near_duplicates(docs, "text", "doc_id", MinHashSpec(hash_fn="xxhash64"))
 
     def cc_star_chain(spark, sf_dir):
         from dbt_ci_demo_spark.operators.dedup import connected_components_star

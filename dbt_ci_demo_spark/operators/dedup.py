@@ -7,12 +7,14 @@ in whole-stage codegen and scales with executors.
 
 Determinism contract: all hashing defaults to md5 (not hash()/xxhash64,
 whose seeds/implementations differ between engines), so the DuckDB
-oracles replicate signatures bit-for-bit. The MinHash pipeline also
-offers ``hash_fn="xxhash64"`` — the JVM-native 64-bit path for
-production corpora where cross-engine bit-parity is not needed; the
-verification stage (exact Jaccard over shingle sets) is hash-agnostic,
-so both paths return identically-scored pairs and differ only in
-candidate recall at the LSH stage.
+oracles replicate signatures bit-for-bit. ``MinHashSpec(hash_fn=
+"xxhash64")`` selects the JVM-native 64-bit path for production corpora
+where cross-engine bit-parity is not needed; the verification stage
+(exact Jaccard over shingle sets) is hash-agnostic, so both return
+identically-scored pairs and differ only in candidate recall at the LSH
+stage. A ``MinHashSpec`` holds all four MinHash parameters, checked once,
+and every index (in memory or stored) carries the spec it was built
+with, so indexes of two specs cannot mix.
 
 Scale design:
 - exact dedup: one shuffle on the content hash.
@@ -46,7 +48,10 @@ from __future__ import annotations
 import hashlib
 import os
 import uuid
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import nullcontext
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,23 +118,20 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> Data
 _MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
 
 
-def _hash32(col: Column, hash_fn: str) -> Column:
-    """32-bit integer hash of a string column.
+def _hash32(hash_fn: str) -> Callable[[Column], Column]:
+    """The 32-bit integer hash of a string column that ``hash_fn`` names:
+    the one place a hash name is checked (MinHash and SimHash).
 
     ``md5``: first 8 hex chars → integer; bit-identical in any engine with
     md5 + base conversion (the oracle-parity path). ``xxhash64``: Spark's
     JVM-native seeded xxHash folded into 32 bits — no hex string
     materialization, no conv(), ~3× cheaper per shingle (the per-shingle
     hash dominates MinHash cost at corpus scale) but Spark-specific."""
-    _check_hash_fn(hash_fn)
+    if hash_fn == "md5":
+        return lambda c: F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
     if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(1 << 32).cast("long"))
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def _check_hash_fn(hash_fn: str) -> None:
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+        return lambda c: F.pmod(F.xxhash64(c), F.lit(1 << 32).cast("long"))
+    raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
 
 
 def _affine_params(n: int, seed: int = 1) -> list[tuple[int, int]]:
@@ -147,8 +149,68 @@ def _affine_params(n: int, seed: int = 1) -> list[tuple[int, int]]:
     return out
 
 
+@dataclass(frozen=True)
+class MinHashSpec:
+    """The MinHash+LSH parameters, checked once when the spec is built:
+    word ``k``-shingles, ``n_hashes`` signature rows cut into ``bands``
+    bands, and the 32-bit shingle hash (:func:`_hash32`; md5 is
+    bit-reproducible across engines, xxhash64 is the JVM-native
+    production hash). Every index carries the spec it was built with:
+    band keys mean nothing across two specs.
+
+    ``bands`` must divide ``n_hashes`` exactly: a remainder would
+    silently drop the trailing signature rows from every band key,
+    weakening LSH recall with no visible symptom."""
+
+    k: int = 3
+    n_hashes: int = 32
+    bands: int = 8
+    hash_fn: str = "md5"
+
+    def __post_init__(self) -> None:
+        _hash32(self.hash_fn)
+        if self.bands < 1 or self.n_hashes % self.bands:
+            raise ValueError(
+                f"bands={self.bands} must be >= 1 and divide n_hashes={self.n_hashes}"
+            )
+
+    @property
+    def band_sql(self) -> str:
+        """SQL of the (band_id, band_hash) struct array over the ``sig_*``
+        columns: band b's bucket key hashes its n_hashes / bands rows."""
+        rows = self.n_hashes // self.bands
+
+        def key(b: int) -> str:
+            cols = ", ".join(f"sig_{b * rows + r}" for r in range(rows))
+            if self.hash_fn == "xxhash64":
+                # native multi-arg hash: no string concat materialized at all
+                return f"cast(xxhash64({cols}) AS string)"
+            return f"md5(concat_ws('|', {cols}))"
+
+        structs = ", ".join(
+            f"struct({b} AS band_id, {key(b)} AS band_hash)" for b in range(self.bands)
+        )
+        return f"array({structs})"
+
+
+@dataclass(frozen=True)
+class MinHashIndex:
+    """A near-dup index: ``sets`` (id, shingles array; one row per
+    document, the :func:`shingle_sets` rows), ``bands`` (id, band_id,
+    band_hash) and the spec both were built with. Only
+    :func:`minhash_index` and :func:`read_minhash_index` produce one. The
+    frames are caller-managed storage: no operator persists or
+    unpersists them, so pin a derived index with
+    :func:`~dbt_ci_demo_spark.session.pinned` when more than one action
+    reads it."""
+
+    sets: DataFrame
+    bands: DataFrame
+    spec: MinHashSpec
+
+
 def minhash_signatures(
-    sets: DataFrame, id_col: str, n_hashes: int = 32, hash_fn: str = "md5"
+    sets: DataFrame, id_col: str, spec: MinHashSpec = MinHashSpec()
 ) -> DataFrame:
     """MinHash signature per document from its :func:`shingle_sets` row:
     ONE 32-bit hash per shingle (:func:`_hash32`), then n_hashes affine
@@ -161,8 +223,7 @@ def minhash_signatures(
     # transforms, it is not inlined into them, so each shingle is hashed
     # exactly once.
     hashed = sets.select(
-        F.col(id_col),
-        F.transform("shingles", lambda s: _hash32(s, hash_fn)).alias("__h"),
+        F.col(id_col), F.transform("shingles", _hash32(spec.hash_fn)).alias("__h")
     )
     # SQL strings with integer constants only: built as Column trees, the
     # signature and band plans took ~3.5k py4j round trips, as strings ~280
@@ -174,58 +235,37 @@ def minhash_signatures(
                 f"array_min(transform(__h, h -> ({a} * h + {b}) % {_MINHASH_PRIME}))"
                 f" AS sig_{i}"
             )
-            for i, (a, b) in enumerate(_affine_params(n_hashes))
+            for i, (a, b) in enumerate(_affine_params(spec.n_hashes))
         ],
     )
 
 
-def banded_buckets(
-    signatures: DataFrame, id_col: str, n_hashes: int = 32, bands: int = 8,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """(id, band_id, band_hash) rows: the signature split into ``bands``
-    bands of ``n_hashes // bands`` rows, each band hashed to a bucket key.
-    This is the precomputable, storable artifact of LSH — a production
-    corpus keeps its band table materialized and new batches join against
-    it (see :func:`minhash_near_duplicates_against`).
-
-    ``bands`` must divide ``n_hashes`` exactly: a remainder would
-    silently drop the trailing signature rows from every band key,
-    weakening LSH recall with no visible symptom (the no-silent-caps
-    discipline; r11 review)."""
-    _check_hash_fn(hash_fn)
-    if bands < 1 or n_hashes % bands != 0:
-        raise ValueError(
-            f"bands={bands} must be >= 1 and divide n_hashes={n_hashes} "
-            "exactly — a remainder silently drops trailing signature rows "
-            "from every band"
-        )
-    rows = n_hashes // bands
-
-    def band_hash(b: int) -> str:
-        cols = ", ".join(f"sig_{b * rows + r}" for r in range(rows))
-        if hash_fn == "xxhash64":
-            # Native multi-arg hash: no string concat materialized at all.
-            return f"cast(xxhash64({cols}) AS string)"
-        return f"md5(concat_ws('|', {cols}))"
-
-    # one SQL string for the whole band array, as in minhash_signatures
-    band_array = ", ".join(
-        f"struct({b} AS band_id, {band_hash(b)} AS band_hash)" for b in range(bands)
-    )
-    return signatures.select(
-        F.col(id_col), F.explode(F.expr(f"array({band_array})")).alias("b")
+def minhash_index(
+    df: DataFrame, text_col: str, id_col: str, spec: MinHashSpec = MinHashSpec()
+) -> MinHashIndex:
+    """The near-dup index of ``df``: its :func:`shingle_sets` and their
+    band table, the signature split into ``spec.bands`` bands, each
+    hashed to a bucket key. Both parts are per-document and lazy; the
+    band table is the precomputable, storable artifact of LSH — a
+    production corpus keeps it materialized (:func:`write_minhash_index`)
+    and new batches join against it
+    (:func:`minhash_near_duplicates_against`). Both parts derive from the
+    sets, so pin ``sets`` when both are computed."""
+    sets = shingle_sets(df, text_col, id_col, spec.k)
+    bands = minhash_signatures(sets, id_col, spec).select(
+        F.col(id_col), F.explode(F.expr(spec.band_sql)).alias("b")
     ).select(id_col, "b.band_id", "b.band_hash")
+    return MinHashIndex(sets, bands, spec)
 
 
 def lsh_pairs_from_buckets(banded: DataFrame, id_col: str) -> DataFrame:
-    """The band-bucket self-join of :func:`lsh_candidate_pairs`, factored
-    over an already-built (id, band_id, band_hash) table so callers that
-    hold the band table (a pin, or the stored index artifact) derive it
-    ONCE: the self-join references its input from both sides, and the
-    two subtrees do not share execution (one side plans as a
+    """LSH banding: document pairs sharing any (band_id, band_hash)
+    bucket, as a self-join of an already-built band table (an index's
+    ``bands``). The self-join references its input from both sides, and
+    the two subtrees do not share execution (one side plans as a
     BroadcastExchange — there is no exchange to reuse), so an un-pinned
-    input re-runs the whole shingle→signature→band derivation per side."""
+    input re-runs the whole shingle→signature→band derivation per side.
+    Bucket sizes are the scale knob, not corpus size²."""
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -240,25 +280,6 @@ def lsh_pairs_from_buckets(banded: DataFrame, id_col: str) -> DataFrame:
         )
         .distinct()
     )
-
-
-def _signed_bands(
-    sets: DataFrame, id_col: str, n_hashes: int, bands: int, hash_fn: str
-) -> DataFrame:
-    return banded_buckets(
-        minhash_signatures(sets, id_col, n_hashes, hash_fn), id_col, n_hashes, bands, hash_fn
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str, n_hashes: int = 32, bands: int = 8,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """LSH banding: document pairs sharing any (band_id, band_hash)
-    bucket. The self-join shuffles on the band hash — bucket sizes are
-    the scale knob, not corpus size²."""
-    banded = banded_buckets(signatures, id_col, n_hashes, bands, hash_fn)
-    return lsh_pairs_from_buckets(banded, id_col)
 
 
 def set_jaccard_scores(sets: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
@@ -288,62 +309,45 @@ def minhash_near_duplicates(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k: int = 3,
-    n_hashes: int = 32,
-    bands: int = 8,
+    spec: MinHashSpec = MinHashSpec(),
     threshold: float = 0.7,
-    hash_fn: str = "md5",
-    materialize: bool = True,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: shingle sets → signatures (a
     row projection) → banded candidates → exact-Jaccard verification
-    (array_intersect) ≥ threshold.
+    (array_intersect) ≥ threshold. The verified pairs do not depend on
+    ``spec.hash_fn`` (Jaccard scoring is hash-agnostic); only candidate
+    recall can.
 
-    ``hash_fn="md5"`` (default) is bit-reproducible across engines — the
-    oracle-gate path. ``hash_fn="xxhash64"`` is the production path for
-    Spark-only corpora: same verified output semantics (Jaccard scoring is
-    hash-agnostic), JVM-native hashing at the dominant (per-shingle) stage.
-
-    With ``materialize=True`` (default) the result — the near-dup pair
-    list — is eagerly computed and reliable-checkpointed (lineage
-    truncated to the checkpoint files). Two frames are pinned for the
-    call: the sets (read by the signatures and by both verifier joins)
-    and the band table (read from both sides of the bucket self-join).
-    The candidate pairs are not: the verifier reads them once, and a
-    cached copy keeps the distinct's un-coalesced shuffle layout, which
-    the checkpointed result inherits and every consumer then pays for
-    (measured slower end to end with ``duplicate_clusters`` at 550, 5.5k
-    and 22k documents). Both pins are unpersisted before returning: no
-    invocation leaves anything pinned in executor storage.
-    ``materialize=False`` returns the lazy plan WITHOUT any persist —
-    composable, nothing to leak, at the cost of recomputing the shingle
-    sets per branch."""
-    sets = shingle_sets(df, text_col, id_col, k)
-    if not materialize:
-        sig = minhash_signatures(sets, id_col, n_hashes, hash_fn)
-        cand = lsh_candidate_pairs(sig, id_col, n_hashes, bands, hash_fn)
-        return set_jaccard_scores(sets, id_col, cand).filter(F.col("jaccard") >= threshold)
-    banded = _signed_bands(sets, id_col, n_hashes, bands, hash_fn)
-    cand = lsh_pairs_from_buckets(banded, id_col)
-    out = set_jaccard_scores(sets, id_col, cand).filter(F.col("jaccard") >= threshold)
-    with pinned(sets, banded):
+    Eager: the near-dup pair list is computed and reliable-checkpointed
+    (lineage truncated to the checkpoint files). Two frames are pinned
+    for the call: the sets (read by the signatures and by both verifier
+    joins) and the band table (read from both sides of the bucket
+    self-join). The candidate pairs are not: the verifier reads them
+    once, and a cached copy keeps the distinct's un-coalesced shuffle
+    layout, which the checkpointed result inherits and every consumer
+    then pays for (measured slower end to end with
+    ``duplicate_clusters`` at 550, 5.5k and 22k documents). Both pins are
+    unpersisted before returning: no invocation leaves anything pinned
+    in executor storage."""
+    index = minhash_index(df, text_col, id_col, spec)
+    cand = lsh_pairs_from_buckets(index.bands, id_col)
+    out = set_jaccard_scores(index.sets, id_col, cand).filter(F.col("jaccard") >= threshold)
+    with pinned(index.sets, index.bands):
         return checkpoint(out)
 
 
-def index_artifacts(
-    sets: DataFrame, id_col: str, n_hashes: int = 32, bands: int = 8,
-    hash_fn: str = "md5",
-) -> tuple[DataFrame, DataFrame]:
-    """The stored index's (sets, bands) artifacts: the :func:`shingle_sets`
-    rows themselves and their band table (:func:`banded_buckets` of the
-    signatures). Both are per-document; pin ``sets`` when both are
-    computed. An index must be built with the same (k, n_hashes, bands,
-    hash_fn) as the admission that reads it: band keys are meaningless
-    across differing parameters."""
-    return sets, _signed_bands(sets, id_col, n_hashes, bands, hash_fn)
-
-
 _INDEX_PARTS = ("sets", "bands")
+
+
+def settle_all(thunks: list[Callable[[], object]]) -> list:
+    """Run independent thunks (Spark actions, FS metadata calls) on a
+    small thread pool, let every one settle, then return their results
+    in order or raise the first error — a failure must not leave
+    siblings racing the caller's cleanup or retry. Overlapped, a later
+    job back-fills the executors a job's tail frees."""
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futures = [pool.submit(thunk) for thunk in thunks]
+    return [f.result() for f in futures]
 
 
 def _index_fs(spark: SparkSession, base_path: str):
@@ -356,95 +360,76 @@ def _index_fs(spark: SparkSession, base_path: str):
     return fs, path_cls
 
 
+def _recorded_spec(fs, spec_dir) -> MinHashSpec:
+    """The spec the index's last overwrite recorded as the empty file
+    ``_spec/<k>-<n_hashes>-<bands>-<hash_fn>``."""
+    found = fs.listStatus(spec_dir) if fs.exists(spec_dir) else []
+    names = [st.getPath().getName() for st in found]
+    names = [n for n in names if not n.startswith(".")]  # Hadoop's .crc files
+    if len(names) != 1:
+        raise ValueError(f"{spec_dir}: expected one recorded MinHash spec, found {names}")
+    k, n_hashes, bands, hash_fn = names[0].split("-")
+    return MinHashSpec(int(k), int(n_hashes), int(bands), hash_fn)
+
+
 def write_minhash_index(
-    df: DataFrame | None,
-    text_col: str,
-    id_col: str,
+    index: MinHashIndex,
     base_path: str,
     mode: str = "overwrite",
-    k: int = 3,
-    n_hashes: int = 32,
-    bands: int = 8,
-    hash_fn: str = "md5",
     batch_id: str | None = None,
-    artifacts: tuple[DataFrame, DataFrame] | None = None,
 ) -> None:
     """Write (``mode="overwrite"``) or REFRESH (``mode="append"``) the
-    stored near-dup index at ``base_path`` — two parquet tables, ``sets/``
-    (id, shingles array: one row per document) and ``bands/``
-    (id, band_id, band_hash) — the :func:`index_artifacts` of the
-    shingle sets of ``df``.
+    stored near-dup index at ``base_path``: two parquet tables, ``sets/``
+    (id, shingles array) and ``bands/`` (id, band_id, band_hash), and the
+    index's spec, recorded as the empty file
+    ``_spec/<k>-<n_hashes>-<bands>-<hash_fn>`` (no Spark job).
 
     The append mode is the daily-admission refresh: after a batch is
     admitted via :func:`minhash_near_duplicates_against`, appending the
-    batch's own per-doc artifacts makes the stored index serve
-    corpus ∪ batch for the NEXT admission. The refresh is EXACT, not
-    approximate, because neither artifact aggregates across documents —
-    a sets row is one document's distinct shingles and band hashes are
-    per-doc — so
-    index(corpus ∪ batch) = index(corpus) ∪ index(batch) row-for-row,
-    and a refresh costs O(|batch|) compute + writes while the corpus
-    partitions are never read or rewritten. (This is why the index
-    never needs a rebuild for pure appends; deletions/edits still
-    require one.) Parameters must match every write to the same
-    ``base_path`` — band keys are meaningless across differing
-    (k, n_hashes, bands, hash_fn).
+    batch's own index makes the stored index serve corpus ∪ batch for
+    the NEXT admission. The refresh is EXACT because neither part
+    aggregates across documents, so index(corpus ∪ batch) =
+    index(corpus) ∪ index(batch) row for row, and it costs O(|batch|)
+    compute + writes while the corpus partitions are never read or
+    rewritten; deletions and edits still need an overwrite. An append
+    whose spec differs from the recorded one (or finds none) raises
+    ValueError before it stages or scrubs anything: an md5 index must
+    not take xxhash64 bands.
 
-    Failure / retry contract (ADVICE r12): an append never writes into
-    the live artifact dirs directly. Both artifacts are staged to
-    ``_staging-<token>/`` under ``base_path``, then PROMOTED by per-file
-    rename (cheap metadata ops; each promoted file carries the batch
-    token as a name prefix), and — when ``batch_id`` is supplied — a
-    commit marker lands at ``_appends/<token>`` last. With a
-    ``batch_id``, the append is idempotent and retry-exact: a repeated
-    call whose marker exists is a no-op, and a retry after a mid-promote
-    failure first scrubs the exact files its token promoted before
-    re-staging, so no duplicate per-doc rows can survive (a duplicate
-    sets row would otherwise multiply pairs in the admission verifier's
-    id joins). WITHOUT a ``batch_id`` a failed append cannot be
-    retried exactly — rebuild with ``mode="overwrite"`` (which is itself
-    retry-idempotent: it replaces every artifact, INCLUDING the append
-    protocol's byproducts — commit markers under ``_appends/`` and any
-    stale ``_staging-*`` debris are scrubbed before the rewrite, so a
-    batch_id used before a rebuild can be replayed against the rebuilt
-    index and is not silently swallowed by a stale marker; ADVICE r13).
-    The marker is O(1) metadata; no corpus partition is ever read for
-    the guard.
-
-    Concurrency contract: appends with DIFFERENT batch_ids may run
-    concurrently (disjoint staging dirs, disjoint name prefixes,
-    disjoint markers), but the protocol is not a snapshot-isolated
-    commit — a reader that lists the live dirs DURING a promote can see
-    a batch's artifacts partially (e.g. its bands but not yet its
-    sets), which silently drops that batch's pairs from an admission
-    run. Readers must therefore gate on the batch's commit marker
-    (``_appends/<sha256(batch_id)[:16]>``) or serialize reads behind
-    the append — the standard single-writer, read-after-commit contract
-    for rename-promoted parquet artifacts. Two concurrent calls with
-    the SAME batch_id are not supported (a retry must wait for the
-    failed attempt to die); the rename-failure raise below turns the
-    worst outcome of that race into a loud error instead of lost rows.
-
-    ``artifacts`` (r15): precomputed (sets, bands) frames —
-    :func:`index_artifacts` output over shingle sets the caller
-    typically PERSISTED — written as-is instead of re-deriving them from
-    ``df`` (which may then be ``None``). Caller-managed storage (never persisted or
-    unpersisted here), same contract as ``corpus_index`` on the admission
-    path. This is how a flow that admits a batch and then appends it (or
-    rebuilds twice, as the crash-retry witness does) derives the shingle
-    sets and signatures ONCE instead of once per call — the protocol
-    (staging, scrub, promote, marker) is identical."""
+    An append stages both parts under ``_staging-<token>/``, promotes
+    them into the live dirs by per-file rename under a batch-token name
+    prefix and, with a ``batch_id``, commits the marker
+    ``_appends/<token>`` last (token = ``sha256(batch_id)[:16]``): a
+    committed repeat is a no-op and a retry after a failed promote is
+    exact. Without a ``batch_id`` a failed append cannot be retried
+    exactly; rebuild with an overwrite, which first scrubs every commit
+    marker, the recorded spec and all staging debris. Readers gate on
+    the commit marker or serialize behind the append. The failure cases
+    and the concurrency contract: SCALE.md "Stored-index write/refresh
+    protocol"."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
-    if artifacts is not None and len(artifacts) != len(_INDEX_PARTS):
-        raise ValueError(
-            f"artifacts must be (sets, bands), got {len(artifacts)}"
-        )
-    spark = (df if df is not None else artifacts[0]).sparkSession
-    staging: str | None = None
-    write_mode = "overwrite"
-    if mode == "append":
-        fs, path_cls = _index_fs(spark, base_path)
+    fs, path_cls = _index_fs(index.sets.sparkSession, base_path)
+
+    def path(*parts: str):
+        return path_cls(os.path.join(base_path, *parts))
+
+    if mode == "overwrite":
+        # Every protocol byproduct (markers, spec, staging) has a "_" name.
+        # Scrub them BEFORE the rewrite: a crash after it leaves an index
+        # that needs another overwrite, never a stale marker or spec.
+        if fs.exists(path()):
+            for st in fs.listStatus(path()):
+                if st.getPath().getName().startswith("_"):
+                    fs.delete(st.getPath(), True)
+        out_base = base_path
+    else:
+        recorded = _recorded_spec(fs, path("_spec"))
+        if recorded != index.spec:
+            raise ValueError(
+                f"cannot append a {index.spec} index to {base_path}, built with "
+                f"{recorded}: band keys do not match across specs"
+            )
         # File-name-safe token: hash the caller's batch_id (any string)
         # so it can never escape the marker/prefix namespace.
         token = (
@@ -452,200 +437,107 @@ def write_minhash_index(
             if batch_id is not None
             else uuid.uuid4().hex[:16]
         )
-        marker = path_cls(os.path.join(base_path, "_appends", token))
+        marker = path("_appends", token)
         if batch_id is not None and fs.exists(marker):
             return  # this batch already committed — idempotent repeat
         prefix = f"b-{token}-"
-        # Scrub any files a prior PARTIAL promote of this token left in
-        # the live dirs (exact: promoted names carry the prefix).
+        # Scrub what a prior PARTIAL promote of this token left in the
+        # live dirs (exact: promoted names carry the prefix; the recorded
+        # spec means an overwrite wrote both dirs), then this token's own
+        # staging debris.
         for part in _INDEX_PARTS:
-            live = path_cls(os.path.join(base_path, part))
-            if fs.exists(live):
-                for st in fs.listStatus(live):
-                    if st.getPath().getName().startswith(prefix):
-                        fs.delete(st.getPath(), False)
-        staging = os.path.join(base_path, f"_staging-{token}")
-        # Scrub this token's own staging debris from a crashed prior
-        # attempt before re-staging (the per-part parquet overwrite
-        # would clear the part dirs anyway; this also removes files a
-        # partial promote already renamed OUT of, and stray leftovers
-        # the part writes would never touch). ADVICE r13.
-        fs.delete(path_cls(staging), True)
-    else:
-        # overwrite == full rebuild: every prior artifact AND every
-        # append-protocol byproduct is invalid. Scrub commit markers
-        # (a replayed append with a previously-used batch_id must NOT
-        # no-op against the rebuilt index — ADVICE r13 medium) and all
-        # stale _staging-* debris (nameless failed appends leak them
-        # forever otherwise — ADVICE r13 low) BEFORE the rewrite:
-        # overwrite is retry-idempotent, so a crash after this scrub
-        # just means another overwrite, whereas scrubbing AFTER the
-        # writes would reopen the stale-marker window on a crash
-        # between the writes and the cleanup.
-        fs, path_cls = _index_fs(spark, base_path)
-        base = path_cls(base_path)
-        if fs.exists(base):
-            fs.delete(path_cls(os.path.join(base_path, "_appends")), True)
-            for st in fs.listStatus(base):
-                if st.getPath().getName().startswith("_staging-"):
-                    fs.delete(st.getPath(), True)
-    # Both artifacts derive from the shingle sets, whose tokenize+distinct
-    # is the dominant stage — written naively, each artifact's write
-    # re-derives it. Pin the sets across the two writes instead; nothing
-    # outlives the call.
-    out_base = staging if staging is not None else base_path
-    own: list[DataFrame] = []
-    if artifacts is None:
-        own.append(shingle_sets(df, text_col, id_col, k))
-        artifacts = index_artifacts(own[0], id_col, n_hashes, bands, hash_fn)
+            for st in fs.listStatus(path(part)):
+                if st.getPath().getName().startswith(prefix):
+                    fs.delete(st.getPath(), False)
+        out_base = os.path.join(base_path, f"_staging-{token}")
+        fs.delete(path_cls(out_base), True)
+    # The two part writes are independent jobs and overlap (sf0.1:
+    # 2.0-2.5 s sequential → 1.1-1.35 s per corpus build); a pinned
+    # ``sets`` is computed once for both.
+    settle_all([
+        lambda p=part, f=frame: f.write.mode("overwrite").parquet(os.path.join(out_base, p))
+        for part, frame in zip(_INDEX_PARTS, (index.sets, index.bands))
+    ])
+    if mode == "overwrite":
+        s = index.spec
+        fs.create(path("_spec", f"{s.k}-{s.n_hashes}-{s.bands}-{s.hash_fn}"), True).close()
+        return
+    # Promote: move each staged data file into its live dir under the
+    # token prefix (pure renames to distinct names, so they overlap too),
+    # then commit the marker.
+    renames = []
+    for part in _INDEX_PARTS:
+        for st in fs.listStatus(path_cls(os.path.join(out_base, part))):
+            name = st.getPath().getName()
+            if not name.startswith(("_", ".")):  # _SUCCESS / hidden
+                renames.append((st.getPath(), path(part, prefix + name)))
 
-    # The artifact writes are INDEPENDENT actions, so they run
-    # CONCURRENTLY from a small thread pool (guide §2.6: overlap
-    # independent jobs — later jobs back-fill executors freed by the
-    # current job's tail). The sets cache dedups the shared compute:
-    # BlockInfoManager gives each cached partition a single writer, so
-    # whichever job reaches a block first computes it and the others
-    # read it. Measured at sf0.1 (three-part index): 2.0-2.5 s
-    # sequential → 1.1-1.35 s concurrent per corpus build.
-    def _write(part: str, frame: DataFrame) -> None:
-        frame.write.mode(write_mode).parquet(os.path.join(out_base, part))
+    def promote(src, dst) -> None:
+        # Hadoop rename reports failure by returning False, not raising:
+        # raise, so the marker is never committed over a partial promote.
+        if not fs.rename(src, dst):
+            raise IOError(
+                f"minhash index promote failed: rename {src} -> {dst} returned "
+                "false; the commit marker was NOT written — retry with the "
+                "same batch_id to repair"
+            )
 
-    with pinned(*own), ThreadPoolExecutor(max_workers=len(_INDEX_PARTS)) as pool:
-        futures = [
-            pool.submit(_write, part, frame)
-            for part, frame in zip(_INDEX_PARTS, artifacts)
-        ]
-        # Let every write settle before raising, so a failure can't
-        # leave sibling writes racing the caller's cleanup/retry.
-        errs = [f.exception() for f in futures]
-    for err in errs:
-        if err is not None:
-            raise err
-    if staging is not None:
-        # Promote: move each staged data file into its live dir under the
-        # token prefix (pure renames — a failure here is repaired by the
-        # scrub on retry with the same batch_id), then commit the marker.
-        # The renames target DISTINCT destination names, so they are
-        # independent metadata ops — run them from a small pool instead
-        # of one JVM round-trip at a time (guide §2.6 applied to FS
-        # metadata; a staged artifact can hold dozens of part files and
-        # the per-call latency was the promote's wall time). Every future
-        # settles before any raise, and a False/failed rename still keeps
-        # the marker unwritten.
-        renames: list[tuple] = []
-        for part in _INDEX_PARTS:
-            src_dir = path_cls(os.path.join(staging, part))
-            dst_dir = path_cls(os.path.join(base_path, part))
-            fs.mkdirs(dst_dir)
-            for st in fs.listStatus(src_dir):
-                name = st.getPath().getName()
-                if name.startswith("_") or name.startswith("."):
-                    continue  # _SUCCESS / hidden
-                renames.append((st.getPath(), path_cls(dst_dir, prefix + name)))
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            futures = [
-                pool.submit(fs.rename, src, dst) for src, dst in renames
-            ]
-            outcomes = [
-                (f.exception() or (None if f.result() else False))
-                for f in futures
-            ]
-        for (src, dst), outcome in zip(renames, outcomes):
-            # Hadoop rename reports failure by returning False, not
-            # raising — an unchecked False here would leave the file
-            # in staging, then commit the marker and delete staging,
-            # silently losing rows with the marker blocking any
-            # retry (ADVICE r13). Raise so the marker is never
-            # committed over a partial promote.
-            if isinstance(outcome, BaseException):
-                raise outcome
-            if outcome is False:
-                raise IOError(
-                    f"minhash index promote failed: rename {src} -> "
-                    f"{dst} returned false; the commit marker was NOT "
-                    "written — retry with the same batch_id to repair"
-                )
-        if batch_id is not None:
-            fs.mkdirs(path_cls(os.path.join(base_path, "_appends")))
-            fs.create(marker, True).close()
-        fs.delete(path_cls(staging), True)
+    settle_all([lambda src=src, dst=dst: promote(src, dst) for src, dst in renames])
+    if batch_id is not None:
+        fs.create(marker, True).close()
+    fs.delete(path_cls(out_base), True)
 
 
-def read_minhash_index(
-    spark: SparkSession, base_path: str
-) -> tuple[DataFrame, DataFrame]:
+def read_minhash_index(spark: SparkSession, base_path: str) -> MinHashIndex:
     """Read back the stored index written by :func:`write_minhash_index`,
-    in the (sets, bands) order :func:`minhash_near_duplicates_against`
-    expects as ``corpus_index``."""
-    sets, bd = (spark.read.parquet(os.path.join(base_path, p)) for p in _INDEX_PARTS)
-    return sets, bd
+    with the spec its last overwrite recorded."""
+    fs, path_cls = _index_fs(spark, base_path)
+    spec = _recorded_spec(fs, path_cls(os.path.join(base_path, "_spec")))
+    sets, bands = (spark.read.parquet(os.path.join(base_path, p)) for p in _INDEX_PARTS)
+    return MinHashIndex(sets, bands, spec)
 
 
 def minhash_near_duplicates_against(
-    corpus: DataFrame,
-    batch: DataFrame,
-    text_col: str,
+    corpus: MinHashIndex,
+    batch: MinHashIndex,
     id_col: str,
-    k: int = 3,
-    n_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.7,
-    hash_fn: str = "md5",
-    corpus_index: tuple[DataFrame, DataFrame] | None = None,
-    batch_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Incremental near-dup detection: MinHash candidates between a NEW
     batch and an EXISTING corpus only — never corpus×corpus. Returns
     (id_a = corpus doc, id_b = batch doc, jaccard ≥ threshold).
 
     This is the production shape of continuous corpus curation: the
-    corpus's band table (:func:`banded_buckets`) is a precomputable,
-    storable artifact, so admitting a new batch costs
-    shingle+sign+band the BATCH (delta-sized work) plus one equi-join of
-    batch bands against corpus bands — a bucketed join whose cost scales
-    with bucket collision counts, not |corpus|×|batch|. The full
-    self-join pipeline (:func:`minhash_near_duplicates`) is the
-    first-build path; this is every day after. Document ids must be
-    unique across the two sides (standard for global doc ids). Every
-    path verifies with :func:`set_jaccard_scores` over the union of both
-    sides' shingle sets.
+    corpus's band table is a precomputable, storable artifact, so
+    admitting a new batch costs shingle+sign+band the BATCH (delta-sized
+    work) plus one equi-join of batch bands against corpus bands — a
+    bucketed join whose cost scales with bucket collision counts, not
+    |corpus|×|batch|. The self-join pipeline
+    (:func:`minhash_near_duplicates`) is the first-build path; this is
+    every day after. Document ids must be unique across the two sides
+    (standard for global doc ids), and both indexes must share one spec.
+    Every path verifies with :func:`set_jaccard_scores` over the union of
+    both sides' shingle sets. Eager: the pair result is
+    reliable-checkpointed.
 
-    Eager by design (same contract as :func:`minhash_near_duplicates`
-    with ``materialize=True``): the pair result is reliable-checkpointed
-    and the internally-persisted caches are unpersisted before
-    returning, so repeated daily admissions leave nothing pinned in
-    executor storage.
-
-    ``corpus_index`` — the corpus's (sets, bands) :func:`index_artifacts`,
-    typically read back by :func:`read_minhash_index` — skips ALL
-    corpus-side computation: the corpus scan, shingling, signatures and
-    banding never run, which is the true production admission cost
-    (batch-sized work + index reads). The batch bands are broadcast into
-    the band join, and the stored sets are semi-joined down to the
-    candidate ids and pinned once — the index path's one pin — so no
-    stage aggregates or shuffles the full corpus. The frames are used
-    as-is (caller-managed storage, not persisted here) and must have been
-    built with the same (k, n_hashes, bands, hash_fn).
-
-    ``batch_index`` (r15) — the batch's OWN (sets, bands), precomputed by
-    the caller (typically :func:`index_artifacts` over pinned shingle
-    sets, which a following :func:`write_minhash_index` append also
-    writes — the refresh-cycle flow derives them once instead of once
-    per call). Caller-managed storage, same contract as ``corpus_index``.
-    """
-    own: list[DataFrame] = []
-
-    def own_index(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
-        own.append(shingle_sets(frame, text_col, id_col, k))
-        return index_artifacts(own[-1], id_col, n_hashes, bands, hash_fn)
-
-    sets_c, bands_c = corpus_index or own_index(corpus)
-    sets_b, bands_b = batch_index or own_index(batch)
-    if corpus_index is not None:
-        # unhinted, the planner may shuffle the stored corpus bands
-        bands_b = F.broadcast(bands_b)
+    The plan follows the corpus index. A stored one (its sets a bare
+    scan: :func:`read_minhash_index`, or a checkpoint) runs no
+    corpus-side computation at all: the batch bands are
+    broadcast into the band join, and the stored sets are semi-joined
+    down to the candidate ids and pinned for the call — its one pin — so
+    no stage aggregates or shuffles the full corpus. An in-memory corpus
+    is verified unrestricted, over the caller's pins (SCALE.md
+    "Incremental admission")."""
+    if corpus.spec != batch.spec:
+        raise ValueError(
+            f"corpus index {corpus.spec} and batch index {batch.spec} differ: "
+            "band keys do not match across specs"
+        )
+    stored = corpus.sets._jdf.queryExecution().analyzed().children().isEmpty()
+    # unhinted, the planner may shuffle the stored corpus bands
+    bands_b = F.broadcast(batch.bands) if stored else batch.bands
     cand = (
-        bands_c.alias("l")
+        corpus.bands.alias("l")
         .join(
             bands_b.alias("r"),
             (F.col("l.band_id") == F.col("r.band_id"))
@@ -656,19 +548,18 @@ def minhash_near_duplicates_against(
         )
         .distinct()
     )
-    sets = sets_c.unionByName(sets_b)
-    if corpus_index is not None:
+    sets = corpus.sets.unionByName(batch.sets)
+    if stored:
         # The verifier reads the sets twice (once per pair side);
-        # restricted to the candidate ids and pinned, the stored
-        # sets are scanned once and the pin is candidate-sized.
+        # restricted to the candidate ids and pinned, the stored sets are
+        # scanned once and the pin is candidate-sized.
         ids = (
             cand.select(F.col("id_a").alias(id_col))
             .unionByName(cand.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
         sets = sets.join(F.broadcast(ids), on=id_col, how="left_semi")
-        own.append(sets)
-    with pinned(*own):
+    with pinned(sets) if stored else nullcontext():
         out = set_jaccard_scores(sets, id_col, cand)
         return checkpoint(out.filter(F.col("jaccard") >= threshold))
 
@@ -807,18 +698,8 @@ def connected_components_star(
         F.col(a_col).alias("id")
     )
 
-    # Each star step needs, per node u, the minimum of its neighborhood.
-    # SKEW DISCIPLINE (r06, VERDICT r05 finding #1): this was a window min
-    # over partitionBy(u) — one shuffle, but an unbounded window has no
-    # map-side partial aggregation, so a supernode (or, late in
-    # convergence, the component minimum, whose star edge set approaches
-    # component size) funnels its ENTIRE neighborhood into one task that
-    # AQE cannot split. Instead: groupBy(u).agg(min) — partial-aggregated
-    # on the map side, so the exchange carries ~one row per (input
-    # partition, u), never a neighborhood — joined back onto the edge
-    # list. The join on u IS skew-splittable (AQE skew-join duplicates
-    # the 1-row-per-u min side), so a degree-10^8 node costs a split
-    # sort-merge join, not a single straggler task.
+    # Per-node neighborhood minimum as a groupBy joined back, not a window:
+    # skew-safe (SCALE.md "Duplicate clustering").
 
     def large_star(e: DataFrame) -> DataFrame:
         sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
@@ -860,24 +741,8 @@ def connected_components_star(
             .distinct()
         )
 
-    # Fixpoint detection (r15, VERDICT r14 #2): a round's OUTPUT is a
-    # fixpoint of the alternation iff it is already a STAR FOREST — with
-    # every edge oriented a < b by construction, that is exactly "every
-    # b occurs once AND no value occurs as both a root (a) and a leaf
-    # (b)" (each node then has at most one parent and parents are never
-    # leaves). Sufficiency is mechanical: on a star forest large_star
-    # maps every root u to m = min(N(u) ∪ u) = u and emits its own
-    # edges, leaves have no larger neighbors, and small_star re-emits
-    # each (leaf → root) unchanged. Necessity is the Kiveris et al.
-    # convergence theorem (fixpoints of the alternation are star forests
-    # — the assumption the label derivation below always made). Checking
-    # the CURRENT round's output therefore stops one full rewrite round
-    # earlier than the previous |new| == |old| ∧ anti-join-empty test,
-    # which had to run an identity round just to observe equality — on
-    # the 64-chain bench fixture that is one whole large+small star pass
-    # (3 shuffles + checkpoint) of ~13 scheduled jobs, for the price of
-    # one 2-stage aggregate per round in place of the per-round count
-    # and the final anti-join.
+    # Fixpoint: the round's output is a star forest (why that is exact:
+    # SCALE.md "Duplicate clustering").
     for rounds in range(1, max_iter + 1):
         new_edges = checkpoint(small_star(large_star(edges)))
         stacked = new_edges.select(
@@ -967,6 +832,7 @@ def simhash32(
     # for xxhash64 the same extraction is a fixed bit permutation,
     # equally valid as a simhash bit assignment. Empty-token documents
     # produce no signature row on either plan.
+    hash32 = _hash32(hash_fn)
     if hash_fn == "xxhash64":
         tokens = (
             df.select(
@@ -976,7 +842,7 @@ def simhash32(
                 ).alias("tok"),
             )
             .filter(F.col("tok") != "")
-            .select(F.col(id_col), _hash32(F.col("tok"), hash_fn).alias("v"))
+            .select(F.col(id_col), hash32(F.col("tok")).alias("v"))
         )
         bit_sums = tokens.groupBy(id_col).agg(
             F.count(F.lit(1)).alias("n_tok"),
@@ -997,7 +863,7 @@ def simhash32(
         )
         hashed = df.select(
             F.col(id_col),
-            F.transform(toks, lambda t: _hash32(t, hash_fn)).alias("__hv"),
+            F.transform(toks, hash32).alias("__hv"),
         ).filter(F.size("__hv") > 0)
         n_tok = F.size("__hv")
 

@@ -274,7 +274,7 @@ def build_ivf_index(
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """The STORABLE IVF serving artifacts (the similarity twin of
-    dedup.index_artifacts): (clustered corpus, centroid table).
+    dedup.minhash_index): (clustered corpus, centroid table).
     Write the corpus ``partitionBy(cluster_col)`` and the (tiny)
     centroid table as plain parquet; serving then reads both back and
     passes centroids to :func:`ivf_topk` via ``centroids=`` — probe-time

@@ -22,7 +22,6 @@ import os
 import shutil
 import tempfile
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -347,9 +346,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH near-dup — oracle generated from the same parameters
 # ---------------------------------------------------------------------------
 
-_MINHASH_N = 32
-_MINHASH_BANDS = 8
-_MINHASH_K = 3
+_MINHASH = dd.MinHashSpec(k=3, n_hashes=32, bands=8)
 _MINHASH_THRESHOLD = 0.7
 
 
@@ -358,7 +355,7 @@ def _minhash_band_ctes() -> str:
     pipeline (identical md5-affine constants), as the CTE chain
     ``toks, shingles, sigs, bands`` over a preceding ``docs(doc_id, text)``
     CTE — used by every minhash oracle below."""
-    n, bands, k = _MINHASH_N, _MINHASH_BANDS, _MINHASH_K
+    n, bands, k = _MINHASH.n_hashes, _MINHASH.bands, _MINHASH.k
     rows = n // bands
     prime = dd._MINHASH_PRIME
     sig_cols = ",\n      ".join(
@@ -445,13 +442,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the identical md5-minhash banding, so Spark and
     DuckDB produce the same candidates AND the same verified pairs."""
     return dd.minhash_near_duplicates(
-        _docs_dup(spark, sf_dir),
-        "text",
-        "doc_id",
-        k=_MINHASH_K,
-        n_hashes=_MINHASH_N,
-        bands=_MINHASH_BANDS,
-        threshold=_MINHASH_THRESHOLD,
+        _docs_dup(spark, sf_dir), "text", "doc_id", _MINHASH, _MINHASH_THRESHOLD
     )
 
 
@@ -465,18 +456,14 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the identical pipeline with the cross-side candidate
     restriction."""
     d = _docs_dup(spark, sf_dir)
-    corpus = d.filter(F.col("doc_id") < 1000000)
-    batch = d.filter(F.col("doc_id") >= 1000000)
-    return dd.minhash_near_duplicates_against(
-        corpus,
-        batch,
-        "text",
-        "doc_id",
-        k=_MINHASH_K,
-        n_hashes=_MINHASH_N,
-        bands=_MINHASH_BANDS,
-        threshold=_MINHASH_THRESHOLD,
+    corpus, batch = (
+        dd.minhash_index(d.filter(side), "text", "doc_id", _MINHASH)
+        for side in (F.col("doc_id") < 1000000, F.col("doc_id") >= 1000000)
     )
+    with pinned(corpus.sets, batch.sets):
+        return dd.minhash_near_duplicates_against(
+            corpus, batch, "doc_id", _MINHASH_THRESHOLD
+        )
 
 
 _IDX_ROOT: str | None = None
@@ -506,18 +493,6 @@ def _materialize_sets(sets: DataFrame) -> None:
     back-fills executors while the corpus index build's write jobs run
     (guide §2.6)."""
     sets.write.format("noop").mode("overwrite").save()
-
-
-def _run_all_settled(*fns) -> None:
-    """Run independent Spark-action thunks concurrently; let every one
-    settle before raising (the write_minhash_index pool discipline — a
-    failure must not leave siblings racing the caller's cleanup)."""
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(fn) for fn in fns]
-        errs = [f.exception() for f in futures]
-    for err in errs:
-        if err is not None:
-            raise err
 
 
 def _refresh_oracle() -> str:
@@ -577,9 +552,9 @@ def _refresh_oracle() -> str:
 def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored near-dup index's full production loop as ONE row:
     build the corpus index to parquet (operators/dedup.write_minhash_index),
-    admit batch 1 against the READ-BACK index (no corpus-side compute:
-    corpus=None), REFRESH the index by appending batch 1's own per-doc
-    artifacts (mode="append" — exact because no index artifact aggregates
+    admit batch 1 against the READ-BACK index (no corpus-side compute),
+    REFRESH the index by appending batch 1's own per-doc artifacts
+    (mode="append" — exact because no index artifact aggregates
     across documents; O(|batch|) work, corpus partitions untouched), then
     admit batch 2 against the refreshed index. Batch 2 duplicates docs that
     exist in BOTH the original corpus and batch 1, so admission 2's pairs
@@ -608,49 +583,34 @@ def dedup_index_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(par)
     )
     base = _idx_path(sf_dir, nonce=uuid.uuid4().hex[:12])
-    kw = dict(k=_MINHASH_K, n_hashes=_MINHASH_N, bands=_MINHASH_BANDS)
-    # r15 (VERDICT r14 #1/#4): each batch's per-doc artifacts are needed
-    # TWICE — batch 1 by its admission AND the append that refreshes the
-    # index; batch 2 by its admission (and its derivation is independent
-    # of every protocol phase) — so derive them ONCE, pinned, and thread
-    # them through ``batch_index``/``artifacts``. The written ``sets/`` is
-    # the cached frame and keeps its partitioning (4 files per part at
-    # sf0.1 on 4 cores). The corpus index build and both batches'
-    # artifact materializations share no state, so they run CONCURRENTLY
-    # (guide §2.6: overlap independent jobs); the admissions/append stay
-    # strictly sequential — the protocol's read-after-commit contract.
-    art1, art2 = (
-        dd.index_artifacts(
-            dd.shingle_sets(b, "text", "doc_id", _MINHASH_K), "doc_id",
-            _MINHASH_N, _MINHASH_BANDS,
-        )
-        for b in (batch1, batch2)
+    # r15 (VERDICT r14 #1/#4): each batch's index is needed TWICE — batch
+    # 1 by its admission AND the append that refreshes the stored index;
+    # batch 2 by its admission (and its derivation is independent of
+    # every protocol phase) — so derive it ONCE, pinned. The written
+    # ``sets/`` is the cached frame and keeps its partitioning (4 files
+    # per part at sf0.1 on 4 cores). The corpus index build and both
+    # batches' set materializations share no state, so they run
+    # CONCURRENTLY (guide §2.6: overlap independent jobs); the
+    # admissions/append stay strictly sequential — the protocol's
+    # read-after-commit contract.
+    idxc, idx1, idx2 = (
+        dd.minhash_index(b, "text", "doc_id", _MINHASH) for b in (corpus, batch1, batch2)
     )
-    with pinned(art1[0], art2[0]):
-        _run_all_settled(
-            lambda: dd.write_minhash_index(
-                corpus, "text", "doc_id", base, mode="overwrite", **kw
-            ),
-            lambda: _materialize_sets(art1[0]),
-            lambda: _materialize_sets(art2[0]),
-        )
+    with pinned(idx1.sets, idx2.sets):
+        with pinned(idxc.sets):
+            dd.settle_all([
+                lambda: dd.write_minhash_index(idxc, base),
+                lambda: _materialize_sets(idx1.sets),
+                lambda: _materialize_sets(idx2.sets),
+            ])
         # Admission pairs are eagerly checkpointed by the operator, so pairs1
         # is materialized BEFORE the refresh mutates the parquet artifacts.
         pairs1 = dd.minhash_near_duplicates_against(
-            None, batch1, "text", "doc_id",
-            corpus_index=dd.read_minhash_index(spark, base),
-            batch_index=art1,
-            threshold=_MINHASH_THRESHOLD, **kw,
+            dd.read_minhash_index(spark, base), idx1, "doc_id", _MINHASH_THRESHOLD
         )
-        dd.write_minhash_index(
-            None, "text", "doc_id", base, mode="append", batch_id="batch1",
-            artifacts=art1, **kw,
-        )
+        dd.write_minhash_index(idx1, base, mode="append", batch_id="batch1")
         pairs2 = dd.minhash_near_duplicates_against(
-            None, batch2, "text", "doc_id",
-            corpus_index=dd.read_minhash_index(spark, base),
-            batch_index=art2,
-            threshold=_MINHASH_THRESHOLD, **kw,
+            dd.read_minhash_index(spark, base), idx2, "doc_id", _MINHASH_THRESHOLD
         )
     return (
         pairs1.select(F.lit(1).alias("admission"), "id_a", "id_b", "jaccard")
@@ -756,52 +716,35 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     batch1, batch2 = seeded(25, 1000000), seeded(50, 2000000)
     base = _idx_path(sf_dir, nonce=uuid.uuid4().hex[:12])
-    kw = dict(k=_MINHASH_K, n_hashes=_MINHASH_N, bands=_MINHASH_BANDS)
     token = hashlib.sha256(b"b1").hexdigest()[:16]
 
     # r15 (VERDICT r14 #1/#4): the witness re-runs the same derivations
     # many times — batch 1 is appended THREE times (append, crash-retry,
     # replay), batch 2 admitted twice, the corpus built twice — so each
-    # input's per-doc artifacts are derived ONCE, pinned, and threaded
-    # through ``artifacts``/``batch_index``. Phase 1's corpus build and
-    # both batches' artifact materializations are independent actions and
+    # input's index is derived ONCE and pinned. Phase 1's corpus build
+    # and both batches' set materializations are independent actions and
     # run concurrently (guide §2.6); every protocol mutation and every
     # admission stays strictly sequential, so the crash/retry/replay
     # on-disk states are byte-identical to the sequential form.
-    artc, art1, art2 = (
-        dd.index_artifacts(
-            dd.shingle_sets(b, "text", "doc_id", _MINHASH_K), "doc_id",
-            _MINHASH_N, _MINHASH_BANDS,
-        )
-        for b in (corpus, batch1, batch2)
+    idxc, idx1, idx2 = (
+        dd.minhash_index(b, "text", "doc_id", _MINHASH) for b in (corpus, batch1, batch2)
     )
 
     def admit_b2() -> DataFrame:
         return dd.minhash_near_duplicates_against(
-            None, batch2, "text", "doc_id",
-            corpus_index=dd.read_minhash_index(spark, base),
-            batch_index=art2,
-            threshold=_MINHASH_THRESHOLD, **kw,
+            dd.read_minhash_index(spark, base), idx2, "doc_id", _MINHASH_THRESHOLD
         )
 
     def append_b1() -> None:
-        dd.write_minhash_index(
-            None, "text", "doc_id", base, mode="append", batch_id="b1",
-            artifacts=art1, **kw,
-        )
+        dd.write_minhash_index(idx1, base, mode="append", batch_id="b1")
 
-    def overwrite_corpus() -> None:
-        dd.write_minhash_index(
-            None, "text", "doc_id", base, mode="overwrite", artifacts=artc, **kw
-        )
-
-    with pinned(artc[0], art1[0], art2[0]):
+    with pinned(idxc.sets, idx1.sets, idx2.sets):
         # phase 1: append, simulate the mid-promote crash state, retry, admit
-        _run_all_settled(
-            overwrite_corpus,
-            lambda: _materialize_sets(art1[0]),
-            lambda: _materialize_sets(art2[0]),
-        )
+        dd.settle_all([
+            lambda: dd.write_minhash_index(idxc, base),
+            lambda: _materialize_sets(idx1.sets),
+            lambda: _materialize_sets(idx2.sets),
+        ])
         append_b1()
         os.remove(os.path.join(base, "_appends", token))
         promoted = sorted(glob.glob(os.path.join(base, "bands", f"b-{token}-*.parquet")))
@@ -810,7 +753,7 @@ def dedup_index_retry_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs_retry = admit_b2()  # eagerly checkpointed by the operator
 
         # phase 2: overwrite rebuild (must scrub markers), replay batch_id
-        overwrite_corpus()
+        dd.write_minhash_index(idxc, base)
         append_b1()
         pairs_replay = admit_b2()
 

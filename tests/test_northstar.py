@@ -15,6 +15,11 @@ from dbt_ci_demo_spark.operators import similarity as sim
 from dbt_ci_demo_spark.sources.catalog import load_table
 
 
+def _index(docs):
+    """The default-spec MinHash index of a (doc_id, text) frame."""
+    return dd.minhash_index(docs, "text", "doc_id")
+
+
 @pytest.mark.slow  # ~7s recall sweep: round-close tier (the minhash oracle rows
 # value-check the full pipeline every gate run)
 def test_minhash_finds_injected_dups(spark, sf_dir):
@@ -181,7 +186,7 @@ def test_minhash_xxhash64_production_path(spark, sf_dir):
         .collect()
     }
     fast = dd.minhash_near_duplicates(
-        docs, "text", "doc_id", threshold=0.7, hash_fn="xxhash64"
+        docs, "text", "doc_id", dd.MinHashSpec(hash_fn="xxhash64"), threshold=0.7
     )
     found = {(r.id_a, r.id_b): r.jaccard for r in fast.collect()}
     assert injected <= set(found), f"missed {injected - set(found)}"
@@ -197,7 +202,8 @@ def test_minhash_leaves_no_storage_pinned(spark, sf_dir, tmp_path):
     sets, band table and candidate-restricted index sets internally;
     after each call returns, the persisted-RDD set must equal its value
     before the call (the result is reliable-checkpointed, caches
-    unpersisted) — with and without a read-back stored index."""
+    unpersisted) — with an in-memory and with a read-back stored index.
+    Index frames are the caller's storage; these are left unpinned."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
@@ -205,13 +211,13 @@ def test_minhash_leaves_no_storage_pinned(spark, sf_dir, tmp_path):
     before = drain_cleaner(spark)
     full = dd.minhash_near_duplicates(docs, "text", "doc_id", threshold=0.7)
     assert persisted_rdds(spark) == before, "minhash_near_duplicates changed the pinned set"
-    incr = dd.minhash_near_duplicates_against(corpus, batch, "text", "doc_id")
+    incr = dd.minhash_near_duplicates_against(_index(corpus), _index(batch), "doc_id")
     assert persisted_rdds(spark) == before, "minhash_near_duplicates_against changed the pinned set"
     base = str(tmp_path / "idx")
-    dd.write_minhash_index(corpus, "text", "doc_id", base)
+    dd.write_minhash_index(_index(corpus), base)
     assert persisted_rdds(spark) == before, "write_minhash_index changed the pinned set"
     via_index = dd.minhash_near_duplicates_against(
-        None, batch, "text", "doc_id", corpus_index=dd.read_minhash_index(spark, base)
+        dd.read_minhash_index(spark, base), _index(batch), "doc_id"
     )
     assert persisted_rdds(spark) == before, "index admission changed the pinned set"
     # results stay usable after the caches are gone (lineage was truncated)
@@ -258,18 +264,20 @@ def test_minhash_signatures_over_sets_match_reference(spark):
     )
 
     got_md5 = {
-        r[0]: tuple(r[1:]) for r in dd.minhash_signatures(sets, "doc_id", n).collect()
+        r[0]: tuple(r[1:])
+        for r in dd.minhash_signatures(sets, "doc_id", dd.MinHashSpec(n_hashes=n)).collect()
     }
     assert got_md5 == {d: ref_signature(s) for d, s in want_sets.items()}
 
     rows = dd.word_shingles(docs, "text", "doc_id", k).withColumn(
-        "__h", dd._hash32(F.col("shingle"), "xxhash64")
+        "__h", dd._hash32("xxhash64")(F.col("shingle"))
     )
     row_aggregate = rows.groupBy("doc_id").agg(*[
         F.min((F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(dd._MINHASH_PRIME)).alias(f"sig_{i}")
         for i, (a, b) in enumerate(dd._affine_params(n))
     ])
-    got_xx = dd.minhash_signatures(sets, "doc_id", n, "xxhash64")
+    xx = dd.MinHashSpec(n_hashes=n, hash_fn="xxhash64")
+    got_xx = dd.minhash_signatures(sets, "doc_id", xx)
     assert got_xx.columns == row_aggregate.columns
     assert sorted(map(tuple, got_xx.collect())) == sorted(map(tuple, row_aggregate.collect()))
 
@@ -304,11 +312,14 @@ def test_minhash_queries_match_oracle_on_slice(spark, sf_dir, tmp_path):
 
 def test_minhash_lazy_plan_has_no_per_document_aggregate(spark, sf_dir):
     """Signatures are a row projection and the verifier intersects
-    arrays, so the lazy plan's only aggregates are the candidate-pair
-    distinct: no ``sig_*`` min aggregate keyed by document id and no
+    arrays, so the lazy plan of the pipeline's building blocks (index,
+    band self-join, verifier) has only the candidate-pair distinct as
+    an aggregate: no ``sig_*`` min aggregate keyed by document id and no
     ``n_inter`` count."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lazy = dd.minhash_near_duplicates(docs, "text", "doc_id", materialize=False)
+    index = _index(docs)
+    cand = dd.lsh_pairs_from_buckets(index.bands, "doc_id")
+    lazy = dd.set_jaccard_scores(index.sets, "doc_id", cand).filter(F.col("jaccard") >= 0.7)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     aggs = [line for line in plan.splitlines() if "Aggregate" in line]
     assert aggs, plan  # the candidate distinct
@@ -316,34 +327,12 @@ def test_minhash_lazy_plan_has_no_per_document_aggregate(spark, sf_dir):
     assert "n_inter" not in plan
 
 
-@pytest.mark.slow  # ~4s lazy-vs-eager equivalence: round-close tier
-def test_minhash_lazy_mode_composes_without_persist(spark, sf_dir):
-    """materialize=False returns a lazy, persist-free plan with the same
-    pairs as the eager path."""
-    from dbt_ci_demo_spark.queries_northstar import _docs_dup
-
-    docs = _docs_dup(spark, sf_dir).limit(400)
-
-    before = drain_cleaner(spark)
-    lazy = dd.minhash_near_duplicates(
-        docs, "text", "doc_id", threshold=0.7, materialize=False
-    )
-    assert persisted_rdds(spark) - before == set()
-    eager = dd.minhash_near_duplicates(docs, "text", "doc_id", threshold=0.7)
-    assert {tuple(r) for r in lazy.collect()} == {tuple(r) for r in eager.collect()}
-    assert persisted_rdds(spark) - before == set()
-
-
-def test_minhash_bad_hash_fn_rejected(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(10)
+def test_minhash_bad_hash_fn_rejected():
+    """An unknown hash name fails when the spec is built, before any
+    plan exists, and never falls back to md5."""
     with pytest.raises(ValueError, match="hash_fn"):
-        dd.minhash_near_duplicates(docs, "text", "doc_id", hash_fn="sha1").collect()
-    # the banding entry points take hash_fn too and must not fall back to md5
-    sig = dd.minhash_signatures(dd.shingle_sets(docs, "text", "doc_id"), "doc_id")
-    with pytest.raises(ValueError, match="hash_fn"):
-        dd.banded_buckets(sig, "doc_id", hash_fn="sha1")
-    with pytest.raises(ValueError, match="hash_fn"):
-        dd.lsh_candidate_pairs(sig, "doc_id", hash_fn="sha1")
+        dd.MinHashSpec(hash_fn="sha1")
+    assert dd.MinHashSpec(hash_fn="xxhash64").hash_fn == "xxhash64"
 
 
 def test_containment_detects_embedded_doc(spark):
@@ -446,9 +435,9 @@ def test_containment_blind_spot_and_staged_recovery(spark):
 def test_incremental_minhash_index_artifact_roundtrip(spark, sf_dir, tmp_path):
     """The corpus near-dup index is a real storable artifact: build it
     once, write sets+bands to parquet, read them back, and admission
-    via corpus_index must (a) return the exact pairs of the recompute
-    path and (b) never touch the corpus DataFrame at all (corpus=None
-    proves no corpus-side computation happens)."""
+    against the read-back index must (a) return the exact pairs of the
+    recompute path and (b) never touch the corpus DataFrame at all (the
+    admission is handed only the read-back frames)."""
     from dbt_ci_demo_spark.queries_northstar import _docs_dup
 
     docs = _docs_dup(spark, sf_dir).limit(600)
@@ -457,21 +446,20 @@ def test_incremental_minhash_index_artifact_roundtrip(spark, sf_dir, tmp_path):
     direct = {
         tuple(r)
         for r in dd.minhash_near_duplicates_against(
-            corpus, batch, "text", "doc_id"
+            _index(corpus), _index(batch), "doc_id"
         ).collect()
     }
-    sets, bd = dd.index_artifacts(dd.shingle_sets(corpus, "text", "doc_id"), "doc_id")
-    sets.write.mode("overwrite").parquet(str(tmp_path / "sets"))
-    bd.write.mode("overwrite").parquet(str(tmp_path / "bd"))
-    idx = (
+    built = _index(corpus)
+    built.sets.write.mode("overwrite").parquet(str(tmp_path / "sets"))
+    built.bands.write.mode("overwrite").parquet(str(tmp_path / "bd"))
+    idx = dd.MinHashIndex(
         spark.read.parquet(str(tmp_path / "sets")),
         spark.read.parquet(str(tmp_path / "bd")),
+        built.spec,
     )
     via_index = {
         tuple(r)
-        for r in dd.minhash_near_duplicates_against(
-            None, batch, "text", "doc_id", corpus_index=idx
-        ).collect()
+        for r in dd.minhash_near_duplicates_against(idx, _index(batch), "doc_id").collect()
     }
     assert via_index == direct
 
@@ -494,21 +482,17 @@ def test_minhash_index_append_refresh_equals_rebuild(spark, sf_dir, tmp_path):
     batch2 = docs.filter(F.col("doc_id") % 3 == 2)
 
     refreshed_base = str(tmp_path / "idx_refreshed")
-    dd.write_minhash_index(corpus, "text", "doc_id", refreshed_base, mode="overwrite")
-    dd.write_minhash_index(batch1, "text", "doc_id", refreshed_base, mode="append")
+    dd.write_minhash_index(_index(corpus), refreshed_base, mode="overwrite")
+    dd.write_minhash_index(_index(batch1), refreshed_base, mode="append")
 
     rebuilt_base = str(tmp_path / "idx_rebuilt")
-    dd.write_minhash_index(
-        corpus.unionByName(batch1), "text", "doc_id", rebuilt_base, mode="overwrite"
-    )
+    dd.write_minhash_index(_index(corpus.unionByName(batch1)), rebuilt_base, mode="overwrite")
 
     def admit(base: str) -> set:
         return {
             tuple(r)
             for r in dd.minhash_near_duplicates_against(
-                None, batch2, "text", "doc_id",
-                corpus_index=dd.read_minhash_index(spark, base),
-                threshold=0.5,
+                dd.read_minhash_index(spark, base), _index(batch2), "doc_id", threshold=0.5
             ).collect()
         }
 
@@ -517,7 +501,7 @@ def test_minhash_index_append_refresh_equals_rebuild(spark, sf_dir, tmp_path):
     assert via_refresh  # injected dups guarantee matches
 
     with pytest.raises(ValueError, match="mode must be"):
-        dd.write_minhash_index(corpus, "text", "doc_id", refreshed_base, mode="replace")
+        dd.write_minhash_index(_index(corpus), refreshed_base, mode="replace")
 
 
 @pytest.mark.slow  # ~15s: four index writes; failure modes covered nowhere else
@@ -538,13 +522,12 @@ def test_minhash_index_append_idempotent_and_retry_exact(spark, sf_dir, tmp_path
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     base = str(tmp_path / "idx")
-    dd.write_minhash_index(corpus, "text", "doc_id", base, mode="overwrite")
-    dd.write_minhash_index(
-        batch, "text", "doc_id", base, mode="append", batch_id="day-1"
-    )
+    dd.write_minhash_index(_index(corpus), base, mode="overwrite")
+    dd.write_minhash_index(_index(batch), base, mode="append", batch_id="day-1")
 
     def snapshot() -> tuple:
-        sets, bd = dd.read_minhash_index(spark, base)
+        index = dd.read_minhash_index(spark, base)
+        sets, bd = index.sets, index.bands
         return (
             frozenset(_set_row(r) for r in sets.collect()),
             frozenset(tuple(r) for r in bd.collect()),
@@ -557,9 +540,7 @@ def test_minhash_index_append_idempotent_and_retry_exact(spark, sf_dir, tmp_path
     assert clean[2] == clean[3]  # sets: one row per doc
 
     # (a) committed repeat is a no-op
-    dd.write_minhash_index(
-        batch, "text", "doc_id", base, mode="append", batch_id="day-1"
-    )
+    dd.write_minhash_index(_index(batch), base, mode="append", batch_id="day-1")
     assert snapshot() == clean
 
     # (b) mid-promote failure: the marker never landed and only SOME of
@@ -570,9 +551,7 @@ def test_minhash_index_append_idempotent_and_retry_exact(spark, sf_dir, tmp_path
     promoted = _glob.glob(os.path.join(base, "bands", f"b-{token}-*.parquet"))
     assert promoted  # the prefix convention is live
     os.remove(promoted[0])
-    dd.write_minhash_index(
-        batch, "text", "doc_id", base, mode="append", batch_id="day-1"
-    )
+    dd.write_minhash_index(_index(batch), base, mode="append", batch_id="day-1")
     assert snapshot() == clean
 
     # no staging debris in or beside the live dirs
@@ -596,17 +575,15 @@ def test_minhash_index_overwrite_scrubs_markers_and_staging(spark, sf_dir, tmp_p
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     base = str(tmp_path / "idx")
-    dd.write_minhash_index(corpus, "text", "doc_id", base, mode="overwrite")
-    dd.write_minhash_index(
-        batch, "text", "doc_id", base, mode="append", batch_id="day-1"
-    )
+    dd.write_minhash_index(_index(corpus), base, mode="overwrite")
+    dd.write_minhash_index(_index(batch), base, mode="append", batch_id="day-1")
     # stale debris from a hypothetical nameless failed append
     debris = os.path.join(base, "_staging-deadbeefdeadbeef")
     os.makedirs(os.path.join(debris, "bands"))
     with open(os.path.join(debris, "bands", "part-orphan.parquet"), "w") as f:
         f.write("junk")
 
-    dd.write_minhash_index(corpus, "text", "doc_id", base, mode="overwrite")
+    dd.write_minhash_index(_index(corpus), base, mode="overwrite")
     assert not os.path.exists(os.path.join(base, "_appends"))
     assert not _glob.glob(os.path.join(base, "_staging-*"))
 
@@ -616,7 +593,7 @@ def test_minhash_index_overwrite_scrubs_markers_and_staging(spark, sf_dir, tmp_p
         return dd.word_shingles(d, "text", "doc_id").select("doc_id").distinct().count()
 
     def indexed_docs() -> int:
-        sets, _ = dd.read_minhash_index(spark, base)
+        sets = dd.read_minhash_index(spark, base).sets
         n = sets.count()
         assert n == sets.select("doc_id").distinct().count()  # one row per doc
         return n
@@ -625,9 +602,7 @@ def test_minhash_index_overwrite_scrubs_markers_and_staging(spark, sf_dir, tmp_p
     assert indexed_docs() == corpus_docs  # rebuilt index is corpus-only
 
     # the replayed batch_id must actually append against the rebuilt index
-    dd.write_minhash_index(
-        batch, "text", "doc_id", base, mode="append", batch_id="day-1"
-    )
+    dd.write_minhash_index(_index(batch), base, mode="append", batch_id="day-1")
     assert indexed_docs() == corpus_docs + eligible(batch)
 
 
@@ -649,7 +624,7 @@ def test_minhash_index_promote_rename_failure_raises_and_retries(
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     base = str(tmp_path / "idx")
-    dd.write_minhash_index(corpus, "text", "doc_id", base, mode="overwrite")
+    dd.write_minhash_index(_index(corpus), base, mode="overwrite")
 
     real_index_fs = dd._index_fs
 
@@ -672,9 +647,7 @@ def test_minhash_index_promote_rename_failure_raises_and_retries(
 
     monkeypatch.setattr(dd, "_index_fs", broken_index_fs)
     with pytest.raises(IOError, match="promote failed"):
-        dd.write_minhash_index(
-            batch, "text", "doc_id", base, mode="append", batch_id="day-1"
-        )
+        dd.write_minhash_index(_index(batch), base, mode="append", batch_id="day-1")
     monkeypatch.undo()
 
     # marker never committed; the staging dir is the expected leftover
@@ -685,26 +658,57 @@ def test_minhash_index_promote_rename_failure_raises_and_retries(
 
     # retry with the same batch_id: scrubs its staging debris, promotes,
     # commits — row-identical to a clean single append on a fresh base
-    dd.write_minhash_index(
-        batch, "text", "doc_id", base, mode="append", batch_id="day-1"
-    )
+    dd.write_minhash_index(_index(batch), base, mode="append", batch_id="day-1")
     assert not _glob.glob(os.path.join(base, "_staging-*"))
     assert os.path.exists(os.path.join(base, "_appends", _hashlib_sha16("day-1")))
 
     clean_base = str(tmp_path / "idx_clean")
-    dd.write_minhash_index(corpus, "text", "doc_id", clean_base, mode="overwrite")
-    dd.write_minhash_index(
-        batch, "text", "doc_id", clean_base, mode="append", batch_id="day-1"
-    )
+    dd.write_minhash_index(_index(corpus), clean_base, mode="overwrite")
+    dd.write_minhash_index(_index(batch), clean_base, mode="append", batch_id="day-1")
 
     def rows(b: str) -> tuple:
-        sets, bd = dd.read_minhash_index(spark, b)
+        index = dd.read_minhash_index(spark, b)
+        sets, bd = index.sets, index.bands
         return (
             sorted(_set_row(r) for r in sets.collect()),
             sorted(tuple(r) for r in bd.collect()),
         )
 
     assert rows(base) == rows(clean_base)
+
+
+def test_minhash_index_append_rejects_spec_mismatch(spark, sf_dir, tmp_path):
+    """A stored index records the spec it was built with. Appending an
+    xxhash64 batch to an md5 index raises before it stages or scrubs
+    anything, so every stored file stays byte-identical; admitting a
+    batch whose index has another spec raises too. Band keys of two
+    specs never match, so either would silently lose the batch's
+    pairs."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(40)
+    base = str(tmp_path / "idx")
+    dd.write_minhash_index(_index(docs.filter(F.col("doc_id") % 2 == 0)), base)
+    stored = dd.read_minhash_index(spark, base)
+    assert stored.spec == dd.MinHashSpec()
+
+    def tree() -> dict:
+        return {
+            os.path.relpath(os.path.join(d, name), base): (
+                open(os.path.join(d, name), "rb").read() if name in files else None
+            )
+            for d, dirs, files in os.walk(base)
+            for name in dirs + files
+        }
+
+    before = tree()
+    xx = dd.minhash_index(
+        docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id",
+        dd.MinHashSpec(hash_fn="xxhash64"),
+    )
+    with pytest.raises(ValueError, match="band keys do not match"):
+        dd.write_minhash_index(xx, base, mode="append", batch_id="day-1")
+    assert tree() == before
+    with pytest.raises(ValueError, match="band keys do not match"):
+        dd.minhash_near_duplicates_against(stored, xx, "doc_id")
 
 
 def _hashlib_sha16(batch_id: str) -> str:
@@ -732,8 +736,8 @@ def test_admission_restricts_stored_sets_to_candidates(
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     base = str(tmp_path / "idx")
-    dd.write_minhash_index(corpus, "text", "doc_id", base)
-    batch_index = dd.index_artifacts(dd.shingle_sets(batch, "text", "doc_id"), "doc_id")
+    dd.write_minhash_index(_index(corpus), base)
+    batch_index = _index(batch)
 
     seen = {}
     real = dd.set_jaccard_scores
@@ -749,10 +753,7 @@ def test_admission_restricts_stored_sets_to_candidates(
     monkeypatch.setattr(dd, "set_jaccard_scores", spy)
     before = drain_cleaner(spark)
     out = dd.minhash_near_duplicates_against(
-        None, batch, "text", "doc_id",
-        corpus_index=dd.read_minhash_index(spark, base),
-        batch_index=batch_index,
-        threshold=0.5,
+        dd.read_minhash_index(spark, base), batch_index, "doc_id", threshold=0.5
     )
     assert out.count() > 0
     assert seen["set_ids"] == seen["cand_ids"], "stored sets not restricted to candidates"
@@ -843,7 +844,7 @@ def test_incremental_minhash_equals_crossside_subset(spark, sf_dir):
     incr = {
         (r.id_a, r.id_b, r.jaccard)
         for r in dd.minhash_near_duplicates_against(
-            docs, dups, "text", "doc_id", threshold=0.5
+            _index(docs), _index(dups), "doc_id", threshold=0.5
         ).collect()
     }
     assert incr == full

@@ -453,16 +453,17 @@ def test_pack_token_windows_int64_exact_past_double_floor(spark):
 def test_banded_buckets_rejects_non_divisible_bands(spark):
     """r11 review: a bands value that does not divide n_hashes silently
     dropped the trailing signature rows from every band key (weaker LSH
-    with no symptom) — now a loud ValueError."""
+    with no symptom) — now a loud ValueError when the spec is built."""
     import pytest as _pytest
 
     from dbt_ci_demo_spark.operators import dedup as dd
 
+    with _pytest.raises(ValueError, match="divide n_hashes"):
+        dd.MinHashSpec(n_hashes=32, bands=5)
+    with _pytest.raises(ValueError, match="divide n_hashes"):
+        dd.MinHashSpec(n_hashes=32, bands=0)
     sig = spark.createDataFrame(
         [(1, *range(32))], "doc_id int, " + ", ".join(f"sig_{i} int" for i in range(32))
     )
-    with _pytest.raises(ValueError, match="divide n_hashes"):
-        dd.banded_buckets(sig, "doc_id", n_hashes=32, bands=5)
-    with _pytest.raises(ValueError, match="divide n_hashes"):
-        dd.banded_buckets(sig, "doc_id", n_hashes=32, bands=0)
-    assert dd.banded_buckets(sig, "doc_id", n_hashes=32, bands=8).count() == 8
+    band_sql = dd.MinHashSpec(n_hashes=32, bands=8).band_sql
+    assert sig.select(F.explode(F.expr(band_sql))).count() == 8

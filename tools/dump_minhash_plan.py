@@ -10,29 +10,22 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dbt_ci_demo_spark.operators import dedup as dd
-from dbt_ci_demo_spark.session import get_spark
-from dbt_ci_demo_spark.queries_northstar import (
-    _MINHASH_BANDS,
-    _MINHASH_K,
-    _MINHASH_N,
-    _docs_dup,
-)
+from dbt_ci_demo_spark.queries_northstar import _MINHASH, _docs_dup
+from dbt_ci_demo_spark.session import get_spark, pinned
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("dump-minhash-plan")
-    docs = _docs_dup(spark, sf_dir)
-    sets = dd.shingle_sets(docs, "text", "doc_id", _MINHASH_K).persist()
-    sig = dd.minhash_signatures(sets, "doc_id", _MINHASH_N, "md5")
-    banded = dd.banded_buckets(sig, "doc_id", _MINHASH_N, _MINHASH_BANDS, "md5").persist()
-    cand = dd.lsh_pairs_from_buckets(banded, "doc_id")
-    print("---- candidate pairs (the band self-join) ----")
-    print(
-        cand._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    index = dd.minhash_index(_docs_dup(spark, sf_dir), "text", "doc_id", _MINHASH)
+    with pinned(index.sets, index.bands):
+        cand = dd.lsh_pairs_from_buckets(index.bands, "doc_id")
+        print("---- candidate pairs (the band self-join) ----")
+        print(
+            cand._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            )
         )
-    )
 
 
 if __name__ == "__main__":
